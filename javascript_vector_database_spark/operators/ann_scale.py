@@ -331,50 +331,6 @@ def knn_batch_ivf(
     )
 
 
-def ivf_radius_batch(
-    assigned: DataFrame,
-    queries: list[tuple[int, list[float], float]],
-    cents: list[tuple[int, list[float]]],
-    cell_radii: dict[int, float],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Batch RADIUS search: every (query, corpus row) pair within that
-    query's radius — the multi-query sibling of ivf_radius_search, same
-    knn_batch_ivf fan-out discipline.  ``queries`` is
-    [(query_id, qvec, radius)].
-
-    The per-query probe set is computed driver-side from |Q| x K
-    centroid distances (bounded), with each query's triangle bound
-    (radius + 5e-7 rounding slack + the cell's covering radius) deciding
-    which cells it must read — LOSSLESS per query, exactly like the
-    single-query operator.  Probes ship as a broadcast
-    (query_id, ivf_cell, qvec, radius) table and candidates come from
-    an EQUI-join on ivf_cell: the corpus never fans out by |Q|, each
-    row joins only the queries whose bound reaches its cell.  No window
-    needed (radius output is unbounded-cardinality by design, not
-    top-k).  Output: (query_id, id, distance <= radius)."""
-    probe_rows = [
-        (int(qid), cid, [float(x) for x in qv], float(radius))
-        for qid, qv, radius in queries
-        for cid in ivf_radius_probe_cells(cents, qv, radius, cell_radii)
-    ]
-    probes = assigned.sparkSession.createDataFrame(
-        probe_rows,
-        schema="query_id long, ivf_cell long, qvec array<double>,"
-        " radius double",
-    )
-    return (
-        assigned.join(F.broadcast(probes), "ivf_cell")
-        .withColumn(
-            "distance",
-            F.round(euclidean_distance(F.col(vec_col), F.col("qvec")), 6),
-        )
-        .where(F.col("distance") <= F.col("radius"))
-        .select("query_id", id_col, "distance")
-    )
-
-
 def hyperplanes(dim: int, bits: int = LSH_BITS, seed: int = LSH_SEED) -> list[list[float]]:
     return make_pivots(dim, n=bits, seed=seed)
 
@@ -769,12 +725,11 @@ def ivf_radius_search(
 
 
 def ivf_radius_narrow_table(
-    assigned_or_emb: DataFrame,
+    emb: DataFrame,
     query_vecs: list[tuple[int, list[float]]],
     cents: list[tuple[int, list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    assigned: bool = False,
 ) -> DataFrame:
     """ONE scan that derives every number a radius query needs from the
     wide corpus: per row the ivf cell, the distance to its own centroid
@@ -785,11 +740,7 @@ def ivf_radius_narrow_table(
     vector column once per consumer (guide §1.2/§2.3: the registered
     radius row previously paid the 384-element fold 3·K+2 times per
     row across its sequential passes; this pays K+|Q| once).
-
-    ``assigned=True`` means the input already carries ``ivf_cell`` (the
-    stored ``partitionBy(ivf_cell)`` layout) and only the cdist
-    when-cascade (one fold per row) plus the query distances are
-    computed.  Output: (id, ivf_cell, cdist, __qd<i> per query)."""
+    Output: (id, ivf_cell, cdist, __qd<i> per query)."""
     from javascript_vector_database_spark.functions.vector import (
         euclidean_distance,
     )
@@ -800,24 +751,11 @@ def ivf_radius_narrow_table(
         ).alias(f"__qd{i}")
         for i, (_qid, qv) in enumerate(query_vecs)
     ]
-    if assigned:
-        cent_map = {int(cid): cemb for cid, cemb in cents}
-        chain = None
-        for cid, cemb in cent_map.items():
-            expr = euclidean_distance(F.col(vec_col), _qvec_lit(cemb))
-            chain = (
-                F.when(F.col("ivf_cell") == cid, expr)
-                if chain is None
-                else chain.when(F.col("ivf_cell") == cid, expr)
-            )
-        narrow = assigned_or_emb.select(
-            F.col(id_col), F.col("ivf_cell"), chain.alias("cdist"), *qd_cols
-        )
-    else:
-        narrow = ivf_assign_dist(
-            assigned_or_emb, id_col, vec_col, cents=cents
-        ).select(F.col(id_col), "ivf_cell", "cdist", *qd_cols)
-    return narrow.localCheckpoint(eager=True)
+    return (
+        ivf_assign_dist(emb, id_col, vec_col, cents=cents)
+        .select(F.col(id_col), "ivf_cell", "cdist", *qd_cols)
+        .localCheckpoint(eager=True)
+    )
 
 
 def radius_from_narrow(
@@ -825,13 +763,19 @@ def radius_from_narrow(
 ) -> float:
     """The data-derived radius (nn-th exact-NN rounded distance) off the
     narrow table — the same value _nn_radius derives with a full corpus
-    fold, for a bounded top-nn over one double column."""
+    fold, for a bounded top-nn over one double column.  An empty narrow
+    table has no nn-th neighbor: that raises a named ValueError."""
     rows = (
         narrow.select(qd_col, id_col)
         .orderBy(F.col(qd_col).asc(), F.col(id_col).asc())
         .limit(nn)
         .collect()
     )
+    if not rows:
+        raise ValueError(
+            f"radius_from_narrow: the narrow table is empty, so {qd_col}"
+            f" has no nearest neighbor to derive a radius from"
+        )
     return max(float(r[qd_col]) for r in rows)
 
 
@@ -846,35 +790,7 @@ def cell_radii_from_narrow(narrow: DataFrame) -> dict[int, float]:
     return {int(r["ivf_cell"]): float(r["radius"]) for r in rows}
 
 
-def ivf_radius_search_fused(
-    emb: DataFrame,
-    query_vec: list[float],
-    cents: list[tuple[int, list[float]]],
-    nn: int,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Single-query radius search where assignment, covering radii, the
-    data-derived radius, and the final band filter all come from ONE
-    corpus scan (ivf_radius_narrow_table).  Result rows are identical
-    to ivf_radius_search over the same inputs: the cell pruning is the
-    same lossless triangle bound and the emitted distance is the same
-    rounded fold."""
-    narrow = ivf_radius_narrow_table(
-        emb, [(0, query_vec)], cents, id_col, vec_col
-    )
-    radii = cell_radii_from_narrow(narrow)
-    radius = radius_from_narrow(narrow, "__qd0", nn, id_col)
-    probe = ivf_radius_probe_cells(cents, query_vec, radius, radii)
-    return (
-        narrow.where(F.col("ivf_cell").isin(probe))
-        .where(F.col("__qd0") <= radius)
-        .select(id_col, F.col("__qd0").alias("distance"))
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-    )
-
-
-def ivf_radius_batch_fused(
+def ivf_radius_fused(
     emb: DataFrame,
     queries: list[tuple[int, list[float]]],
     cents: list[tuple[int, list[float]]],
@@ -882,13 +798,21 @@ def ivf_radius_batch_fused(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Batch radius search off one narrow scan: each query's radius is
-    its nn-th exact-NN distance (same derivation the single-query row
-    uses), the per-query probe sets are the same driver-side triangle
-    bounds, and the final emission explodes the per-query rounded
-    distances already sitting in the narrow table — the corpus is
-    never re-folded per query.  Output: (query_id, id, distance),
-    exactly ivf_radius_batch's rows."""
+    """Radius search for one or many queries off ONE corpus scan
+    (ivf_radius_narrow_table): assignment, covering radii, each query's
+    radius (its nn-th exact-NN distance) and the final band filter all
+    read the narrow table, so the corpus is never re-folded per query.
+    Per query, the rows equal ivf_radius_search over the same radius:
+    the probe set is the same lossless driver-side triangle bound and
+    the emitted distance is the same rounded fold.  ``queries`` is
+    [(query_id, qvec)]; an empty list gives an empty frame.  Output:
+    (query_id, id, distance <= that query's radius)."""
+    if not queries:
+        return emb.select(
+            F.lit(None).cast("long").alias("query_id"),
+            F.col(id_col),
+            F.lit(None).cast("double").alias("distance"),
+        ).limit(0)
     narrow = ivf_radius_narrow_table(emb, queries, cents, id_col, vec_col)
     radii = cell_radii_from_narrow(narrow)
     sel = None

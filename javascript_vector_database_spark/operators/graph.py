@@ -9,8 +9,10 @@ unverifiable against any oracle.  This implementation keeps every rank an
 exact BIGINT:
 
 * initial rank = RANK_SCALE (10^12) per node;
-* a node's contribution = rank DIV outdeg (integer floor division —
-  identical on any engine, no rounding mode to disagree on);
+* a node's contribution along an edge = (rank * w) DIV strength, the
+  sum of its out-edge weights (integer floor division — identical on
+  any engine, no rounding mode to disagree on; w = 1 gives rank DIV
+  outdeg);
 * damping is applied in integer space: new = (15 * RANK_SCALE) DIV 100 +
   (85 * sum(contribs)) DIV 100.
 
@@ -23,9 +25,10 @@ deterministic leak that replaces the nondeterministic float residue.
 
 Scale shape: each round is one equi-join (rank onto the edge list's src)
 plus one groupBy(dst) sum with map-side partials — the standard Pregel
-round as two DataFrame ops.  The edge list is built ONCE and cached by
-the caller; rounds is a small fixed constant, so the lineage stays
-shallow (no checkpoint needed, unlike the until-fixpoint CC loops).
+round as two DataFrame ops.  The operator pins the edge list joined to
+its out-strengths ONCE; rounds is a small fixed constant, so the rank
+lineage stays shallow (no per-round checkpoint, unlike the
+until-fixpoint CC loops).
 """
 
 from __future__ import annotations
@@ -49,58 +52,132 @@ def symmetric_edges(pairs: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     ).distinct()
 
 
-def pagerank(edges: DataFrame, rounds: int = PAGERANK_ROUNDS) -> DataFrame:
-    """(node, pagerank) after ``rounds`` integer-exact power iterations.
+def pagerank(
+    edges: DataFrame,
+    seeds: DataFrame | None = None,
+    rounds: int = PAGERANK_ROUNDS,
+) -> DataFrame:
+    """(node, rank) after ``rounds`` integer-exact power iterations.
 
-    ``edges`` must be the SYMMETRIC distinct edge list (every node then
-    has outdeg >= 1, so there is no dangling-mass term to model).  Ranks
-    are BIGINT fixed-point at RANK_SCALE; see module docstring."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("outdeg"))
-    ranks = deg.select(
-        F.col("src").alias("node"), F.lit(RANK_SCALE).cast("long").alias("rank")
-    )
-    withdeg = edges.join(deg, "src")
+    ``edges`` is the SYMMETRIC edge list carrying a positive BIGINT
+    ``w`` (unweighted graphs pass w = 1).  A node's contribution along an
+    edge is ``(rank * w) DIV strength``, strength = the sum of its
+    out-edge weights — the column-stochastic split, with integer floor
+    division in place of the float ratio.  Every node of a symmetric
+    list has strength >= 1, so there is no dangling-mass term.  Bounds:
+    rank * w peaks at RANK_SCALE * max_w, int64-safe while max_w < ~9e6.
+
+    ``seeds`` (one ``node`` column) makes it PERSONALIZED PageRank: only
+    the seeds start with mass and teleport mass returns only to them, so
+    ranks measure affinity TO the seeds.  Non-seed nodes enter the rank
+    relation only when mass reaches them (the seeds' r-hop
+    neighborhood, not the graph), and rows whose rank floors to 0 are
+    dropped each round.  Without seeds every node starts at RANK_SCALE
+    and receives the teleport mass — the seeded recurrence with every
+    node a seed, minus the full join against the seed set.
+
+    The operator pins (edges ⋈ strength) once: every round re-reads it.
+    The strength rides the edge rows as a window sum over src, so the
+    edge list is read and shuffled once for it — measured faster than a
+    grouped sum joined back on all three PageRank rows (sf0.1, 4 cores).
+    Each round is then one hinted shuffled-hash join of the node-sized
+    rank table onto the edge list plus one map-side-combined sum."""
+    from pyspark.sql.window import Window
+
+    withs = edges.withColumn(
+        "s", F.sum("w").over(Window.partitionBy("src")).cast("long")
+    ).localCheckpoint(eager=True)
+    if seeds is None:
+        start = withs.select(F.col("src").alias("node")).distinct()
+    else:
+        start = seeds.select("node").distinct().localCheckpoint(eager=True)
+    ranks = start.select("node", F.lit(RANK_SCALE).cast("long").alias("rank"))
     for _ in range(rounds):
-        contrib = withdeg.join(
-            ranks.withColumnRenamed("node", "src").hint("shuffle_hash"),
-            "src",
-        ).select("dst", F.expr("rank DIV outdeg").alias("c"))
-        ranks = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(BASE_MASS).cast("long")
-                + F.expr(f"({DAMP_NUM} * sum(c)) DIV {DAMP_DEN}")
-            ).alias("rank")
+        summed = (
+            withs.join(
+                ranks.withColumnRenamed("node", "src").hint("shuffle_hash"),
+                "src",
+            )
+            .groupBy(F.col("dst").alias("node"))
+            .agg(F.sum(F.expr("(rank * w) DIV s")).alias("c"))
         )
+        if seeds is None:
+            ranks = summed.select(
+                "node",
+                F.expr(f"{BASE_MASS} + ({DAMP_NUM} * c) DIV {DAMP_DEN}")
+                .cast("long")
+                .alias("rank"),
+            )
+        else:
+            ranks = (
+                start.select("node", F.lit(BASE_MASS).alias("__t"))
+                .join(summed, "node", "full")
+                .select(
+                    "node",
+                    F.expr(
+                        f"coalesce(__t, 0)"
+                        f" + ({DAMP_NUM} * coalesce(c, 0)) DIV {DAMP_DEN}"
+                    ).cast("long").alias("rank"),
+                )
+                .where(F.col("rank") > 0)
+            )
     return ranks
 
 
 def sql_pagerank(
-    edges_cte: str, rounds: int = PAGERANK_ROUNDS
+    edges_cte: str,
+    seeds_cte: str | None = None,
+    rounds: int = PAGERANK_ROUNDS,
 ) -> str:
-    """DuckDB oracle: the same integer iteration unrolled as CTE levels.
-    ``edges_cte`` must select (src, dst) — already symmetric+distinct.
-    DuckDB's ``//`` on BIGINTs is the same floor division as Spark's
-    ``DIV``."""
-    sql = [f"WITH edges AS ({edges_cte}),"]
+    """DuckDB oracle for :func:`pagerank`: the identical integer
+    iteration unrolled as CTE levels.  ``edges_cte`` selects the
+    symmetric (src, dst, w) list; ``seeds_cte``, when given, selects one
+    ``node`` column.  DuckDB's ``//`` on BIGINTs is the same floor
+    division as Spark's ``DIV``.  MATERIALIZED throughout: every level
+    is multiply referenced."""
+    sql = [f"WITH edges AS MATERIALIZED ({edges_cte}),"]
     sql.append(
-        "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg"
+        "deg AS MATERIALIZED (SELECT src, CAST(sum(w) AS BIGINT) AS s"
         " FROM edges GROUP BY src),"
     )
+    if seeds_cte is None:
+        start = "SELECT src AS node FROM deg"
+    else:
+        sql.append(
+            f"seeds AS MATERIALIZED (SELECT DISTINCT node FROM ({seeds_cte})),"
+        )
+        start = "SELECT node FROM seeds"
     sql.append(
-        f"r0 AS (SELECT src AS node, CAST({RANK_SCALE} AS BIGINT) AS rank"
-        " FROM deg),"
+        f"r0 AS MATERIALIZED (SELECT node, CAST({RANK_SCALE} AS BIGINT)"
+        f" AS rank FROM ({start})),"
     )
     for i in range(rounds):
         sql.append(
-            f"r{i + 1} AS (SELECT e.dst AS node, "
-            f"CAST({BASE_MASS} + ({DAMP_NUM} * sum(r.rank // d.outdeg))"
-            f" // {DAMP_DEN} AS BIGINT) AS rank "
-            f"FROM edges e JOIN r{i} r ON r.node = e.src "
-            "JOIN deg d ON d.src = e.src "
-            "GROUP BY e.dst),"
+            f"c{i} AS MATERIALIZED (SELECT e.dst AS node,"
+            f" sum((r.rank * e.w) // d.s) AS c"
+            f" FROM edges e JOIN r{i} r ON r.node = e.src"
+            " JOIN deg d ON d.src = e.src GROUP BY 1),"
         )
+        if seeds_cte is None:
+            sql.append(
+                f"r{i + 1} AS MATERIALIZED (SELECT node, CAST({BASE_MASS}"
+                f" + ({DAMP_NUM} * c) // {DAMP_DEN} AS BIGINT) AS rank"
+                f" FROM c{i}),"
+            )
+        else:
+            sql.append(
+                f"""r{i + 1} AS MATERIALIZED (
+  SELECT * FROM (
+    SELECT coalesce(s.node, c.node) AS node,
+           CAST((CASE WHEN s.node IS NOT NULL THEN {BASE_MASS} ELSE 0 END)
+                + ({DAMP_NUM} * coalesce(c.c, 0)) // {DAMP_DEN} AS BIGINT)
+             AS rank
+    FROM seeds s FULL JOIN c{i} c ON c.node = s.node
+  ) WHERE rank > 0
+),"""
+            )
     body = "\n".join(sql).rstrip(",")
-    return f"{body}\nSELECT node, rank AS pagerank FROM r{rounds}"
+    return f"{body}\nSELECT node, rank FROM r{rounds}"
 
 
 # ---------------------------------------------------------------------------
@@ -540,91 +617,6 @@ adj{i + 1} AS (
     )
 
 
-def personalized_pagerank(
-    edges: DataFrame, seeds: DataFrame, rounds: int = PAGERANK_ROUNDS
-) -> DataFrame:
-    """Personalized PageRank: teleport mass returns ONLY to the seed set
-    (``seeds``: one ``node`` column), so ranks measure affinity TO the
-    seeds — the "more like these" recommendation primitive.  Same
-    integer fixed-point discipline as :func:`pagerank` (BIGINT ranks,
-    DIV floor, no float sum anywhere); non-seed nodes start at 0 and
-    only enter the frontier when mass reaches them, so the rank relation
-    grows with the seeds' r-hop neighborhood, not the graph (the
-    locality that makes PPR cheap on huge graphs).  Rows whose rank
-    floors to 0 are dropped each round — bounds the relation and is
-    mirrored in the oracle."""
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).cast("long").alias("outdeg"))
-    seed_nodes = seeds.select("node").distinct().localCheckpoint(eager=True)
-    ranks = seed_nodes.select(
-        "node", F.lit(RANK_SCALE).cast("long").alias("rank")
-    )
-    # every round re-reads (edges ⋈ outdeg) — materialize it once
-    withdeg = edges.join(deg, "src").localCheckpoint(eager=True)
-    is_seed = F.col("__s").isNotNull()
-    for _ in range(rounds):
-        contrib = withdeg.join(
-            ranks.withColumnRenamed("node", "src").hint("shuffle_hash"),
-            "src",
-        ).select("dst", F.expr("rank DIV outdeg").alias("c"))
-        summed = contrib.groupBy(F.col("dst").alias("node")).agg(
-            F.sum("c").alias("s")
-        )
-        ranks = (
-            seed_nodes.select(F.col("node"), F.lit(1).alias("__s"))
-            .join(summed, "node", "full")
-            .select(
-                "node",
-                (
-                    F.when(is_seed, F.lit(BASE_MASS)).otherwise(F.lit(0))
-                    + F.expr(
-                        f"({DAMP_NUM} * coalesce(s, 0)) DIV {DAMP_DEN}"
-                    )
-                )
-                .cast("long")
-                .alias("rank"),
-            )
-            .where(F.col("rank") > 0)
-        )
-    return ranks
-
-
-def sql_personalized_pagerank(
-    edges_cte: str, seeds_cte: str, rounds: int = PAGERANK_ROUNDS
-) -> str:
-    """DuckDB oracle for :func:`personalized_pagerank`: the identical
-    integer iteration unrolled as CTE levels.  ``seeds_cte`` must select
-    one ``node`` column (deduplicated)."""
-    sql = [f"WITH edges AS ({edges_cte}),"]
-    sql.append(f"seeds AS (SELECT DISTINCT node FROM ({seeds_cte})),")
-    sql.append(
-        "deg AS (SELECT src, CAST(count(*) AS BIGINT) AS outdeg"
-        " FROM edges GROUP BY src),"
-    )
-    sql.append(
-        f"r0 AS (SELECT node, CAST({RANK_SCALE} AS BIGINT) AS rank"
-        " FROM seeds),"
-    )
-    for i in range(rounds):
-        sql.append(
-            f"""c{i} AS (
-  SELECT e.dst AS node, sum(r.rank // d.outdeg) AS s
-  FROM edges e JOIN r{i} r ON r.node = e.src JOIN deg d ON d.src = e.src
-  GROUP BY 1
-),
-r{i + 1} AS (
-  SELECT * FROM (
-    SELECT coalesce(s.node, c.node) AS node,
-           CAST((CASE WHEN s.node IS NOT NULL THEN {BASE_MASS} ELSE 0 END)
-                + ({DAMP_NUM} * coalesce(c.s, 0)) // {DAMP_DEN} AS BIGINT)
-             AS rank
-    FROM seeds s FULL JOIN c{i} c ON c.node = s.node
-  ) WHERE rank > 0
-),"""
-        )
-    body = "\n".join(sql).rstrip(",")
-    return f"{body}\nSELECT node, rank FROM r{rounds}"
-
-
 # ---------------------------------------------------------------------------
 # label propagation (community detection)
 # ---------------------------------------------------------------------------
@@ -803,8 +795,7 @@ def hits(edges: DataFrame, rounds: int = HITS_ROUNDS) -> DataFrame:
     is a shuffle-order-proof aggregate.  Per round: authority(dst) =
     renorm(sum of hub over in-edges), then hub(src) = renorm(sum of
     authority over out-edges) — two equi-join + groupBy Pregel halves,
-    map-side partials, no window.  The scalar max rides a 1-row
-    broadcast crossJoin (never a driver collect).
+    map-side partials, no window.
 
     Returns the FINAL authority side (the interesting ranking on a
     bipartite purchase graph); n_in (in-degree) rides along for
@@ -960,71 +951,3 @@ def jaccard_neighbor_pairs(
             ).cast("long").alias("jaccard_micro"),
         )
     )
-
-
-# ---------------------------------------------------------------------------
-# weighted PageRank (edge-strength-proportional contributions)
-# ---------------------------------------------------------------------------
-
-
-def pagerank_weighted(
-    edges: DataFrame, rounds: int = PAGERANK_ROUNDS
-) -> DataFrame:
-    """(node, rank) after ``rounds`` integer-exact WEIGHTED power
-    iterations: a node's contribution along an edge is
-    ``(rank * w) DIV strength`` where strength = sum of its out-edge
-    weights — the standard weighted-PageRank column-stochastic split
-    with the same BIGINT fixed-point discipline as :func:`pagerank`
-    (integer floor division replaces the float ratio, so the result is
-    shuffle-order-proof and oracle-exact).  ``edges`` must be the
-    SYMMETRIC edge list carrying a positive BIGINT ``w``; real graphs
-    are weighted (co-occurrence counts, interaction strengths), and the
-    unweighted row is the w == 1 special case.  Bounds: rank*w peaks at
-    RANK_SCALE * max_w — int64-safe while max_w < ~9e6 at the 10^12
-    scale; per-round shape is the identical join + map-side-combined
-    sum as the unweighted Pregel round."""
-    strength = edges.groupBy("src").agg(F.sum("w").cast("long").alias("s"))
-    ranks = strength.select(
-        F.col("src").alias("node"), F.lit(RANK_SCALE).cast("long").alias("rank")
-    )
-    withs = edges.join(strength, "src")
-    for _ in range(rounds):
-        contrib = withs.join(
-            ranks.withColumnRenamed("node", "src").hint("shuffle_hash"),
-            "src",
-        ).select("dst", F.expr("(rank * w) DIV s").alias("c"))
-        ranks = contrib.groupBy(F.col("dst").alias("node")).agg(
-            (
-                F.lit(BASE_MASS).cast("long")
-                + F.expr(f"({DAMP_NUM} * sum(c)) DIV {DAMP_DEN}")
-            ).alias("rank")
-        )
-    return ranks
-
-
-def sql_pagerank_weighted(
-    edges_cte: str, rounds: int = PAGERANK_ROUNDS
-) -> str:
-    """DuckDB oracle for :func:`pagerank_weighted`: identical unrolled
-    iteration; ``edges_cte`` must select symmetric (src, dst, w).
-    MATERIALIZED throughout (the multiply-referenced-CTE lesson)."""
-    sql = [f"WITH edges AS MATERIALIZED ({edges_cte}),"]
-    sql.append(
-        "deg AS MATERIALIZED (SELECT src, CAST(sum(w) AS BIGINT) AS s"
-        " FROM edges GROUP BY src),"
-    )
-    sql.append(
-        f"r0 AS MATERIALIZED (SELECT src AS node,"
-        f" CAST({RANK_SCALE} AS BIGINT) AS rank FROM deg),"
-    )
-    for i in range(rounds):
-        sql.append(
-            f"r{i + 1} AS MATERIALIZED (SELECT e.dst AS node, "
-            f"CAST({BASE_MASS} + ({DAMP_NUM} * sum((r.rank * e.w) // d.s))"
-            f" // {DAMP_DEN} AS BIGINT) AS rank "
-            f"FROM edges e JOIN r{i} r ON r.node = e.src "
-            "JOIN deg d ON d.src = e.src "
-            "GROUP BY e.dst),"
-        )
-    body = "\n".join(sql).rstrip(",")
-    return f"{body}\nSELECT node, rank AS pagerank FROM r{rounds}"

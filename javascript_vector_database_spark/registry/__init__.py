@@ -109,9 +109,8 @@ _PRIORITY = [
     #      knn_ann_similarity_indexed — the reference's SECOND search
     #        mode (vectorSearchIndexSimilarity, src/search.ts:56-109)
     #        probed against its STORED five-table sorted index;
-    #      ann_ivf_radius_batch — batch radius search, one broadcast
-    #        (query_id, cell, qvec, radius) probe table joined once on
-    #        ivf_cell (the radius sibling of ann_ivf_batch_search);
+    #      ann_ivf_radius_batch — batch radius search off one narrow
+    #        corpus scan (the radius sibling of ann_ivf_batch_search);
     #      stream_radius_index_live — partitionBy(ivf_cell) table under
     #        the NASTY CDC schedule with per-cell covering radii
     #        maintained INCREMENTALLY (update_cell_radii); the hash

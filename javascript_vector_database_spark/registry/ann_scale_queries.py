@@ -374,15 +374,17 @@ def ann_ivf_radius_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     low-dim pin, tests/test_r11_wave.py).
 
     r14: assignment, covering radii, the data-derived radius, and the
-    band filter all come from ONE corpus scan
-    (ann_scale.ivf_radius_search_fused) — the old shape re-folded the
-    vector column in four sequential passes (radii when-cascade, the
-    exact-NN radius scan, the final assignment+distance scan)."""
+    band filter all come from ONE corpus scan (ann_scale.ivf_radius_fused
+    with this one query) — the old shape re-folded the vector column in
+    four sequential passes (radii when-cascade, the exact-NN radius
+    scan, the final assignment+distance scan)."""
     qv = get_query_vec(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     cents = ann_scale.collect_centroids(emb)
-    return ann_scale.ivf_radius_search_fused(
-        emb, qv, cents, RADIUS_NN
+    return (
+        ann_scale.ivf_radius_fused(emb, [(0, qv)], cents, RADIUS_NN)
+        .select("vec_id", "distance")
+        .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
     )
 
 
@@ -461,10 +463,10 @@ WHERE d.distance <= rad.radius
 def ann_ivf_radius_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch radius search — every vector within each
     query's own radius (the 20th exact-NN distance per query,
-    data-derived on both engines).  Per-query triangle-bound probe sets
-    ship as ONE broadcast (query_id, cell, qvec, radius) table and the
-    corpus is joined once on ivf_cell (operators/ann_scale.py:
-    ivf_radius_batch) — the radius sibling of ann_ivf_batch_search."""
+    data-derived on both engines).  One narrow corpus scan feeds the
+    covering radii, every per-query radius and triangle-bound probe set,
+    and the per-query band emission (operators/ann_scale.py:
+    ivf_radius_fused) — the radius sibling of ann_ivf_batch_search."""
     emb = load_table(spark, sf_dir, "embeddings")
     cents = ann_scale.collect_centroids(emb)
     q_rows = (
@@ -476,13 +478,7 @@ def ann_ivf_radius_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         (int(r["vec_id"]), [float(x) for x in r["embedding"]])
         for r in q_rows
     ]
-    # r14: one narrow corpus scan feeds the radii, every per-query
-    # radius derivation, and the final per-query band emission
-    # (ann_scale.ivf_radius_batch_fused) — the old shape ran one
-    # exact-NN scan PER query plus a radii scan plus the final join.
-    return ann_scale.ivf_radius_batch_fused(
-        emb, queries, cents, RADIUS_NN
-    )
+    return ann_scale.ivf_radius_fused(emb, queries, cents, RADIUS_NN)
 
 
 def stream_radius_index_live(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -933,19 +933,17 @@ _PPR_BRAND = "Brand#1"
 
 
 def _ppr_oracle() -> str:
-    from javascript_vector_database_spark.operators.graph import (
-        sql_personalized_pagerank,
-    )
+    from javascript_vector_database_spark.operators.graph import sql_pagerank
 
     edges_cte = f"""
   WITH {_COPURCHASE_PAIRS.strip()}
-  SELECT src, dst FROM pairs
-  UNION ALL SELECT dst AS src, src AS dst FROM pairs
+  SELECT src, dst, CAST(1 AS BIGINT) AS w FROM pairs
+  UNION ALL SELECT dst AS src, src AS dst, CAST(1 AS BIGINT) AS w FROM pairs
 """
     seeds_cte = (
         f"SELECT p_partkey AS node FROM part WHERE p_brand = '{_PPR_BRAND}'"
     )
-    inner = sql_personalized_pagerank(edges_cte, seeds_cte)
+    inner = sql_pagerank(edges_cte, seeds_cte)
     return f"""
 SELECT node, rank AS ppr_rank FROM ({inner})
 ORDER BY rank DESC, node ASC LIMIT 50
@@ -958,21 +956,22 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph with teleport mass pinned to one brand's parts — the
     recommendation-affinity primitive.  Same BIGINT fixed-point
     discipline as `graph_pagerank_copurchase` (operators/graph.py:
-    personalized_pagerank) so the oracle's unrolled CTEs match exactly;
-    non-seed ranks grow only within the seeds' 3-hop neighborhood, the
-    locality that makes PPR cheap at graph scale."""
-    from javascript_vector_database_spark.operators.graph import (
-        personalized_pagerank,
-    )
+    pagerank with w = 1 and the brand's parts as ``seeds``) so the
+    oracle's unrolled CTEs match exactly; non-seed ranks grow only
+    within the seeds' 3-hop neighborhood, the locality that makes PPR
+    cheap at graph scale."""
+    from javascript_vector_database_spark.operators.graph import pagerank
 
-    edges = symmetric_copurchase_edges(spark, sf_dir)
+    edges = symmetric_copurchase_edges(spark, sf_dir).withColumn(
+        "w", F.lit(1).cast("long")
+    )
     seeds = (
         load_table(spark, sf_dir, "part")
         .where(F.col("p_brand") == _PPR_BRAND)
         .select(F.col("p_partkey").alias("node"))
     )
     return (
-        personalized_pagerank(edges, seeds)
+        pagerank(edges, seeds)
         .select("node", F.col("rank").alias("ppr_rank"))
         .orderBy(F.col("ppr_rank").desc(), F.col("node").asc())
         .limit(50)
@@ -2247,9 +2246,7 @@ def graph_lpa_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _weighted_pagerank_oracle() -> str:
-    from javascript_vector_database_spark.operators.graph import (
-        sql_pagerank_weighted,
-    )
+    from javascript_vector_database_spark.operators.graph import sql_pagerank
 
     edges = """WITH p AS (
   SELECT a.l_partkey AS src, b.l_partkey AS dst,
@@ -2259,9 +2256,9 @@ def _weighted_pagerank_oracle() -> str:
   GROUP BY 1, 2)
 SELECT src, dst, w FROM p
 UNION ALL SELECT dst AS src, src AS dst, w FROM p"""
-    inner = sql_pagerank_weighted(edges)
+    inner = sql_pagerank(edges)
     return (
-        f"SELECT * FROM ({inner})\n"
+        f"SELECT node, rank AS pagerank FROM ({inner})\n"
         "ORDER BY pagerank DESC, node ASC LIMIT 50"
     )
 
@@ -2271,16 +2268,14 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 parts by WEIGHTED PageRank: contributions proportional to
     co-occurrence strength ((rank * w) DIV strength — the
     column-stochastic weighted split, integer-exact end to end;
-    operators/graph.py:pagerank_weighted).  Real graphs are weighted,
+    operators/graph.py:pagerank).  Real graphs are weighted,
     and frequency-weighted centrality separates habitual pairings from
     one-off basket noise — the unweighted `graph_pagerank_copurchase`
     is the w == 1 special case of this row.  The weighted pair list is
     built once (the same single self-join + groupBy every co-purchase
-    row pays), symmetrized without a dedup shuffle, and cached across
-    the 3 Pregel rounds."""
-    from javascript_vector_database_spark.operators.graph import (
-        pagerank_weighted,
-    )
+    row pays) and symmetrized without a dedup shuffle; the operator
+    pins it once for all 3 Pregel rounds."""
+    from javascript_vector_database_spark.operators.graph import pagerank
 
     li = load_table(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_partkey"
@@ -2297,17 +2292,11 @@ def graph_pagerank_weighted(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).cast("long").alias("w"))
     )
-    edges = (
-        p.unionByName(
-            p.select(
-                F.col("dst").alias("src"), F.col("src").alias("dst"), "w"
-            )
-        )
-        # feeds the strength agg + all 3 rounds — pin once
-        .localCheckpoint(eager=True)
+    edges = p.unionByName(
+        p.select(F.col("dst").alias("src"), F.col("src").alias("dst"), "w")
     )
     return (
-        pagerank_weighted(edges)
+        pagerank(edges)
         .select("node", F.col("rank").alias("pagerank"))
         .orderBy(F.col("pagerank").desc(), F.col("node").asc())
         .limit(50)

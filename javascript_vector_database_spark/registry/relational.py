@@ -526,7 +526,8 @@ def agg_q18_large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 _COPURCHASE_EDGES_SQL = """
-SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst
+SELECT DISTINCT a.l_partkey AS src, b.l_partkey AS dst,
+       CAST(1 AS BIGINT) AS w
 FROM lineitem a JOIN lineitem b
   ON a.l_orderkey = b.l_orderkey AND a.l_partkey <> b.l_partkey
 """
@@ -535,28 +536,31 @@ FROM lineitem a JOIN lineitem b
 def _pagerank_oracle() -> str:
     from javascript_vector_database_spark.operators.graph import sql_pagerank
 
-    return sql_pagerank(_COPURCHASE_EDGES_SQL)
+    inner = sql_pagerank(_COPURCHASE_EDGES_SQL)
+    return f"SELECT node, rank AS pagerank FROM ({inner})"
 
 
 @register("graph_pagerank_copurchase", oracle=_pagerank_oracle())
 def graph_pagerank_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PageRank over the part co-purchase graph (parts sharing an order
     are linked — the association graph a recommender mines), 3 integer-
-    exact power iterations (operators/graph.py: BIGINT fixed-point ranks,
-    DIV floor division — deterministic where float PageRank is shuffle-
-    order-dependent).
+    exact power iterations (operators/graph.py:pagerank with w = 1 on
+    every edge: BIGINT fixed-point ranks, DIV floor division —
+    deterministic where float PageRank is shuffle-order-dependent).
 
     Scale shape: the edge build is a self-equi-join on l_orderkey whose
     per-order fan-out is bounded by order SIZE (groups of ~4, never a
     hot-key blowup); each round is one join + one map-side-combined sum
-    on the edge list, the standard Pregel round.  The edge list is
-    cached across the 3 rounds (it feeds every one)."""
+    on the edge list, the standard Pregel round.  The operator pins the
+    edge list once for all 3 rounds."""
     from javascript_vector_database_spark.operators.graph import pagerank
     from javascript_vector_database_spark.registry.decorrelated import (
         symmetric_copurchase_edges,
     )
 
-    edges = symmetric_copurchase_edges(spark, sf_dir).cache()
+    edges = symmetric_copurchase_edges(spark, sf_dir).withColumn(
+        "w", F.lit(1).cast("long")
+    )
     return pagerank(edges).select("node", F.col("rank").alias("pagerank"))
 
 

@@ -35,6 +35,14 @@ def get_spark(
     """Build (or reuse) the tuned SparkSession.
 
     ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
+
+    The builder configs take full effect only when this call launches
+    the JVM.  If a SparkContext already runs in this process, or the
+    driver was started by spark-submit, ``getOrCreate`` reuses it: the
+    master, driver memory and ``spark.driver.extraJavaOptions``
+    (``-Xlog:disable`` included, so JVM log lines may reach stdout) keep
+    the values that launch chose, and only runtime SQL configs are
+    applied to the reused session.
     """
     if cpus is None:
         cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))

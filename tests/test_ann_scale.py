@@ -339,3 +339,31 @@ def test_ivf_pandas_cells_match_expression_fold(spark):
         ).collect()
     }
     assert fold == kern and len(fold) > 0
+
+
+def test_ivf_radius_fused_empty_query_list(spark, sf_oracle):
+    """No queries: an empty (query_id long, vec_id, distance double)
+    frame, not None."""
+    emb = load_table(spark, sf_oracle, "embeddings")
+    cents = ann_scale.collect_centroids(emb)
+    out = ann_scale.ivf_radius_fused(emb, [], cents, nn=20)
+    assert out is not None
+    assert [(f.name, f.dataType.simpleString()) for f in out.schema] == [
+        ("query_id", "bigint"),
+        ("vec_id", emb.schema["vec_id"].dataType.simpleString()),
+        ("distance", "double"),
+    ]
+    assert out.collect() == []
+
+
+def test_radius_from_narrow_empty_table_names_the_error(spark, sf_oracle):
+    """An empty narrow table has no nn-th neighbor: the error names the
+    operator and the empty input, not a bare max() ValueError."""
+    emb = load_table(spark, sf_oracle, "embeddings")
+    cents = ann_scale.collect_centroids(emb)
+    qv = get_query_vec(spark, sf_oracle)
+    narrow = ann_scale.ivf_radius_narrow_table(
+        emb.limit(0), [(0, qv)], cents
+    )
+    with pytest.raises(ValueError, match="radius_from_narrow.*empty"):
+        ann_scale.radius_from_narrow(narrow, "__qd0", 20)

@@ -5,6 +5,7 @@ lost partition pruning) fails CI."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark import registry
@@ -497,12 +498,38 @@ def test_skyline_no_global_window_no_cartesian(spark):
     assert "LeftSemi" in plan, plan
 
 
-def test_ppr_no_cartesian(spark):
-    """Personalized PageRank rounds: contribution joins and the full
-    outer against seeds must all be hash joins."""
-    plan = _plan(registry.queries()["graph_personalized_pagerank"](spark, SF))
+@pytest.mark.parametrize(
+    "name",
+    [
+        "graph_pagerank_copurchase",
+        "graph_personalized_pagerank",
+        "graph_pagerank_weighted",
+    ],
+)
+def test_ppr_no_cartesian(spark, name):
+    """PageRank rounds (operators/graph.py:pagerank): no cartesian or
+    nested-loop join, and exactly one shuffled-hash contribution join
+    per round — the pinned (edges ⋈ strength) table is never re-joined
+    inside the rounds."""
+    from javascript_vector_database_spark.operators.graph import (
+        PAGERANK_ROUNDS,
+    )
+
+    plan = _plan(registry.queries()[name](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert plan.count("ShuffledHashJoin") == PAGERANK_ROUNDS, plan
+
+
+@pytest.mark.parametrize(
+    "name", ["ann_ivf_radius_search", "ann_ivf_radius_batch"]
+)
+def test_ivf_radius_fused_reads_no_parquet(spark, name):
+    """The fused radius rows read the corpus once, inside the narrow
+    checkpoint (operators/ann_scale.py:ivf_radius_fused): the returned
+    plan scans only that checkpoint, never a parquet file."""
+    plan = _plan(registry.queries()[name](spark, SF))
+    assert "FileScan" not in plan, plan
 
 
 def test_grouped_skyline_windows_on_group(spark):

@@ -305,42 +305,45 @@ def test_ann_index_similarity_stored_matches_recompute(spark, tmp_path):
 
 
 def test_ivf_radius_batch_matches_single(spark):
-    """Batch radius must equal per-query single radius searches (the
-    lossless bound applied per query), with the corpus joined once."""
+    """The fused multi-query radius search must equal per-query single
+    radius searches at each query's nn-th exact-NN radius (the lossless
+    bound applied per query), with the corpus scanned once."""
     from javascript_vector_database_spark.operators import ann_scale
     from javascript_vector_database_spark.operators.knn import exact_knn
     from javascript_vector_database_spark.tables import load_table
 
     sf = "/root/testdata/sf0.001"
+    nn = 5
     emb = load_table(spark, sf, "embeddings")
     cents = ann_scale.collect_centroids(emb)
     assigned = emb.withColumn(
         "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), cents)
     ).cache()
     radii = ann_scale.ivf_cell_radii(assigned, cents)
-    queries = []
-    for qid in (1, 2, 7):
-        qv = [
-            float(x)
-            for x in emb.where(F.col("vec_id") == qid).first()["embedding"]
-        ]
-        r = max(
-            float(row["distance"]) for row in exact_knn(emb, qv, k=5).collect()
+    queries = [
+        (
+            qid,
+            [
+                float(x)
+                for x in emb.where(F.col("vec_id") == qid).first()["embedding"]
+            ],
         )
-        queries.append((qid, qv, r))
+        for qid in (1, 2, 7)
+    ]
     batch = {
         (r["query_id"], r["vec_id"], r["distance"])
-        for r in ann_scale.ivf_radius_batch(
-            assigned, queries, cents, radii
-        ).collect()
+        for r in ann_scale.ivf_radius_fused(emb, queries, cents, nn).collect()
     }
     single = set()
-    for qid, qv, r in queries:
+    for qid, qv in queries:
+        r = max(
+            float(row["distance"]) for row in exact_knn(emb, qv, k=nn).collect()
+        )
         for row in ann_scale.ivf_radius_search(
             assigned, qv, r, cents, radii
         ).collect():
             single.add((qid, row["vec_id"], row["distance"]))
-    assert batch == single and len(batch) >= 15  # >= k per query
+    assert batch == single and len(batch) >= 3 * nn
     assigned.unpersist()
 
 

@@ -40,9 +40,6 @@ BNLJ_ALLOWED = {
     "agg_q15_top_supplier",
     "agg_q22_dormant_customers",
     "profile_key_skew",  # 1-row (n_keys, total_rows) aggregate broadcast
-    # HITS renormalization: the per-round scalar max is a ONE-row
-    # aggregate broadcast-crossJoined back (operators/graph.py:hits)
-    "graph_hits_authorities",
     # the grand-total N is a ONE-row aggregate broadcast against the
     # tiny lang x source cell table
     "profile_chi_square",

@@ -368,8 +368,9 @@ def test_gapfill_fills_holes_and_carries_value(spark):
 
 def test_integer_pagerank_matches_local_model(spark):
     """Pin the integer fixed-point iteration on a 3-node path graph
-    against a pure-Python model of the same formula (rank DIV outdeg,
-    85/100 damping in integer space)."""
+    against a pure-Python model of the same formula ((rank * w) DIV
+    strength, 85/100 damping in integer space) — once unweighted
+    (w = 1: rank DIV outdeg) and once with a w = 3 edge."""
     from javascript_vector_database_spark.operators.graph import (
         BASE_MASS,
         DAMP_DEN,
@@ -377,27 +378,33 @@ def test_integer_pagerank_matches_local_model(spark):
         PAGERANK_ROUNDS,
         RANK_SCALE,
         pagerank,
-        symmetric_edges,
     )
 
-    pairs = spark.createDataFrame([(1, 2), (2, 3)], ["src", "dst"])
-    edges = symmetric_edges(pairs)
-    got = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
-
     adj = {1: [2], 2: [1, 3], 3: [2]}
-    rank = {n: RANK_SCALE for n in adj}
-    for _ in range(PAGERANK_ROUNDS):
-        contrib = {n: 0 for n in adj}
-        for src, dsts in adj.items():
-            for d in dsts:
-                contrib[d] += rank[src] // len(adj[src])
-        rank = {
-            n: BASE_MASS + (DAMP_NUM * c) // DAMP_DEN
-            for n, c in contrib.items()
-        }
-    assert got == rank
-    # the middle node of a path must outrank the endpoints
-    assert got[2] > got[1] == got[3]
+    for heavy in (1, 3):
+        wt = {(1, 2): heavy, (2, 1): heavy, (2, 3): 1, (3, 2): 1}
+        edges = spark.createDataFrame(
+            [(a, b, w) for (a, b), w in wt.items()],
+            "src long, dst long, w long",
+        )
+        got = {r["node"]: r["rank"] for r in pagerank(edges).collect()}
+
+        strength = {a: sum(wt[(a, b)] for b in adj[a]) for a in adj}
+        rank = {n: RANK_SCALE for n in adj}
+        for _ in range(PAGERANK_ROUNDS):
+            contrib = {n: 0 for n in adj}
+            for src, dsts in adj.items():
+                for d in dsts:
+                    contrib[d] += rank[src] * wt[(src, d)] // strength[src]
+            rank = {
+                n: BASE_MASS + (DAMP_NUM * c) // DAMP_DEN
+                for n, c in contrib.items()
+            }
+        assert got == rank, (heavy, got, rank)
+        # the middle node of a path must outrank the endpoints; the
+        # heavy edge pulls mass toward node 1
+        assert got[2] > got[1] >= got[3]
+        assert (got[1] > got[3]) == (heavy > 1)
 
 
 def test_corr_pairs_perfect_and_bounds(spark, tmp_path, sf_oracle):

@@ -11,7 +11,7 @@ from pyspark.sql import functions as F
 
 from javascript_vector_database_spark.operators.graph import (
     local_triangle_counts,
-    personalized_pagerank,
+    pagerank,
     seeded_triangle_counts,
 )
 from javascript_vector_database_spark.operators.skyline import (
@@ -89,11 +89,11 @@ def test_ppr_locality_and_seed_mass(spark):
     e = spark.createDataFrame(pairs, schema="src long, dst long")
     edges = e.unionByName(
         e.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
-    )
+    ).withColumn("w", F.lit(1).cast("long"))
     seeds = spark.createDataFrame([(1,)], schema="node long")
     got = {
         r["node"]: r["rank"]
-        for r in personalized_pagerank(edges, seeds, rounds=3).collect()
+        for r in pagerank(edges, seeds, rounds=3).collect()
     }
     # manual integer simulation of the same recurrence
     from javascript_vector_database_spark.operators.graph import (

@@ -56,16 +56,16 @@ LOOP_BACKED = {
         "join + per-node min agg"
     ),
     "graph_pagerank_copurchase": (
-        "3 Pregel rounds: contribution equi-join + map-side-combined "
-        "sum per round over the full edge list"
+        "pagerank with w = 1: pins (edges x strength) once, then 3 "
+        "Pregel rounds of contribution equi-join + map-side-combined sum"
     ),
     "graph_pagerank_weighted": (
-        "3 Pregel rounds: weighted contribution equi-join + sum per "
-        "round (strength precomputed once)"
+        "pagerank: pins (edges x strength) once, then 3 Pregel rounds "
+        "of weighted contribution equi-join + map-side-combined sum"
     ),
     "graph_personalized_pagerank": (
-        "3 Pregel rounds: same join+sum shape with the seed restart "
-        "vector folded in per round"
+        "pagerank with seeds: the same pinned table and 3 join+sum "
+        "rounds, plus a full join folding in the seed restart mass"
     ),
     "graph_hits_authorities": (
         "2 rounds x 2 half-steps: edge join + groupBy sum + max-renorm "
