@@ -20,28 +20,46 @@ def _as_col(c: Column | str) -> Column:
     return F.col(c) if isinstance(c, str) else c
 
 
+def _double_text(x: float) -> str:
+    """The text Java's ``Double.parseDouble`` reads back as exactly ``x``:
+    Python's repr is the shortest decimal that round-trips, and the parse
+    is correctly rounded.  NaN and the infinities in Java's spelling."""
+    x = float(x)
+    if x != x:
+        return "NaN"
+    if x in (float("inf"), float("-inf")):
+        return "Infinity" if x > 0 else "-Infinity"
+    return repr(x)
+
+
+def double_sql(x: float) -> str:
+    """SQL text of one DOUBLE literal, bit-exact (see ``_double_text``).
+    NaN and the infinities, which have no numeric literal, become casts."""
+    t = _double_text(x)
+    return f"{t}D" if t[-1].isdigit() else f"CAST('{t}' AS DOUBLE)"
+
+
+def double_array_sql(values: list[float]) -> str:
+    """SQL text of an ``array<double>`` literal, bit-exact: ONE string
+    token, split and cast to doubles.  The parser reads it as a single
+    token, where a list of numeric literals walks the expression grammar
+    once per element (about 25 ms for 384 elements, against 2.5 ms);
+    the cast is foldable, so the optimizer turns it into the literal
+    array once per query."""
+    if not values:
+        return "CAST(array() AS ARRAY<DOUBLE>)"
+    body = ",".join(_double_text(x) for x in values)
+    return f"CAST(split('{body}', ',') AS ARRAY<DOUBLE>)"
+
+
 def lit_double_array(values: list[float]) -> Column:
     """``array<double>`` literal via ONE parsed SQL expression.
 
     ``F.array(*[F.lit(x) ...])`` costs one py4j round trip per element —
     measured 3.2s of pure driver time for a 16x384 centroid block (6144
-    lits).  Formatting the shortest round-trip repr into a single
-    ``F.expr`` string hands the whole literal to the JVM parser at once
-    (~ms).  Bit-exact: Python's repr emits the shortest decimal that
-    round-trips, and Java's ``Double.parseDouble`` is correctly rounded,
-    so every parsed double equals the source double."""
-    def one(x: float) -> str:
-        x = float(x)
-        if x != x:
-            return "CAST('NaN' AS DOUBLE)"
-        if x == float("inf"):
-            return "CAST('Infinity' AS DOUBLE)"
-        if x == float("-inf"):
-            return "CAST('-Infinity' AS DOUBLE)"
-        return f"{x!r}D"
-
-    body = ", ".join(one(x) for x in values)
-    return F.expr(f"array({body})")
+    lits).  ``double_array_sql`` hands the whole literal to the JVM
+    parser at once."""
+    return F.expr(double_array_sql(values))
 
 
 def _dbl(x: Column) -> Column:

@@ -9,10 +9,23 @@ Three strategies, mirroring reference src/search.ts:
 Spark-first design notes (scale: 100 TB, 1000 executors):
 
 * The query vector is a *parameter*: inlined as a literal array, so every
-  distance is a pure Column expression — no join, no shuffle for the scan
-  phase.  ``orderBy(distance).limit(k)`` compiles to
+  distance is a pure expression — no join, no shuffle for the scan
+  phase.  ``ORDER BY distance, id LIMIT k`` compiles to
   ``TakeOrderedAndProject`` — per-partition partial top-k, then a k-row
   merge on the driver.  No full sort, no full shuffle, ever.
+* A single-query probe is rendered as ONE ``spark.sql`` statement over
+  the opened table handles (``_top_k_sql`` + ``_distance_sql``):
+  Python formats the whole plan as text and the JVM parses it once.
+  Chaining the same plan through the DataFrame API costs a py4j round
+  trip per Column, literal and operator, and one eager analysis per
+  operator.  Measured on the ``search`` benchmark (10k x 384, 5 pivots,
+  4 cores): building an exact / stored-range / stored-similarity probe
+  took 236 / 621 / 1,643 gateway commands chained and takes 7 / 17 / 17
+  rendered (a few more when py4j releases objects); its traced
+  ``build_s`` went 0.085 / 0.233 / 0.447 s -> 0.024 / 0.068 / 0.086 s.
+  Every literal comes from the one formatter in ``functions.vector``
+  (``double_sql``, ``double_array_sql``), so it parses back to the same
+  double.
 * The reference issues 5 separate index-range queries and union-dedups
   (src/search.ts:23-40).  On a columnar store one scan with an OR of the 5
   range predicates is the same candidate set with 1/5 the reads; min-max
@@ -33,6 +46,8 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark.functions.vector import (
+    double_array_sql,
+    double_sql,
     euclidean_distance,
     index_nr_to_string,
     lit_double_array,
@@ -57,6 +72,72 @@ def _py_euclid(a: list[float], b: list[float]) -> float:
     return s**0.5
 
 
+def _pivot_distances(
+    probe: str, query_vec: list[float], pivots: list[list[float]]
+) -> list[float]:
+    """Python-side query-to-pivot distances.  A query whose length is
+    not the pivots' is refused here, before anything is built: the zip
+    would silently truncate it and the re-rank would pad it with nulls."""
+    for p in pivots:
+        if len(p) != len(query_vec):
+            raise ValueError(
+                f"{probe}: query vector has {len(query_vec)} dimensions, "
+                f"pivots have {len(p)}"
+            )
+    return [_py_euclid(p, query_vec) for p in pivots]
+
+
+def _ident(name: str) -> str:
+    """A backtick-quoted identifier with its braces doubled: every
+    rendered fragment is a ``spark.sql`` format template, whose
+    ``{table}`` fields bind the table handles."""
+    quoted = "`" + name.replace("`", "``") + "`"
+    return quoted.replace("{", "{{").replace("}", "}}")
+
+
+def _distance_sql(
+    vec_col: str, query_vec: list[float], round_to: int | None = 6
+) -> str:
+    """Euclidean distance from ``vec_col`` to the literal query, as SQL
+    text: the sequential zip_with/aggregate fold of
+    ``functions.vector.euclidean_distance``, so both agree bit for bit.
+    A query of another length than the column's arrays gives nulls."""
+    d = (
+        f"sqrt(aggregate(zip_with({_ident(vec_col)}, "
+        f"{double_array_sql(query_vec)}, (x, y) -> "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE)) * "
+        "(CAST(x AS DOUBLE) - CAST(y AS DOUBLE))), "
+        "0.0D, (acc, v) -> acc + v))"
+    )
+    return d if round_to is None else f"round({d}, {int(round_to)})"
+
+
+def _top_k_sql(
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+    cands: str | None = None,
+) -> str:
+    """``(id, distance)`` of the k rows of ``{base}`` nearest the query,
+    ordered by (distance, id) — the tail every single-query probe
+    shares.  ``cands`` is a subquery over the index tables yielding
+    ``id_col``: the base rows are then first semi-joined to those ids,
+    the stored probes' doc read.  The candidate side is bounded by
+    construction, so it is broadcast and the base scan never shuffles;
+    a duplicate id is harmless, the semi join ignores it (the
+    reference's Set union, src/search.ts:38-40)."""
+    i = _ident(id_col)
+    hint, src = "", "{base}"
+    if cands is not None:
+        hint = "/*+ BROADCAST(c) */ "
+        src = f"{{base}} b LEFT SEMI JOIN ({cands}) c ON b.{i} = c.{i}"
+    return (
+        f"SELECT {hint}{i}, {_distance_sql(vec_col, query_vec)} AS distance "
+        f"FROM {src} ORDER BY distance, {i} LIMIT {int(k)}"
+    )
+
+
 def with_distance(
     df: DataFrame,
     query_vec: list[float],
@@ -65,10 +146,8 @@ def with_distance(
     round_to: int | None = 6,
 ) -> DataFrame:
     """Add the euclidean distance to the (literal) query vector."""
-    d = euclidean_distance(F.col(vec_col), _qvec_lit(query_vec))
-    if round_to is not None:
-        d = F.round(d, round_to)
-    return df.withColumn(out_col, d)
+    d = _distance_sql(vec_col, query_vec, round_to).format()  # un-escape
+    return df.withColumn(out_col, F.expr(d))
 
 
 def exact_knn(
@@ -83,12 +162,11 @@ def exact_knn(
     src/search.ts:10-14; PK tiebreak per rx-query-helper.js:128-136).
 
     Plan: one scan -> TakeOrderedAndProject(k).  Returns (id, distance).
+    The query's length is not checked: where it differs from a row's
+    vector length, that row's distance is null (nulls sort first).
     """
-    return (
-        with_distance(df, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    return df.sparkSession.sql(
+        _top_k_sql(query_vec, k, id_col, vec_col), base=df
     )
 
 
@@ -135,20 +213,24 @@ def ann_index_range(
     With ``precomputed=True`` the df already carries idx0..idxN columns
     (write-time index, the scale path — predicates push to parquet).
     """
-    n = len(pivots)
+    cond = _band_cond("ann_index_range", query_vec, pivots, index_distance)
     src = df if precomputed else build_pivot_index(df, pivots, vec_col)
+    return exact_knn(src.where(cond), query_vec, k, id_col, vec_col)
+
+
+def _band_cond(
+    probe: str,
+    query_vec: list[float],
+    pivots: list[list[float]],
+    index_distance: float,
+) -> Column:
+    """OR over the pivots of ``idx_i`` in the open band d_i ± d_i·w."""
     cond = None
-    for i, p in enumerate(pivots[:n]):
-        d_i = _py_euclid(p, query_vec)
+    for i, d_i in enumerate(_pivot_distances(probe, query_vec, pivots)):
         lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
         c = (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
         cond = c if cond is None else (cond | c)
-    return (
-        with_distance(src.where(cond), query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return cond
 
 
 def write_pivot_index_tables(
@@ -349,31 +431,51 @@ def ann_index_range_stored(
     Per pivot i the band predicate ``idx_i IN (d_i ± d_i·w)`` hits a
     table sorted by idx_i, so it pushes to parquet and row groups whose
     [min,max] miss the band are never decoded (the measured fraction is
-    the ``pivot_idx_prunable_frac`` bench extra).  Candidate ids
-    union-dedup across the five scans — the reference's Set union
-    (src/search.ts:38-40) — then ONE semi-join back to the base table
-    re-ranks exactly and takes top-k.  The candidate set is band-bounded
-    (tiny by construction: ±0.003 of each pivot distance), so AQE
-    broadcasts the semi-join; the base side stays partition-local, no
-    corpus shuffle."""
-    tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    cands = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
-        c = tables[f"idx{i}"].where(
-            (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
-        ).select(id_col)
-        cands = c if cands is None else cands.unionByName(c)
-    # no dropDuplicates: left_semi already ignores duplicate right-side
-    # keys — the reference's Set union happens implicitly in the join
-    hits = tables["base"].join(cands, id_col, "left_semi")
-    return (
-        with_distance(hits, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    the ``pivot_idx_prunable_frac`` bench extra).  The five band scans
+    are one UNION ALL of candidate ids, and ONE broadcast semi-join back
+    to the base table re-ranks exactly and takes top-k (``_top_k_sql``).
+    The candidate set is band-bounded (tiny by construction: ±0.003 of
+    each pivot distance); the base side stays partition-local, no corpus
+    shuffle."""
+    ds = _pivot_distances("ann_index_range_stored", query_vec, pivots)
+    bands = [
+        (f"idx{i}", double_sql(d - d * index_distance),
+         double_sql(d + d * index_distance))
+        for i, d in enumerate(ds)
+    ]
+    return _stored_top_k(
+        spark, base_dir, tables, _band_union_sql(id_col, bands),
+        query_vec, len(pivots), k, id_col, vec_col,
     )
+
+
+def _band_union_sql(id_col: str, bands: list[tuple[str, str, str]]) -> str:
+    """UNION ALL of the ids whose ``key`` lies in the open band
+    (lo, hi), one sargable scan of index table ``{idx<i>}`` per
+    (key, lo, hi) band; lo and hi are SQL literals."""
+    i = _ident(id_col)
+    return " UNION ALL ".join(
+        f"SELECT {i} FROM {{idx{n}}} "
+        f"WHERE {_ident(key)} > {lo} AND {_ident(key)} < {hi}"
+        for n, (key, lo, hi) in enumerate(bands)
+    )
+
+
+def _stored_top_k(
+    spark: SparkSession,
+    base_dir: str,
+    tables: dict[str, DataFrame] | None,
+    cands: str,
+    query_vec: list[float],
+    n_pivots: int,
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Run a stored probe: the candidate subquery ``cands`` over the
+    index tables, then the shared doc-read re-rank, as one statement."""
+    tables = tables or open_pivot_index_tables(spark, base_dir, n_pivots)
+    return spark.sql(_top_k_sql(query_vec, k, id_col, vec_col, cands), **tables)
 
 
 def ann_index_range_compat_stored(
@@ -397,25 +499,18 @@ def ann_index_range_compat_stored(
     ``ann_index_range_compat`` (SURVEY §1.3), and hash-matches that
     row's oracle.  Parquet keeps binary min/max footer stats for
     strings, so the string band prunes row groups the same way the
-    double tables do; candidates union-dedup via the shared left_semi
+    double tables do; candidates union-dedup via the shared semi-join
     doc-read re-rank, no corpus shuffle."""
-    tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    cands = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo = _py_index_string(d_i - d_i * index_distance)
-        hi = _py_index_string(d_i + d_i * index_distance)
-        c = tables[f"idx{i}"].where(
-            (F.col(f"idx{i}_str") > F.lit(lo))
-            & (F.col(f"idx{i}_str") < F.lit(hi))
-        ).select(id_col)
-        cands = c if cands is None else cands.unionByName(c)
-    hits = tables["base"].join(cands, id_col, "left_semi")
-    return (
-        with_distance(hits, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    ds = _pivot_distances("ann_index_range_compat_stored", query_vec, pivots)
+    # a key is the text of a number: it holds no quote to escape
+    bands = [
+        (f"idx{i}_str", f"'{_py_index_string(d - d * index_distance)}'",
+         f"'{_py_index_string(d + d * index_distance)}'")
+        for i, d in enumerate(ds)
+    ]
+    return _stored_top_k(
+        spark, base_dir, tables, _band_union_sql(id_col, bands),
+        query_vec, len(pivots), k, id_col, vec_col,
     )
 
 
@@ -451,11 +546,14 @@ def ann_index_range_stored_batch(
     Output: (query_id, vec_id, distance)."""
     from pyspark.sql.window import Window
 
+    dists = [
+        (qid, _pivot_distances("ann_index_range_stored_batch", qv, pivots))
+        for qid, qv in queries
+    ]
     tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
     cands = None
-    for qid, qv in queries:
-        for i, p in enumerate(pivots):
-            d_i = _py_euclid(p, qv)
+    for qid, ds in dists:
+        for i, d_i in enumerate(ds):
             lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
             c = (
                 tables[f"idx{i}"]
@@ -510,44 +608,40 @@ def ann_index_similarity_stored(
     (src/search.ts:56-109: per pivot, two Mango queries with $lt / $gt
     + limit over the sorted idxN index).
 
-    Per pivot each side is a sargable one-column predicate + top-N over
-    a table SORTED by that column: the predicate pushes to parquet, and
-    TakeOrderedAndProject takes per-partition partial top-Ns — on the
-    range layout only the files straddling d_i contribute candidates,
-    the rest are bounded by their min/max.  2·n_pivots skinny mini-scans
-    + one semi-join doc-read re-rank; the candidate set is
-    ≤ 2·n_pivots·docs_per_side rows by construction, so the join
-    broadcasts.  Hash-matches the recomputed ``ann_index_similarity``
-    (same bounds, same dedup, same re-rank)."""
-    tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    sides: list[DataFrame] = []
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        idx = tables[f"idx{i}"]
-        below = (
-            idx.where(F.col(f"idx{i}") < F.lit(d_i))
-            .orderBy(F.col(f"idx{i}").desc(), F.col(id_col).asc())
-            .limit(docs_per_side)
-            .select(id_col)
+    Each side is a one-column predicate over a table SORTED by that
+    column, and both sides of a pivot are one scan of its index table
+    filtered by ``idx_i < d_i OR idx_i > d_i``, pushed to parquet.  The
+    five scans are one UNION ALL tagged (pivot, side), with the side's
+    order (idx desc below d_i, idx asc above it) folded into one
+    ascending key, and one ``row_number() OVER (PARTITION BY pivot, side
+    ORDER BY key, id) <= docs_per_side`` filter keeps each side's
+    nearest entries.  Catalyst plans that filter as a two-phase
+    ``WindowGroupLimit``: the Partial phase below the single exchange
+    emits at most docs_per_side rows per (pivot, side) and map
+    partition, so the candidate side is one shuffle of a few hundred
+    skinny rows.  Then one broadcast semi-join doc-read re-rank; the
+    candidate set is ≤ 2·n_pivots·docs_per_side rows by construction.
+    Hash-matches the recomputed ``ann_index_similarity`` (same bounds,
+    same tie-break, same dedup, same re-rank)."""
+    ds = _pivot_distances("ann_index_similarity_stored", query_vec, pivots)
+    i = _ident(id_col)
+    scans = []
+    for n, d in enumerate(ds):
+        key, lit = _ident(f"idx{n}"), double_sql(d)
+        scans.append(
+            f"SELECT {i}, {n} AS __pivot, {key} > {lit} AS __above, "
+            f"IF({key} > {lit}, {key}, -{key}) AS __key FROM {{idx{n}}} "
+            f"WHERE {key} < {lit} OR {key} > {lit}"
         )
-        above = (
-            idx.where(F.col(f"idx{i}") > F.lit(d_i))
-            .orderBy(F.col(f"idx{i}").asc(), F.col(id_col).asc())
-            .limit(docs_per_side)
-            .select(id_col)
-        )
-        sides.extend([below, above])
-    cands = sides[0]
-    for s in sides[1:]:
-        cands = cands.unionByName(s)
-    # no dropDuplicates: left_semi already ignores duplicate right-side
-    # keys (the Set-union dedup is implicit in the join semantics)
-    hits = tables["base"].join(F.broadcast(cands), id_col, "left_semi")
-    return (
-        with_distance(hits, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    cands = (
+        f"SELECT {i} FROM (SELECT {i}, row_number() OVER (PARTITION BY "
+        f"__pivot, __above ORDER BY __key, {i}) AS __rn "
+        f"FROM ({' UNION ALL '.join(scans)})) "
+        f"WHERE __rn <= {int(docs_per_side)}"
+    )
+    return _stored_top_k(
+        spark, base_dir, tables, cands, query_vec, len(pivots), k, id_col,
+        vec_col,
     )
 
 
@@ -572,11 +666,11 @@ def ann_index_similarity(
     top-k per partition, no full shuffle.  2·n_pivots bounded mini-scans
     of a single (cached or columnar) source.
     """
+    ds = _pivot_distances("ann_index_similarity", query_vec, pivots)
     src = df if precomputed else build_pivot_index(df, pivots, vec_col)
     keep = [id_col, vec_col]
     sides: list[DataFrame] = []
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
+    for i, d_i in enumerate(ds):
         below = (
             src.where(F.col(f"idx{i}") < F.lit(d_i))
             .orderBy(F.col(f"idx{i}").desc(), F.col(id_col).asc())
@@ -594,12 +688,7 @@ def ann_index_similarity(
     for s in sides[1:]:
         cands = cands.unionByName(s)
     cands = cands.dropDuplicates([id_col])
-    return (
-        with_distance(cands, query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return exact_knn(cands, query_vec, k, id_col, vec_col)
 
 
 def _js_number_to_string(x: float) -> str:
@@ -665,22 +754,17 @@ def ann_index_range_compat(
     double-key mode (``ann_index_range``, the consciously-fixed scale
     path).  tests/test_knn.py::test_compat_string_range_divergence pins
     the divergence down."""
-    src = df if precomputed else build_pivot_index(
-        df, pivots, vec_col, compat_strings=True
-    )
+    ds = _pivot_distances("ann_index_range_compat", query_vec, pivots)
     cond = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
+    for i, d_i in enumerate(ds):
         lo = _py_index_string(d_i - d_i * index_distance)
         hi = _py_index_string(d_i + d_i * index_distance)
         c = (F.col(f"idx{i}_str") > F.lit(lo)) & (F.col(f"idx{i}_str") < F.lit(hi))
         cond = c if cond is None else (cond | c)
-    return (
-        with_distance(src.where(cond), query_vec, vec_col)
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    src = df if precomputed else build_pivot_index(
+        df, pivots, vec_col, compat_strings=True
     )
+    return exact_knn(src.where(cond), query_vec, k, id_col, vec_col)
 
 
 def knn_batch(
@@ -740,13 +824,8 @@ def candidate_count(
 ) -> int:
     """docReads analog: rows touched by the range-ANN candidate predicate
     (reference tracks docReads per search, src/search.ts:38,52)."""
+    cond = _band_cond("candidate_count", query_vec, pivots, index_distance)
     src = df if precomputed else build_pivot_index(df, pivots, vec_col)
-    cond = None
-    for i, p in enumerate(pivots):
-        d_i = _py_euclid(p, query_vec)
-        lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
-        c = (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
-        cond = c if cond is None else (cond | c)
     return src.where(cond).count()
 
 

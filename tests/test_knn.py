@@ -1,5 +1,8 @@
 from __future__ import annotations
 
+import re
+
+import pytest
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark import registry
@@ -208,3 +211,164 @@ def test_lit_double_array_bit_identical(spark):
         struct.pack("d", a) == struct.pack("d", b) for a, b in zip(old, new)
     )
     assert len(old) == len(new) == len(vals)
+
+
+# ---------------------------------------------------------------------------
+# single-query probes rendered as one statement
+# ---------------------------------------------------------------------------
+
+
+@pytest.fixture(scope="module")
+def stored_index(spark, sf_smoke, tmp_path_factory):
+    """(embeddings, query, pivots, index dir) at sf0.001."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    qv = registry.get_query_vec(spark, sf_smoke)
+    pivots = registry.used_pivots(len(qv))
+    base = str(tmp_path_factory.mktemp("knn_stored") / "pivot_index")
+    knn.write_pivot_index_tables(emb, pivots, base)
+    return emb, qv, pivots, base
+
+
+def _rows(df) -> list[str]:
+    # repr, so that NaN distances compare equal
+    return [repr(tuple(r)) for r in df.collect()]
+
+
+#: every probe that takes pivots, with a query one dimension short; the
+#: stored ones get a missing index dir, so building anything would fail
+#: with another error than the dimension check
+_SHORT_QUERY_PROBES = {
+    "ann_index_range": lambda e, q, p: knn.ann_index_range(e, q, p),
+    "candidate_count": lambda e, q, p: knn.candidate_count(e, q, p),
+    "ann_index_range_stored": lambda e, q, p: knn.ann_index_range_stored(
+        e.sparkSession, "/nonexistent", q, p),
+    "ann_index_range_stored_batch": lambda e, q, p: (
+        knn.ann_index_range_stored_batch(
+            e.sparkSession, "/nonexistent", [(1, q)], p)),
+    "ann_index_range_compat": lambda e, q, p: knn.ann_index_range_compat(
+        e, q, p),
+    "ann_index_range_compat_stored": lambda e, q, p: (
+        knn.ann_index_range_compat_stored(
+            e.sparkSession, "/nonexistent", q, p)),
+    "ann_index_similarity": lambda e, q, p: knn.ann_index_similarity(
+        e, q, p),
+    "ann_index_similarity_stored": lambda e, q, p: (
+        knn.ann_index_similarity_stored(
+            e.sparkSession, "/nonexistent", q, p)),
+}
+
+
+@pytest.mark.parametrize("probe", sorted(_SHORT_QUERY_PROBES))
+def test_wrong_dimension_query_is_refused(spark, sf_smoke, probe):
+    """A short query used to be truncated against the pivots and padded
+    with nulls in the re-rank: every probe now refuses it up front,
+    naming itself and both lengths."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    qv = registry.get_query_vec(spark, sf_smoke)
+    pivots = registry.used_pivots(len(qv))
+    msg = (
+        f"{probe}: query vector has {len(qv) - 1} dimensions, "
+        f"pivots have {len(qv)}"
+    )
+    with pytest.raises(ValueError, match=re.escape(msg)):
+        _SHORT_QUERY_PROBES[probe](emb, qv[:-1], pivots)
+
+
+def test_exact_knn_wrong_dimension_gives_null_distances(spark, sf_smoke):
+    """exact_knn takes no pivots and checks nothing: as its docstring
+    says, a query of the wrong length gives null distances."""
+    emb = load_table(spark, sf_smoke, "embeddings")
+    qv = registry.get_query_vec(spark, sf_smoke)
+    rows = knn.exact_knn(emb, qv[:-1]).collect()
+    assert len(rows) == 10
+    assert all(r["distance"] is None for r in rows)
+
+
+def test_probe_build_round_trip_budget(spark, stored_index, monkeypatch):
+    """Building a probe is one parsed statement, not a py4j round trip
+    per Column, literal and operator (236 / 621 / 1,184 gateway
+    commands on the 384-dim search benchmark before), and the temporary
+    views that bind the table handles are gone once the answer is in."""
+    from py4j.clientserver import ClientServerConnection
+
+    emb, qv, pivots, base = stored_index
+    tables = knn.open_pivot_index_tables(spark, base, len(pivots))
+    builds = {
+        "exact_knn": lambda: knn.exact_knn(emb, qv),
+        "ann_index_range_stored": lambda: knn.ann_index_range_stored(
+            spark, base, qv, pivots, tables=tables),
+        "ann_index_similarity_stored": lambda: (
+            knn.ann_index_similarity_stored(
+                spark, base, qv, pivots, tables=tables)),
+    }
+    real = ClientServerConnection.send_command
+    sent = []
+
+    def counting(self, command, *args, **kwargs):
+        sent.append(command)
+        return real(self, command, *args, **kwargs)
+
+    for name, build in builds.items():
+        sent.clear()
+        monkeypatch.setattr(ClientServerConnection, "send_command", counting)
+        df = build()
+        monkeypatch.setattr(ClientServerConnection, "send_command", real)
+        assert 0 < len(sent) <= 40, (name, len(sent))
+        assert len(df.collect()) == 10
+        left = [
+            t.name for t in spark.catalog.listTables()
+            if t.name.startswith("_pyspark_")
+        ]
+        assert left == [], (name, left)
+
+
+@pytest.mark.parametrize(
+    "special",
+    [(float("nan"), float("inf")), (float("nan"), float("-inf")),
+     (float("inf"), float("-inf"))],
+    ids=["nan+inf", "nan-inf", "inf-inf"],
+)
+def test_stored_probes_render_special_literals(spark, stored_index, special):
+    """NaN and infinite query components (and so NaN or infinite pivot
+    distances and band bounds) render to literals that parse back to the
+    same doubles: the stored probes return the recompute probes' rows."""
+    emb, qv, pivots, base = stored_index
+    q = [special[0], special[1], *qv[2:]]
+    assert _rows(knn.ann_index_range_stored(spark, base, q, pivots)) == (
+        _rows(knn.ann_index_range(emb, q, pivots))
+    )
+    sim = _rows(knn.ann_index_similarity_stored(spark, base, q, pivots))
+    assert len(sim) == 10
+    assert sim == _rows(knn.ann_index_similarity(emb, q, pivots))
+
+
+def test_stored_probes_quote_identifiers(spark, stored_index, tmp_path):
+    """Id and vector columns whose names need quoting (a space, braces)
+    reach the rendered statements intact, and every probe answers as it
+    does under the default names."""
+    emb, qv, pivots, _base = stored_index
+    id_col, vec_col = "doc id", "emb {v}"
+    odd = emb.select(
+        F.col("vec_id").alias(id_col), F.col("embedding").alias(vec_col)
+    )
+    names = {"id_col": id_col, "vec_col": vec_col}
+    base, compat = str(tmp_path / "odd"), str(tmp_path / "odd_compat")
+    knn.write_pivot_index_tables(odd, pivots, base, **names)
+    knn.write_pivot_index_tables(odd, pivots, compat, compat_strings=True,
+                                 **names)
+    pairs = [
+        (knn.exact_knn(odd, qv, **names), knn.exact_knn(emb, qv)),
+        (knn.ann_index_range_stored(spark, base, qv, pivots, **names),
+         knn.ann_index_range(emb, qv, pivots)),
+        (knn.ann_index_range_compat_stored(spark, compat, qv, pivots,
+                                           **names),
+         knn.ann_index_range_compat(emb, qv, pivots)),
+        (knn.ann_index_similarity_stored(spark, base, qv, pivots, **names),
+         knn.ann_index_similarity(emb, qv, pivots)),
+    ]
+    for got, want in pairs:
+        assert got.columns == [id_col, "distance"]
+        assert _rows(got) == _rows(want)
+    assert _rows(knn.ann_index_range(odd, qv, pivots, **names)) == _rows(
+        knn.ann_index_range(emb, qv, pivots)
+    )

@@ -641,6 +641,37 @@ def test_ann_range_indexed_pushes_bands_to_stored_index(spark):
     assert "CartesianProduct" not in plan
 
 
+def test_ann_similarity_indexed_one_exchange_window(spark):
+    """The stored similarity probe (knn_ann_similarity_indexed): its
+    per-pivot index scans are one UNION ALL whose per-(pivot, side)
+    row_number limit runs as a Partial WindowGroupLimit BELOW the one
+    hash exchange (not one TakeOrderedAndProject job per side); both
+    one-sided filters still reach each index scan, the doc read is a
+    broadcast left-semi join, and the only top-k is the final one."""
+    from javascript_vector_database_spark.pivots import DOCS_PER_INDEX_SIDE
+
+    plan = _plan(registry.queries()["knn_ann_similarity_indexed"](spark, SF))
+    assert plan.count("TakeOrderedAndProject") == 1, plan
+    top = plan.find("TakeOrderedAndProject")
+    assert top < plan.find("BroadcastHashJoin"), plan
+    assert "CartesianProduct" not in plan, plan
+    semi = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+    assert len(semi) == 1 and "LeftSemi" in semi[0], plan
+    assert plan.count("BroadcastExchange") == 1, plan
+    ex = [
+        i for i in range(len(plan))
+        if plan.startswith("Exchange hashpartitioning", i)
+    ]
+    assert len(ex) == 1, plan
+    partial = plan.find(f"row_number(), {DOCS_PER_INDEX_SIDE}, Partial")
+    assert partial != -1 and plan.count(", Partial") == 1, plan
+    assert plan.find("BroadcastExchange") < ex[0] < partial, plan
+    segs = [p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]]
+    for i in range(5):
+        assert any(f"LessThan(idx{i}" in s for s in segs), (i, segs)
+        assert any(f"GreaterThan(idx{i}" in s for s in segs), (i, segs)
+
+
 def test_ivf_radius_partitioned_probe_prunes(spark):
     """The partitioned radius row's probe list must become a real
     PartitionFilter on ivf_cell (pruned cells = directories never

@@ -275,7 +275,7 @@ def test_pivot_index_rowgroups_prunable_on_band(spark, tmp_path):
 
 
 def test_ann_index_similarity_stored_matches_recompute(spark, tmp_path):
-    """The stored-index similarity probe (2 sargable mini-scans per
+    """The stored-index similarity probe (the $lt and $gt sides of each
     pivot over the sorted skinny tables + doc-read re-rank) must return
     exactly the recompute-path rows, and its side predicates must push
     to the parquet scans."""
