@@ -29,7 +29,12 @@ from javascript_vector_database_spark.functions.vector import (
     euclidean_distance,
     lit_double_array,
 )
-from javascript_vector_database_spark.operators.knn import _py_euclid, _qvec_lit
+from javascript_vector_database_spark.operators.knn import (
+    _pivot_distances,
+    _qvec_lit,
+    exact_knn,
+    top_n_per_query,
+)
 from javascript_vector_database_spark.pivots import TOP_K, make_pivots
 
 IVF_K = 16  # fixed centroid count, independent of table size
@@ -224,6 +229,38 @@ def ivf_assign_dist(
     )
 
 
+def _cell_distances(
+    probe: str, query_vec: list[float], cents: list[tuple[int, list[float]]]
+) -> list[tuple[float, int]]:
+    """(distance, cid) from the query to every centroid, through
+    ``knn._pivot_distances``: a query whose length is not the
+    centroids' raises its named ValueError before anything is built."""
+    ds = _pivot_distances(probe, query_vec, [c for _, c in cents])
+    return [(d, int(cid)) for d, (cid, _) in zip(ds, cents)]
+
+
+def ivf_probe_cells(
+    probe: str,
+    query_vec: list[float],
+    cents: list[tuple[int, list[float]]],
+    nprobe: int,
+) -> list[int]:
+    """The ``nprobe`` cells whose centroids are nearest the query, ranked
+    driver-side (the centroid set is tiny by construction); ties go to
+    the lowest cid.  ``probe`` names the caller in the dimension error."""
+    ranked = sorted(_cell_distances(probe, query_vec, cents))
+    return [cid for _, cid in ranked[:nprobe]]
+
+
+def _in_list_sql(col: str, values: list) -> str:
+    """``col IN (…)`` as one SQL predicate (one parsed expression, not a
+    py4j literal per value); the values are cell ids or 0/1 bucket
+    strings.  An empty list matches nothing."""
+    if not values:
+        return "false"
+    return f"{col} IN ({', '.join(repr(v) for v in values)})"
+
+
 def ivf_search(
     emb: DataFrame,
     query_vec: list[float],
@@ -252,7 +289,10 @@ def ivf_search(
     whenever recall matters: on the clustered 384-dim fixture the
     trained set serves recall@10 0.88 at nprobe=4 vs 0.46 for the
     hash-order sample.  The ``cents=None`` sample default exists for
-    zero-setup calls and pure-SQL oracle portability, not quality."""
+    zero-setup calls and pure-SQL oracle portability, not quality.
+
+    The probed rows go to ``knn.exact_knn``.  A query whose length is
+    not the centroids' raises a ValueError naming this probe."""
     if cents is None:
         if precomputed:
             raise ValueError(
@@ -260,20 +300,13 @@ def ivf_search(
                 "ivf_cell column was assigned with"
             )
         cents = collect_centroids(emb, id_col, vec_col, k_cents)
-    probed = sorted((_py_euclid(cemb, query_vec), cid) for cid, cemb in cents)[:nprobe]
-    probe_ids = [cid for _, cid in probed]
+    probe_ids = ivf_probe_cells("ivf_search", query_vec, cents, nprobe)
     src = emb if precomputed else emb.withColumn(
         "ivf_cell", ivf_cell_expr(F.col(vec_col), cents)
     )
-    return (
-        src.where(F.col("ivf_cell").isin(probe_ids))
-        .withColumn(
-            "distance",
-            F.round(euclidean_distance(F.col(vec_col), _qvec_lit(query_vec)), 6),
-        )
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_knn(
+        src.where(_in_list_sql("ivf_cell", probe_ids)), query_vec, k, id_col,
+        vec_col,
     )
 
 
@@ -294,11 +327,9 @@ def knn_batch_ivf(
     qvec) table; candidates come from an EQUI-join on ivf_cell, so the
     corpus never fans out by |Q| — each row joins only the queries probing
     its cell.  With ``precomputed=True`` + a ``partitionBy(ivf_cell)``
-    layout, the join's cell set prunes partitions.  Per-query top-k via a
-    row_number window over the (small) candidate set.
+    layout, the join's cell set prunes partitions.  Per-query top-k via
+    ``knn.top_n_per_query`` over the (small) candidate set.
     Output: (query_id, id, distance)."""
-    from pyspark.sql.window import Window
-
     if cents is None:
         if precomputed:
             raise ValueError(
@@ -306,29 +337,25 @@ def knn_batch_ivf(
                 "ivf_cell column was assigned with"
             )
         cents = collect_centroids(emb, id_col, vec_col, k_cents)
-    probe_rows = []
-    for qid, qv in queries:
-        probed = sorted((_py_euclid(cemb, qv), cid) for cid, cemb in cents)[:nprobe]
-        for _, cid in probed:
-            probe_rows.append((int(qid), int(cid), [float(x) for x in qv]))
+    probe_rows = [
+        (int(qid), cid, [float(x) for x in qv])
+        for qid, qv in queries
+        for cid in ivf_probe_cells("knn_batch_ivf", qv, cents, nprobe)
+    ]
     probes = emb.sparkSession.createDataFrame(
         probe_rows, schema="query_id long, ivf_cell long, qvec array<double>"
     )
     src = emb if precomputed else emb.withColumn(
         "ivf_cell", ivf_cell_expr(F.col(vec_col), cents)
     )
-    scored = src.join(F.broadcast(probes), "ivf_cell").withColumn(
-        "distance",
-        F.round(euclidean_distance(F.col(vec_col), F.col("qvec")), 6),
+    scored = src.join(F.broadcast(probes), "ivf_cell").select(
+        "query_id",
+        id_col,
+        F.round(euclidean_distance(F.col(vec_col), F.col("qvec")), 6).alias(
+            "distance"
+        ),
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select("query_id", id_col, "distance")
-    )
+    return top_n_per_query(scored, k, "query_id", "distance", id_col)
 
 
 def hyperplanes(dim: int, bits: int = LSH_BITS, seed: int = LSH_SEED) -> list[list[float]]:
@@ -465,7 +492,14 @@ def lsh_search(
     ``precomputed=True`` is the scale path: ``emb`` already carries the
     ``bucket`` column (written via lsh_bucket_table, same bits/seed), so
     the IN-list prunes via min/max stats or partitioning instead of
-    re-hashing the whole corpus per query."""
+    re-hashing the whole corpus per query.  The probed rows go to
+    ``knn.exact_knn``.
+
+    Nothing here fixes the dimension: the hyperplanes are drawn for the
+    query's length.  A query of another length than the stored vectors
+    hashes every row to the all-zero bucket (each dot product is null),
+    so it returns no rows unless that bucket is probed, and then their
+    distances are null."""
     planes = hyperplanes(len(query_vec), bits, seed)
     if n_probe is not None:
         probes = lsh_probe_buckets_directed(query_vec, planes, n_probe)
@@ -474,15 +508,8 @@ def lsh_search(
     src = emb if precomputed else emb.withColumn(
         "bucket", lsh_bucket(F.col(vec_col), planes)
     )
-    return (
-        src.where(F.col("bucket").isin(probes))
-        .withColumn(
-            "distance",
-            F.round(euclidean_distance(F.col(vec_col), _qvec_lit(query_vec)), 6),
-        )
-        .select(id_col, "distance")
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_knn(
+        src.where(_in_list_sql("bucket", probes)), query_vec, k, id_col, vec_col
     )
 
 
@@ -650,18 +677,19 @@ def ivf_radius_probe_cells(
     query_vec: list[float],
     radius: float,
     cell_radii: dict[int, float],
+    probe: str = "ivf_radius_probe_cells",
 ) -> list[int]:
     """Driver-side probe list for a radius query — the triangle-bound
     cell filter shared by the single-query / batch operators and the
     bench evidence (one definition, no copy-paste slack drift).  A cell
     absent from ``cell_radii`` (no members) gets bound 0.0: it is
     probed only if its centroid itself lies inside the radius, where
-    the empty scan is a no-op either way."""
+    the empty scan is a no-op either way.  ``probe`` names the caller
+    in the dimension error."""
     return [
-        int(cid)
-        for cid, cemb in cents
-        if _py_euclid(cemb, query_vec)
-        <= radius + RADIUS_ROUND_SLACK + cell_radii.get(int(cid), 0.0)
+        cid
+        for d, cid in _cell_distances(probe, query_vec, cents)
+        if d <= radius + RADIUS_ROUND_SLACK + cell_radii.get(cid, 0.0)
     ]
 
 
@@ -709,7 +737,9 @@ def ivf_radius_search(
         euclidean_distance,
     )
 
-    probe = ivf_radius_probe_cells(cents, query_vec, radius, cell_radii)
+    probe = ivf_radius_probe_cells(
+        cents, query_vec, radius, cell_radii, "ivf_radius_search"
+    )
     return (
         assigned.where(F.col("ivf_cell").isin(probe))
         .withColumn(
@@ -805,8 +835,11 @@ def ivf_radius_fused(
     Per query, the rows equal ivf_radius_search over the same radius:
     the probe set is the same lossless driver-side triangle bound and
     the emitted distance is the same rounded fold.  ``queries`` is
-    [(query_id, qvec)]; an empty list gives an empty frame.  Output:
-    (query_id, id, distance <= that query's radius)."""
+    [(query_id, qvec)]; an empty list gives an empty frame, and a query
+    whose length is not the centroids' is refused before the scan.
+    Output: (query_id, id, distance <= that query's radius)."""
+    for _, qv in queries:
+        _cell_distances("ivf_radius_fused", qv, cents)
     if not queries:
         return emb.select(
             F.lit(None).cast("long").alias("query_id"),

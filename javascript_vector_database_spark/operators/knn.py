@@ -26,6 +26,21 @@ Spark-first design notes (scale: 100 TB, 1000 executors):
   Every literal comes from the one formatter in ``functions.vector``
   (``double_sql``, ``double_array_sql``), so it parses back to the same
   double.
+* This module owns the exact re-rank tail of every vector probe, and no
+  other module writes one:
+  - ``exact_knn`` — probes whose candidates are a filtered frame that
+    still carries the vector: the recompute pivot probes here,
+    ``ann_scale.ivf_search`` / ``lsh_search``, ``quant.sq8_search`` /
+    ``bq_search`` (over their coarse pool) and the registry's filtered
+    rows;
+  - ``rerank_pool`` — probes that score ids from a stored code table:
+    ``quant.sq8_search_precomputed`` / ``bq_search_precomputed``,
+    ``pq.pq_search_precomputed`` (so ``pq_search``),
+    ``pq.ivfpq_search_precomputed`` (so ``ivfpq_search``) and
+    ``pq.ivfpq_residual_search``;
+  - ``top_n_per_query`` — the batch probes ``knn_batch``,
+    ``ann_index_range_stored_batch``, ``ann_scale.knn_batch_ivf`` and
+    ``pq.pq_batch_search`` (its ADC pool and its re-rank).
 * The reference issues 5 separate index-range queries and union-dedups
   (src/search.ts:23-40).  On a columnar store one scan with an OR of the 5
   range predicates is the same candidate set with 1/5 the reads; min-max
@@ -44,6 +59,7 @@ import os
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.window import Window
 
 from javascript_vector_database_spark.functions.vector import (
     double_array_sql,
@@ -121,9 +137,10 @@ def _top_k_sql(
 ) -> str:
     """``(id, distance)`` of the k rows of ``{base}`` nearest the query,
     ordered by (distance, id) — the tail every single-query probe
-    shares.  ``cands`` is a subquery over the index tables yielding
-    ``id_col``: the base rows are then first semi-joined to those ids,
-    the stored probes' doc read.  The candidate side is bounded by
+    shares.  ``cands`` is a subquery over the index tables (or over a
+    scored code table, ``rerank_pool``) yielding ``id_col``: the base
+    rows are then first semi-joined to those ids, the stored probes'
+    doc read.  The candidate side is bounded by
     construction, so it is broadcast and the base scan never shuffles;
     a duplicate id is harmless, the semi join ignores it (the
     reference's Set union, src/search.ts:38-40)."""
@@ -135,6 +152,47 @@ def _top_k_sql(
     return (
         f"SELECT {hint}{i}, {_distance_sql(vec_col, query_vec)} AS distance "
         f"FROM {src} ORDER BY distance, {i} LIMIT {int(k)}"
+    )
+
+
+def rerank_pool(
+    scored: DataFrame,
+    base: DataFrame,
+    query_vec: list[float],
+    pool: int,
+    k: int = TOP_K,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+) -> DataFrame:
+    """Exact top-k of the ``pool`` best-scored ids — the tail of every
+    stored-code probe (SQ8, BQ, PQ, IVF-PQ).  ``scored`` is an
+    ``(id_col, score)`` frame over a code table, lower score better; its
+    ``ORDER BY score, id LIMIT pool`` is ``_top_k_sql``'s candidate
+    subquery, so the pool, the broadcast left-semi doc read of ``base``
+    and the exact re-rank are one statement.  Output: (id, distance)."""
+    i = _ident(id_col)
+    cands = f"SELECT {i} FROM {{scored}} ORDER BY score, {i} LIMIT {int(pool)}"
+    return base.sparkSession.sql(
+        _top_k_sql(query_vec, k, id_col, vec_col, cands),
+        base=base, scored=scored,
+    )
+
+
+def top_n_per_query(
+    scored: DataFrame, n: int, q_col: str, score_col: str, id_col: str
+) -> DataFrame:
+    """The rows of ``scored`` ranked ``<= n`` within their query by
+    (score, id) — the tail of every batch probe.  Catalyst rewrites the
+    rank filter into a two-phase ``WindowGroupLimit`` whose Partial phase
+    runs below the exchange, so each map partition ships at most n rows
+    per query."""
+    w = Window.partitionBy(q_col).orderBy(
+        F.col(score_col).asc(), F.col(id_col).asc()
+    )
+    return (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") <= n)
+        .drop("__rn")
     )
 
 
@@ -528,7 +586,7 @@ def ann_index_range_stored_batch(
     """Batch probe of the STORED pivot index — eval-set retrieval over
     the reference's physical index shape (the batch sibling of
     ``ann_index_range_stored``, completing the batch family beside
-    ``knn_batch``/``ivf_batch_search``/``pq_batch_search``).
+    ``knn_batch``/``knn_batch_ivf``/``pq_batch_search``).
 
     |Q|·n_pivots band mini-scans of the sorted skinny tables — the SAME
     sargable pushed predicates the single-query probe runs, planned in
@@ -544,8 +602,6 @@ def ann_index_range_stored_batch(
     batches prefer the IVF batch path (equi-join on stored cells) —
     this is the faithful stored-index shape for bounded batches.
     Output: (query_id, vec_id, distance)."""
-    from pyspark.sql.window import Window
-
     dists = [
         (qid, _pivot_distances("ann_index_range_stored_batch", qv, pivots))
         for qid, qv in queries
@@ -581,14 +637,7 @@ def ann_index_range_stored_batch(
             ).alias("distance"),
         )
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", id_col, "distance")
-    )
+    return top_n_per_query(scored, k, "query_id", "distance", id_col)
 
 
 def ann_index_similarity_stored(
@@ -793,10 +842,8 @@ def knn_batch(
     tests/test_plans.py::test_knn_batch_partial_group_limit).  The corpus
     is read once for the whole batch instead of |Q| times; for large
     corpora pre-prune candidates with the stored IVF assignment instead
-    (ann_scale.ivf_batch_search) so the scan side never fans out by |Q|.
+    (ann_scale.knn_batch_ivf) so the scan side never fans out by |Q|.
     Output: (query_id, id, distance)."""
-    from pyspark.sql.window import Window
-
     scored = emb.crossJoin(F.broadcast(queries)).select(
         q_id,
         id_col,
@@ -804,14 +851,7 @@ def knn_batch(
             "distance"
         ),
     )
-    w = Window.partitionBy(q_id).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= k)
-        .select(q_id, id_col, "distance")
-    )
+    return top_n_per_query(scored, k, q_id, "distance", id_col)
 
 
 def candidate_count(

@@ -31,6 +31,8 @@ import os
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from javascript_vector_database_spark.functions.vector import lit_double_array
+
 #: bits per dimension; z spans 2*Z_BITS bits (fits a long)
 Z_BITS = 16
 
@@ -91,7 +93,7 @@ def quantile_code8(col: Column, cuts: list[float]) -> Column:
     no shuffle.  A NULL value folds to cell 0 (each NULL comparison
     takes the otherwise-0 branch), matching the minmax path's
     origin-cell coalesce."""
-    arr = F.array(*[F.lit(float(c)) for c in cuts])
+    arr = lit_double_array(cuts)
     return F.aggregate(
         arr,
         F.lit(0).cast("long"),

@@ -35,8 +35,8 @@ Engine-portable by construction (same discipline as quant.py):
 100 TB plan: codes are materialized at write time (``pq_code_table``)
 next to the float vectors; ``pq_search_precomputed`` phase 1 scans ONLY
 (id, code) — column pruning keeps the 32x-smaller code column as the
-entire probe I/O — and phase 2 broadcast-joins the k*rerank surviving
-ids back to the vector table for exact re-ranking.
+entire probe I/O — and phase 2 is ``knn.rerank_pool``, the exact
+re-rank every stored-code probe shares.
 """
 
 from __future__ import annotations
@@ -51,6 +51,17 @@ from pyspark.sql import functions as F
 from javascript_vector_database_spark.functions.vector import (
     euclidean_distance,
     lit_double_array,
+)
+from javascript_vector_database_spark.operators.ann_scale import (
+    N_PROBE,
+    collect_centroids,
+    ivf_cell_expr,
+    ivf_probe_cells,
+)
+from javascript_vector_database_spark.operators.knn import (
+    _pivot_distances,
+    rerank_pool,
+    top_n_per_query,
 )
 from javascript_vector_database_spark.pivots import TOP_K
 
@@ -489,25 +500,13 @@ def pq_search_precomputed(
 ) -> DataFrame:
     """The compressed-scan layout: phase 1 reads ONLY (id, pq_code) from
     the stored code table (the float column is column-pruned out of the
-    probe read); phase 2 broadcast-joins the k*rerank candidate ids back
-    to the vector table for the exact re-rank."""
+    probe read) and scores it by ADC; phase 2 is ``knn.rerank_pool``
+    over the k*rerank best."""
     lut = py_pq_lut(qvec, codebook)
-    cand_ids = (
-        codes.select(F.col(id_col), pq_adc_expr(F.col(code_col), lut).alias("__ad"))
-        .orderBy(F.col("__ad").asc(), F.col(id_col).asc())
-        .limit(k * rerank)
-        .select(id_col)
+    scored = codes.select(
+        F.col(id_col), pq_adc_expr(F.col(code_col), lut).alias("score")
     )
-    qv_lit = lit_double_array([float(x) for x in qvec])
-    return (
-        emb.join(F.broadcast(cand_ids), id_col)
-        .select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return rerank_pool(scored, emb, qvec, k * rerank, k, id_col, vec_col)
 
 
 def pq_batch_search(
@@ -533,13 +532,11 @@ def pq_batch_search(
     adds, deterministic on any engine; never a float groupBy-sum whose
     shuffle order could flip candidate boundaries), stacked via one
     explode to (query, id, ad) skinny rows.  Per-query k*rerank
-    candidates come from a row_number window Catalyst rewrites to a
-    two-phase WindowGroupLimit (partial top-k below the exchange — the
-    knn_batch plan shape), and the exact re-rank joins the bounded
-    survivor set back to the vector table with the broadcast query
-    vectors.  Output: (query_id, id, distance)."""
-    from pyspark.sql.window import Window
-
+    candidates and the final per-query top-k both come from
+    ``knn.top_n_per_query`` (a two-phase WindowGroupLimit, partial top-n
+    below the exchange — the knn_batch plan shape); the exact re-rank
+    joins the bounded survivor set back to the vector table with the
+    broadcast query vectors.  Output: (query_id, id, distance)."""
     ad_structs = [
         F.struct(
             F.lit(int(qid)).cast("long").alias("q"),
@@ -554,22 +551,14 @@ def pq_batch_search(
         F.col(id_col),
         F.col("__x.ad").alias("__ad"),
     )
-    wc = Window.partitionBy(q_id).orderBy(
-        F.col("__ad").asc(), F.col(id_col).asc()
-    )
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(wc))
-        .where(F.col("__rn") <= k * rerank)
-        .select(q_id, id_col)
+    cand = top_n_per_query(scored, k * rerank, q_id, "__ad", id_col).select(
+        q_id, id_col
     )
     qdf = codes.sparkSession.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         schema=f"{q_id} long, __qv array<double>",
     )
-    wr = Window.partitionBy(q_id).orderBy(
-        F.col("distance").asc(), F.col(id_col).asc()
-    )
-    return (
+    reranked = (
         emb.join(cand, id_col)
         .join(F.broadcast(qdf), q_id)
         .select(
@@ -579,27 +568,13 @@ def pq_batch_search(
                 euclidean_distance(F.col(vec_col), F.col("__qv")), 6
             ).alias("distance"),
         )
-        .withColumn("__rn", F.row_number().over(wr))
-        .where(F.col("__rn") <= k)
-        .select(q_id, id_col, "distance")
     )
+    return top_n_per_query(reranked, k, q_id, "distance", id_col)
 
 
 # ---------------------------------------------------------------------------
 # IVF-PQ: coarse cell probe + ADC within the probed cells
 # ---------------------------------------------------------------------------
-
-
-def ivfpq_probe_cells(
-    qvec: list[float],
-    cents: list[tuple[int, list[float]]],
-    nprobe: int,
-) -> list[int]:
-    """The nprobe nearest coarse cells, ranked driver-side (the centroid
-    set is tiny by construction); ties to the lowest cid."""
-    from javascript_vector_database_spark.operators.knn import _py_euclid
-
-    return [cid for _, cid in sorted((_py_euclid(c, qvec), cid) for cid, c in cents)[:nprobe]]
 
 
 def ivfpq_search_precomputed(
@@ -621,33 +596,19 @@ def ivfpq_search_precomputed(
     ``partitionBy(ivf_cell)`` layout this is partition pruning — entire
     directories skipped), ADC ranks the surviving ~nprobe/K of the corpus
     reading ONLY the code column (the float vector is column-pruned out),
-    and the k*rerank survivors broadcast-join back to the vector table
-    for the exact re-rank.  This is the compounding 100 TB story: I/O =
-    (nprobe/K_cells) x (M bytes per row) — both factors independent of
-    the full corpus width."""
-    from javascript_vector_database_spark.operators.ann_scale import N_PROBE
-
+    and ``knn.rerank_pool`` re-ranks the k*rerank best.  This is the
+    compounding 100 TB story: I/O = (nprobe/K_cells) x (M bytes per
+    row) — both factors independent of the full corpus width.  A query
+    whose length is not the centroids' raises a ValueError naming this
+    probe."""
     if nprobe is None:
         nprobe = N_PROBE
-    probe = ivfpq_probe_cells(qvec, cents, nprobe)
+    probe = ivf_probe_cells("ivfpq_search_precomputed", qvec, cents, nprobe)
     lut = py_pq_lut(qvec, codebook)
-    cand_ids = (
-        stored.where(F.col(cell_col).isin([int(c) for c in probe]))
-        .select(F.col(id_col), pq_adc_expr(F.col(code_col), lut).alias("__ad"))
-        .orderBy(F.col("__ad").asc(), F.col(id_col).asc())
-        .limit(k * rerank)
-        .select(id_col)
+    scored = stored.where(F.col(cell_col).isin(probe)).select(
+        F.col(id_col), pq_adc_expr(F.col(code_col), lut).alias("score")
     )
-    qv_lit = lit_double_array([float(x) for x in qvec])
-    return (
-        emb.join(F.broadcast(cand_ids), id_col)
-        .select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return rerank_pool(scored, emb, qvec, k * rerank, k, id_col, vec_col)
 
 
 def ivfpq_search(
@@ -664,9 +625,9 @@ def ivfpq_search(
     """IVF-PQ with write-time artifacts derived inline (cell assignment
     via the broadcast-codebook join shape, codes via pq_code_table): the
     convenience path; deployments store both columns and use
-    :func:`ivfpq_search_precomputed`."""
-    from javascript_vector_database_spark.operators.ann_scale import ivf_cell_expr
-
+    :func:`ivfpq_search_precomputed`.  A query whose length is not the
+    centroids' is refused before the artifacts are built."""
+    _pivot_distances("ivfpq_search", qvec, [c for _, c in cents])
     stored = emb.withColumn("ivf_cell", ivf_cell_expr(F.col(vec_col), cents)).select(
         id_col, "ivf_cell"
     ).join(pq_code_table(emb, codebook, id_col, vec_col), id_col)
@@ -686,9 +647,7 @@ def py_residual(vec: list[float], cents: list[tuple[int, list[float]]]) -> list[
     """Driver-side residual: v - nearest centroid (ties to the lowest
     cid, the ivf_cell_expr rule).  Element-wise subtraction — exact, no
     accumulation, so it matches the Column/SQL forms bit-for-bit."""
-    from javascript_vector_database_spark.operators.knn import _py_euclid
-
-    _, bcid = min((_py_euclid(c, vec), cid) for cid, c in cents)
+    bcid = ivf_probe_cells("py_residual", vec, cents, 1)[0]
     cent = dict(cents)[bcid]
     return [float(a) - float(b) for a, b in zip(vec, cent)]
 
@@ -705,8 +664,6 @@ def residual_table(
     subtraction against a 16-entry centroid map literal; at scale this
     IS the write path (store ivf_cell + the PQ codes of resid,
     partitioned by cell)."""
-    from javascript_vector_database_spark.operators.ann_scale import ivf_cell_expr
-
     cmap = F.map_from_arrays(
         F.array(*[F.lit(int(cid)).cast("long") for cid, _ in cents]),
         F.array(*[lit_double_array([float(x) for x in c]) for _, c in cents]),
@@ -738,10 +695,6 @@ def residual_codebook(
     Residuals concentrate near 0 with corpus structure removed, so the
     same K codewords quantize them much more tightly than raw vectors
     (the reason FAISS encodes residuals)."""
-    from javascript_vector_database_spark.operators.ann_scale import (
-        collect_centroids,
-    )
-
     sample = collect_centroids(emb, id_col, vec_col, k)
     return pq_codebook(
         [(cid, py_residual(v, cents)) for cid, v in sample], m=m
@@ -764,13 +717,13 @@ def ivfpq_residual_search(
     how the stored codes encode each vector's residual in its own cell.
     The probe set is an nprobe-way union of cell-filtered ADC branches —
     each branch is the same pruned code scan as ivfpq_search, just with
-    a cell-specific LUT literal — then one exact re-rank of the
-    k*rerank survivors.  ``codebook`` must come from
-    :func:`residual_codebook` (or residual training)."""
+    a cell-specific LUT literal — then ``knn.rerank_pool`` over the
+    k*rerank best.  ``codebook`` must come from :func:`residual_codebook`
+    (or residual training).  A query whose length is not the centroids'
+    is refused before anything is built."""
     if nprobe is None:
-        from javascript_vector_database_spark.operators.ann_scale import N_PROBE
-
         nprobe = N_PROBE
+    probe = ivf_probe_cells("ivfpq_residual_search", qvec, cents, nprobe)
     rt = residual_table(emb, cents, id_col, vec_col).localCheckpoint()
     m = len(codebook)
     if m > PQ_WIDE_M:
@@ -782,31 +735,16 @@ def ivfpq_residual_search(
         stored = rt.select(id_col, "ivf_cell").join(
             _pq_code_table_join(rt, codebook, id_col, "resid"), id_col
         )
-    probe = ivfpq_probe_cells(qvec, cents, nprobe)
     centd = {int(cid): c for cid, c in cents}
     branches = []
     for cid in probe:
-        qr = [float(a) - float(b) for a, b in zip(qvec, centd[int(cid)])]
+        qr = [float(a) - float(b) for a, b in zip(qvec, centd[cid])]
         lut = py_pq_lut(qr, codebook)
         branches.append(
-            stored.where(F.col("ivf_cell") == int(cid)).select(
+            stored.where(F.col("ivf_cell") == cid).select(
                 F.col(id_col),
-                pq_adc_expr(F.col("pq_code"), lut).alias("__ad"),
+                pq_adc_expr(F.col("pq_code"), lut).alias("score"),
             )
         )
-    cand_ids = (
-        reduce(lambda a, b: a.unionAll(b), branches)
-        .orderBy(F.col("__ad").asc(), F.col(id_col).asc())
-        .limit(k * rerank)
-        .select(id_col)
-    )
-    qv_lit = lit_double_array([float(x) for x in qvec])
-    return (
-        emb.join(F.broadcast(cand_ids), id_col)
-        .select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    scored = reduce(lambda a, b: a.unionAll(b), branches)
+    return rerank_pool(scored, emb, qvec, k * rerank, k, id_col, vec_col)

@@ -23,8 +23,8 @@ Engine-portable by construction:
 100 TB plan: materialize the code column at write time
 (``quantize_table``) and search with ``sq8_search_precomputed`` — phase 1
 scans ONLY the code column (column pruning: the wide float vector is
-never read), phase 2 broadcast-joins the tiny candidate id set back to
-the vector table for exact re-ranking.
+never read), phase 2 is ``knn.rerank_pool``, the exact re-rank every
+stored-code probe shares.
 """
 
 from __future__ import annotations
@@ -36,7 +36,7 @@ import pandas as pd
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
-from javascript_vector_database_spark.functions.vector import euclidean_distance
+from javascript_vector_database_spark.operators.knn import exact_knn, rerank_pool
 from javascript_vector_database_spark.pivots import TOP_K
 
 #: 8-bit range: codes in [0, 255]
@@ -94,6 +94,11 @@ def py_sq8_codes(vec: list[float], lo: float, hi: float) -> list[int]:
     ]
 
 
+def _int_array(values: list[int]) -> Column:
+    """An ``array<int>`` literal as one parsed expression."""
+    return F.expr(f"array({', '.join(str(int(v)) for v in values)})")
+
+
 def sq8_int_sqdist(codes_a: Column, codes_b: Column) -> Column:
     """Sum of squared code deltas — all-integer fold (exact, portable);
     the long accumulator never overflows (<= 255^2 * dim)."""
@@ -133,28 +138,23 @@ def sq8_search(
     vec_col: str = "embedding",
 ) -> DataFrame:
     """Quantized top-k: rank k*rerank candidates by integer code distance
-    (one scan -> TakeOrderedAndProject on a (long, id) key), then exact
-    euclidean re-rank of that bounded pool.  Output: (id, distance)."""
+    (one scan -> TakeOrderedAndProject on a (long, id) key), then
+    ``knn.exact_knn`` over that bounded pool.  Output: (id, distance).
+
+    No model fixes the dimension here: a query of another length than
+    the vectors gives null code distances, so the pool is the lowest ids
+    and every returned distance is null."""
     if lo is None or hi is None:
         lo, hi = sq8_params(emb, vec_col)
-    qcodes = py_sq8_codes(qvec, lo, hi)
-    qc_lit = F.array(*[F.lit(c) for c in qcodes])
+    qc = _int_array(py_sq8_codes(qvec, lo, hi))
     cand = (
         emb.withColumn(
-            "__qd", sq8_int_sqdist(sq8_code_expr(F.col(vec_col), lo, hi), qc_lit)
+            "__qd", sq8_int_sqdist(sq8_code_expr(F.col(vec_col), lo, hi), qc)
         )
         .orderBy(F.col("__qd").asc(), F.col(id_col).asc())
         .limit(k * rerank)
     )
-    qv_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        cand.select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return exact_knn(cand, qvec, k, id_col, vec_col)
 
 
 def sq8_search_precomputed(
@@ -169,31 +169,16 @@ def sq8_search_precomputed(
     vec_col: str = "embedding",
     code_col: str = "sq8_code",
 ) -> DataFrame:
-    """The compressed-scan layout made explicit: phase 1 ranks candidates
-    reading ONLY (id, code) from the stored code table — the float vector
-    column is never scanned (column pruning, pinned by the plan test);
-    phase 2 broadcast-joins the k*rerank surviving ids to the vector
-    table for the exact re-rank."""
-    qcodes = py_sq8_codes(qvec, lo, hi)
-    qc_lit = F.array(*[F.lit(c) for c in qcodes])
-    cand_ids = (
-        codes.select(
-            F.col(id_col), sq8_int_sqdist(F.col(code_col), qc_lit).alias("__qd")
-        )
-        .orderBy(F.col("__qd").asc(), F.col(id_col).asc())
-        .limit(k * rerank)
-        .select(id_col)
+    """The compressed-scan layout made explicit: phase 1 scores the
+    stored code table reading ONLY (id, code) — the float vector column
+    is never scanned (column pruning, pinned by the plan test); phase 2
+    is ``knn.rerank_pool`` over the k*rerank best.  A query of another
+    length gives what ``sq8_search`` gives."""
+    qc = _int_array(py_sq8_codes(qvec, lo, hi))
+    scored = codes.select(
+        F.col(id_col), sq8_int_sqdist(F.col(code_col), qc).alias("score")
     )
-    qv_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        emb.join(F.broadcast(cand_ids), id_col)
-        .select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    return rerank_pool(scored, emb, qvec, k * rerank, k, id_col, vec_col)
 
 
 # ---------------------------------------------------------------------------
@@ -291,8 +276,12 @@ def bq_search(
     recent vector stores; for unit-norm embeddings sign agreement
     tracks cosine): rank k*rerank candidates by hamming distance over
     dim/48 packed words — an XOR + popcount per word, the cheapest
-    possible probe scan — then exact euclidean re-rank of the bounded
-    pool.  Output: (id, distance), the sq8_search contract."""
+    possible probe scan — then ``knn.exact_knn`` over the bounded pool.
+    Output: (id, distance), the sq8_search contract.
+
+    No model fixes the dimension here: a query of another length than
+    the vectors is ranked on words packed from its own length, and every
+    returned distance is null."""
     dim = len(qvec)
     qwords = py_bq_words(qvec)
     if dim > BQ_WIDE_DIM:
@@ -313,27 +302,22 @@ def bq_search(
             vec_col,
             *[wexpr.alias(f"__bqw{i}") for i, wexpr in enumerate(words)],
         )
-    terms = [
-        F.expr(f"bit_count(__bqw{i} ^ CAST({qw} AS BIGINT))")
-        for i, qw in enumerate(qwords)
-    ]
-    hsum = terms[0]
-    for t in terms[1:]:
-        hsum = hsum + t
+    hd = _hamming_sql([f"__bqw{i}" for i in range(len(qwords))], qwords)
     cand = (
-        staged.withColumn("__hd", hsum.cast("long"))
+        staged.withColumn("__hd", F.expr(hd))
         .orderBy(F.col("__hd").asc(), F.col(id_col).asc())
         .limit(k * rerank)
     )
-    qv_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        cand.select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
+    return exact_knn(cand, qvec, k, id_col, vec_col)
+
+
+def _hamming_sql(words: list[str], qwords: list[int]) -> str:
+    """Hamming distance between the packed ``words`` (SQL expressions)
+    and the query's words, as one BIGINT SQL expression."""
+    terms = " + ".join(
+        f"bit_count({w} ^ CAST({qw} AS BIGINT))" for w, qw in zip(words, qwords)
     )
+    return f"CAST({terms} AS BIGINT)"
 
 
 def bq_table(
@@ -373,35 +357,16 @@ def bq_search_precomputed(
     vec_col: str = "embedding",
     words_col: str = "bq_words",
 ) -> DataFrame:
-    """The compressed-scan layout made explicit: phase 1 ranks by
+    """The compressed-scan layout made explicit: phase 1 scores by
     hamming distance reading ONLY (id, words) from the stored table —
-    the float vector column is never scanned — then the k*rerank
-    survivor ids broadcast-join back to the vector table for the exact
-    re-rank (the sq8_search_precomputed contract)."""
+    the float vector column is never scanned — and phase 2 is
+    ``knn.rerank_pool`` over the k*rerank best (the
+    sq8_search_precomputed contract).  As in ``bq_search``, a query of
+    another length than the vectors is ranked on words packed from its
+    own length, and every returned distance is null."""
     qwords = py_bq_words(qvec)
-    terms = [
-        F.expr(
-            f"bit_count(element_at({words_col}, {i + 1})"
-            f" ^ CAST({qw} AS BIGINT))"
-        )
-        for i, qw in enumerate(qwords)
-    ]
-    hsum = terms[0]
-    for t in terms[1:]:
-        hsum = hsum + t
-    cand_ids = (
-        words.select(F.col(id_col), hsum.cast("long").alias("__hd"))
-        .orderBy(F.col("__hd").asc(), F.col(id_col).asc())
-        .limit(k * rerank)
-        .select(id_col)
+    hd = _hamming_sql(
+        [f"element_at({words_col}, {i + 1})" for i in range(len(qwords))], qwords
     )
-    qv_lit = F.array(*[F.lit(float(x)) for x in qvec])
-    return (
-        emb.join(F.broadcast(cand_ids), id_col)
-        .select(
-            id_col,
-            F.round(euclidean_distance(F.col(vec_col), qv_lit), 6).alias("distance"),
-        )
-        .orderBy(F.col("distance").asc(), F.col(id_col).asc())
-        .limit(k)
-    )
+    scored = words.select(F.col(id_col), F.expr(hd).alias("score"))
+    return rerank_pool(scored, emb, qvec, k * rerank, k, id_col, vec_col)

@@ -13,9 +13,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark import oracle as osql
-from javascript_vector_database_spark.functions.vector import cosine_similarity
+from javascript_vector_database_spark.functions.vector import (
+    cosine_similarity,
+    lit_double_array,
+)
 from javascript_vector_database_spark.operators import ann_scale, quant
-from javascript_vector_database_spark.operators.knn import _py_euclid
+from javascript_vector_database_spark.operators.knn import exact_knn
 from javascript_vector_database_spark.pivots import TOP_K, pivot_sql_literal
 from javascript_vector_database_spark.registry import get_query_vec, register
 from javascript_vector_database_spark.tables import load_table
@@ -137,11 +140,12 @@ def knn_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     keeps the whole plan codegen-adjacent (no Python)."""
     qv = get_query_vec(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
     return (
         emb.select(
             "vec_id",
-            F.round(cosine_similarity(F.col("embedding"), qlit), 6).alias("cos_sim"),
+            F.round(
+                cosine_similarity(F.col("embedding"), lit_double_array(qv)), 6
+            ).alias("cos_sim"),
         )
         .orderBy(F.col("cos_sim").desc(), F.col("vec_id").asc())
         .limit(TOP_K)
@@ -798,9 +802,9 @@ def ann_sq8_search_precomputed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The SQ8 100 TB layout made explicit: codes materialized at WRITE
     time; the probe's candidate scan reads ONLY (id, code) — the float
     vector column is pruned from the read entirely (pinned by
-    tests/test_plans.py) — then the tiny survivor id set broadcast-joins
-    back for the exact re-rank.  Same result and oracle as
-    ``ann_sq8_search``."""
+    tests/test_plans.py) — then ``knn.rerank_pool`` reads the survivors'
+    vectors through one broadcast left-semi join and re-ranks them
+    exactly.  Same result and oracle as ``ann_sq8_search``."""
     import os
     import tempfile
 
@@ -969,8 +973,9 @@ def ann_pq_search_precomputed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The PQ 100 TB layout made explicit: codes materialized at WRITE
     time; the probe's candidate scan reads ONLY (id, pq_code) — the float
     vector column is pruned from the read (pinned by tests/test_plans.py)
-    — then the tiny survivor id set broadcast-joins back for the exact
-    re-rank.  Same result and oracle as ``ann_pq_search``."""
+    — then ``knn.rerank_pool`` reads the survivors' vectors through one
+    broadcast left-semi join and re-ranks them exactly.  Same result and
+    oracle as ``ann_pq_search``."""
     import os
     import tempfile
 
@@ -1378,26 +1383,15 @@ def ann_filtered_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     row keeps the two-table form the test corpus ships."""
     qv = get_query_vec(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
-    docs = (
+    return exact_knn(emb.join(_filtered_docs(spark, sf_dir), "vec_id"), qv)
+
+
+def _filtered_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The ids (as vec_id) of the documents the filtered rows keep."""
+    return (
         load_table(spark, sf_dir, "documents")
         .where(F.col("lang") == FILTER_LANG)
         .select(F.col("doc_id").alias("vec_id"))
-    )
-    from javascript_vector_database_spark.functions.vector import (
-        euclidean_distance,
-    )
-
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-    return (
-        emb.join(docs, "vec_id")
-        .select(
-            "vec_id",
-            F.round(euclidean_distance(F.col("embedding"), qlit), 6).alias(
-                "distance"
-            ),
-        )
-        .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .limit(TOP_K)
     )
 
 
@@ -1431,39 +1425,14 @@ def ann_ivf_filtered(spark: SparkSession, sf_dir: str) -> DataFrame:
     be fewer than k*cells would suggest — the oracle mirrors the same
     probe + intersect computation exactly.  The cell IN-list prunes
     partitions under a partitionBy(ivf_cell) layout; the predicate join
-    is an equi-join AQE is free to broadcast."""
+    is an equi-join AQE is free to broadcast.  The centroids are drawn
+    from the full corpus; ``ivf_search`` assigns, probes and re-ranks
+    the filtered rows."""
     qv = get_query_vec(spark, sf_dir)
     emb = load_table(spark, sf_dir, "embeddings")
     cents = ann_scale.collect_centroids(emb)
-    probed = sorted(
-        (_py_euclid(cemb, qv), cid) for cid, cemb in cents
-    )[: ann_scale.N_PROBE]
-    probe_ids = [cid for _, cid in probed]
-    docs = (
-        load_table(spark, sf_dir, "documents")
-        .where(F.col("lang") == FILTER_LANG)
-        .select(F.col("doc_id").alias("vec_id"))
-    )
-    from javascript_vector_database_spark.functions.vector import (
-        euclidean_distance,
-    )
-
-    qlit = F.array(*[F.lit(float(x)) for x in qv])
-    return (
-        emb.withColumn(
-            "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), cents)
-        )
-        .where(F.col("ivf_cell").isin(probe_ids))
-        .join(docs, "vec_id")
-        .select(
-            "vec_id",
-            F.round(euclidean_distance(F.col("embedding"), qlit), 6).alias(
-                "distance"
-            ),
-        )
-        .orderBy(F.col("distance").asc(), F.col("vec_id").asc())
-        .limit(TOP_K)
-    )
+    filtered = emb.join(_filtered_docs(spark, sf_dir), "vec_id")
+    return ann_scale.ivf_search(filtered, qv, cents=cents)
 
 
 @register("ann_bq_search_precomputed", oracle=_bq_search_oracle(ORACLE_DIM))
@@ -1471,8 +1440,9 @@ def ann_bq_search_precomputed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The BQ 100 TB layout made explicit: sign words packed at WRITE
     time into a stored (id, words) table; the probe's candidate scan
     reads ONLY that table (32x smaller than the floats, which are never
-    scanned in phase 1), then the k*rerank survivor ids broadcast-join
-    back for the exact re-rank.  Same result and oracle as
+    scanned in phase 1), then ``knn.rerank_pool`` reads the k*rerank
+    survivors' vectors through one broadcast left-semi join and re-ranks
+    them exactly.  Same result and oracle as
     ``ann_bq_search`` — the family-completing twin of
     ann_sq8/pq/lsh_search_precomputed."""
     import os

@@ -15,7 +15,7 @@ SF_ORACLE = "/root/testdata/sf0.01"
 
 @pytest.fixture(scope="session")
 def spark():
-    s = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_TEST_CPUS", "8")))
+    s = get_spark(cpus=int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count()))
     yield s
 
 

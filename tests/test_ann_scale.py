@@ -170,10 +170,9 @@ def test_ivf_kmeans_centroids_plug_in(spark, sf_oracle):
     qv = registry.get_query_vec(spark, sf_oracle)
     # probe search over kmeans cells: returned distances are exact and
     # rank-dominated by the true top-k
-    probed = sorted(
-        (ann_scale._py_euclid(c, qv), cid) for cid, c in cents
-    )[: ann_scale.N_PROBE]
-    probe_ids = [cid for _, cid in probed]
+    probe_ids = ann_scale.ivf_probe_cells(
+        "kmeans_probe", qv, cents, ann_scale.N_PROBE
+    )
     hits = (
         emb.join(assign, "vec_id")
         .where(F.col("ivf_cell").isin(probe_ids))

@@ -256,33 +256,58 @@ def test_lsh_search_precomputed_matches_inline(spark, tmp_path):
     assert "PushedFilters: [" in plan
 
 
-def test_sq8_precomputed_scan_prunes_vector_column(spark, tmp_path):
-    """The SQ8 compressed-scan claim: the candidate-ranking scan over the
-    stored code table reads ONLY (id, code) — the float vector column
-    never appears in its ReadSchema — and the end result equals the
-    inline-quantization path."""
+@pytest.mark.parametrize("kind", ["sq8", "pq", "bq"])
+def test_stored_code_probe_plan(spark, tmp_path, kind):
+    """The compressed-scan claim, for every stored-code probe: the scan
+    of the stored code table reads ONLY (id, code) — the float vector
+    column never appears in its ReadSchema — the k*rerank pool reaches
+    the vector table through exactly one broadcast left-semi join, the
+    exact top-k is the top of the plan, and the rows equal the
+    inline-coding path's."""
+    from javascript_vector_database_spark.operators import pq as pqm
     from javascript_vector_database_spark.operators import quant
 
     emb = load_table(spark, SF, "embeddings")
     qv = registry.get_query_vec(spark, SF)
-    lo, hi = quant.sq8_params(emb)
-    path = str(tmp_path / "sq8_codes")
+    vec = F.col("embedding")
+    if kind == "sq8":
+        lo, hi = quant.sq8_params(emb)
+        code_col, code = "sq8_code", quant.sq8_code_expr(vec, lo, hi)
+        want = quant.sq8_search(emb, qv)
+
+        def probe(stored):
+            return quant.sq8_search_precomputed(stored, emb, qv, lo, hi)
+    elif kind == "pq":
+        cb = pqm.pq_codebook(ann_scale.collect_centroids(emb, k=pqm.PQ_K))
+        code_col, code = "pq_code", pqm.pq_code_expr(vec, cb)
+        want = pqm.pq_search(emb, qv, cb)
+
+        def probe(stored):
+            return pqm.pq_search_precomputed(stored, emb, qv, cb)
+    else:
+        code_col = "bq_words"
+        code = F.array(*quant.bq_word_exprs(vec, len(qv)))
+        want = quant.bq_search(emb, qv)
+
+        def probe(stored):
+            return quant.bq_search_precomputed(stored, emb, qv)
+    path = str(tmp_path / f"{kind}_codes")
     # store codes NEXT TO the vector (the deployment shape): pruning, not
     # a separate table, is what keeps the vector out of the probe scan
-    emb.withColumn(
-        "sq8_code", quant.sq8_code_expr(F.col("embedding"), lo, hi)
-    ).write.parquet(path)
-    stored = spark.read.parquet(path)
-
-    got = quant.sq8_search_precomputed(stored, emb, qv, lo, hi)
-    want = quant.sq8_search(emb, qv)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-
-    cand_scan = stored.select("vec_id", "sq8_code")
-    read = _plan(cand_scan).split("ReadSchema: ", 1)[1].splitlines()[0]
-    assert "embedding" not in read
-    # and the full precomputed plan broadcasts the tiny candidate set
-    assert "BroadcastHashJoin" in _plan(got)
+    emb.withColumn(code_col, code).write.parquet(path)
+    got = probe(spark.read.parquet(path))
+    plan = _plan(got)  # before the collect: the initial plan only
+    assert [tuple(r) for r in got.collect()] == [
+        tuple(r) for r in want.collect()
+    ]
+    reads = [p.splitlines()[0] for p in plan.split("ReadSchema: ")[1:]]
+    code_reads = [r for r in reads if code_col in r]
+    assert code_reads and all("embedding" not in r for r in code_reads), reads
+    joins = [ln for ln in plan.splitlines() if "BroadcastHashJoin" in ln]
+    assert len(joins) == 1 and "LeftSemi" in joins[0], plan
+    ops = [ln.lstrip(" +-:") for ln in plan.splitlines()]
+    top = next(op for op in ops if not op.startswith("AdaptiveSparkPlan"))
+    assert top.startswith("TakeOrderedAndProject"), plan
 
 
 def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
@@ -313,33 +338,6 @@ def test_bucketed_tables_join_without_shuffle(spark, tmp_path):
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
         spark.sql("DROP TABLE IF EXISTS b_emb")
         spark.sql("DROP TABLE IF EXISTS b_docs")
-
-
-def test_pq_precomputed_scan_prunes_vector_column(spark, tmp_path):
-    """The PQ compressed-scan claim: the ADC candidate scan over the
-    stored code table reads ONLY (id, pq_code) — the float vector column
-    never appears in its ReadSchema — and the end result equals the
-    inline-encoding path."""
-    from javascript_vector_database_spark.operators import ann_scale
-    from javascript_vector_database_spark.operators import pq as pqm
-
-    emb = load_table(spark, SF, "embeddings")
-    qv = registry.get_query_vec(spark, SF)
-    cb = pqm.pq_codebook(ann_scale.collect_centroids(emb, k=pqm.PQ_K))
-    path = str(tmp_path / "pq_codes")
-    emb.withColumn("pq_code", pqm.pq_code_expr(F.col("embedding"), cb)).write.parquet(
-        path
-    )
-    stored = spark.read.parquet(path)
-
-    got = pqm.pq_search_precomputed(stored, emb, qv, cb)
-    want = pqm.pq_search(emb, qv, cb)
-    assert [tuple(r) for r in got.collect()] == [tuple(r) for r in want.collect()]
-
-    cand_scan = stored.select("vec_id", "pq_code")
-    read = _plan(cand_scan).split("ReadSchema: ", 1)[1].splitlines()[0]
-    assert "embedding" not in read
-    assert "BroadcastHashJoin" in _plan(got)
 
 
 def test_ivfpq_partitioned_prunes_cells_and_columns(spark):
