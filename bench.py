@@ -5,13 +5,41 @@ recall@10 vs exact, ANN-similarity sec/query, docs-read ratio, pipeline
 throughput (embed+index+merge docs/s), bulk-load throughput, plus the
 wider relational/dedup headline queries.
 
+Columns: ``queries`` (the sf_dir headline), ``sf1_queries`` (10x) and
+``sf30_queries`` (30x) are each one ``_column`` call.  The ``extra``
+map is measured in this order in ``main``:
+
+* calibration: ``calib_*`` at the start and ``calib_*_end`` at the end;
+* the gate block (``_gate_attempt``, re-run while the box self-flags):
+  pipeline docs/s, bulk-load rows/s, the exact / range / tuned /
+  similarity probes and the two docs-read ratios;
+* the stored pivot index: ``ann_*_indexed_sec_per_query`` and the
+  ``pivot_idx_*`` build, prunable-fraction and LSM append/compact keys;
+* scale-path ANN on the sf_dir corpus: ``ivf_*`` (``ivf_radius_*`` and
+  ``ivf_lloyd_*`` included), ``radius_cells_pruned_frac_*``, ``lsh_*``,
+  ``sq8_*``, ``pq_*``;
+* reference geometry (the 384-dim fixture): ``ivf384_*``, ``sq8_384_*``,
+  ``bq_384_*``, ``pq_384_*``, ``ivfpq_384_*``;
+* ``batch_knn_sec_per_query``, one job for all queries;
+* layout: the ``zorder*`` / ``timesort*`` prunable fractions;
+* phase splits (``_phase_split``): ``ktruss_*`` / ``hits_*`` on sf_dir
+  before the headline, ``ktruss30_*`` / ``hits30_*`` after the 30x column.
+
+Every per-query probe extra is one ``_extra`` call: best-of-2
+``<name>_sec_per_query`` and ``<name>_recall_at_10`` against the exact
+top-10, the way the reference scores each search strategy
+(src/search.ts:5-17).
+
 Env: $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-$SPARK_GRAFT_CPUS (default 32).
+$SPARK_GRAFT_CPUS (default 32), $SPARK_GRAFT_SKIP_SCALE=1 skips the
+10x/30x columns.
 """
 
 from __future__ import annotations
 
+import datetime
 import json
+import math
 import os
 import shutil
 import sys
@@ -25,8 +53,13 @@ from pyspark.sql import functions as F  # noqa: E402
 from javascript_vector_database_spark import get_spark, registry  # noqa: E402
 from javascript_vector_database_spark.functions.embedding import embed_udf  # noqa: E402
 from javascript_vector_database_spark.operators import knn  # noqa: E402
+from javascript_vector_database_spark.operators import layout  # noqa: E402
 from javascript_vector_database_spark.operators.dml import ParquetTable  # noqa: E402
-from javascript_vector_database_spark.pivots import make_pivots  # noqa: E402
+from javascript_vector_database_spark.pivots import (  # noqa: E402
+    INDEX_DISTANCE,
+    TUNED_INDEX_DISTANCE,
+    make_pivots,
+)
 from javascript_vector_database_spark.streaming.pipeline import (  # noqa: E402
     Pipeline,
     anti_join_new,
@@ -62,8 +95,7 @@ def _timed_best2(fn, label: str | None = None):
     """min-of-2 timing (outputs are deterministic, so the first run's
     result is kept): a 32-thread local JVM takes multi-second GC pauses
     that land on arbitrary queries — the r6->r7 record showed every extras
-    metric drifting ~1.4-1.6x in lockstep from exactly this, so the
-    extras loops get the same treatment as the headline/10x passes.
+    metric drifting ~1.4-1.6x in lockstep from exactly this.
     ``label`` (the extras metric name) opts into contention flagging."""
     t1, out = _timed(fn)
     t2, _ = _timed(fn)
@@ -72,9 +104,144 @@ def _timed_best2(fn, label: str | None = None):
     return min(t1, t2), out
 
 
+def _extra(store: dict, name: str, probe, queries: list,
+           truth: list[set] | None = None, timed: bool = True) -> list[set]:
+    """Run ``probe(q)`` for every query and return the ``vec_id`` set of
+    each.  When ``timed``, the loop is timed best of 2 and
+    ``<name>_sec_per_query`` is stored (and contention-flagged under that
+    label); otherwise it runs once.  With ``truth`` (the exact top-10
+    sets) ``<name>_recall_at_10`` is stored: the mean of |a ∩ e| / |e|."""
+    def run():
+        return [{r["vec_id"] for r in probe(q).collect()} for q in queries]
+
+    if timed:
+        label = f"{name}_sec_per_query"
+        t, sets = _timed_best2(run, label=label)
+        store[label] = t / len(queries)
+    else:
+        sets = run()
+    if truth is not None:
+        store[f"{name}_recall_at_10"] = sum(
+            len(a & e) / len(e) for a, e in zip(sets, truth)
+        ) / len(queries)
+    return sets
+
+
+def _column(spark, names: list[str], data_dir: str):
+    """Best-of-2 wall time of each registered row over ``data_dir``, and
+    the rows whose two runs disagreed >2x (``_flag_contended``).  The
+    min of two runs reports a row's cost instead of a GC pause or AQE
+    re-plan it absorbed: single passes swung up to ~3x between clean
+    runs of identical code."""
+    times: dict[str, float] = {}
+    contended: dict[str, float] = {}
+    for name in names:
+        fn = registry.queries()[name]
+
+        def run():
+            return fn(spark, data_dir).collect()
+
+        t1, _ = _timed(run)
+        t2, _ = _timed(run)
+        times[name] = round(min(t1, t2), 4)
+        _flag_contended(contended, name, t1, t2)
+    return times, contended
+
+
+def _phase_split(store: dict, spark, data_dir: str, tag: str) -> None:
+    """k-truss and HITS wall time split by phase, best of 2 each:
+    ``ktruss{tag}_weight_agg_sec`` (the one corpus-linear aggregation)
+    vs ``ktruss{tag}_peel_sec`` (a constant-size peel over the capped
+    edges), and ``hits{tag}_edges_sec`` (edge build) vs
+    ``hits{tag}_iterate_sec`` (the iteration).  A combined row's scale
+    ratio cannot say which phase grew; these can."""
+    from javascript_vector_database_spark.operators import graph
+    from javascript_vector_database_spark.registry import decorrelated as dc
+
+    def phase(key: str, fn):
+        store[key], out = _timed_best2(fn, label=key)
+        return out
+
+    capped = phase(
+        f"ktruss{tag}_weight_agg_sec",
+        lambda: dc._ktruss_capped_edges(spark, data_dir),
+    )
+    phase(
+        f"ktruss{tag}_peel_sec",
+        lambda: graph.ktruss_peel(
+            capped, k=dc._KTRUSS_CAP_K, rounds=dc._KTRUSS_ROUNDS
+        )
+        .orderBy(
+            F.col("support").desc(), F.col("src").asc(), F.col("dst").asc()
+        )
+        .limit(20)
+        .collect(),
+    )
+    edges = phase(
+        f"hits{tag}_edges_sec", lambda: dc._hits_edges(spark, data_dir)
+    )
+    phase(
+        f"hits{tag}_iterate_sec",
+        lambda: graph.hits(edges)
+        .orderBy(F.col("authority").desc(), F.col("node").asc())
+        .limit(20)
+        .collect(),
+    )
+
+
+def _pivot_prunable_frac(
+    index_dir: str, query_vec: list[float], pivots: list[list[float]]
+) -> float:
+    """Mean over the stored per-pivot index tables of the fraction of
+    row groups the query's band skips on footer min/max alone."""
+    bands = knn.pivot_bands(
+        "pivot_idx_prunable_frac", query_vec, pivots, INDEX_DISTANCE
+    )
+    fracs = []
+    for i, band in enumerate(bands):
+        key = f"idx{i}"
+        stats = layout.rowgroup_minmax_stats(
+            os.path.join(index_dir, key), [key]
+        )
+        fracs.append(layout.prunable_fraction(stats, {key: band}))
+    return sum(fracs) / len(fracs)
+
+
+def _write_docs(spark, data_dir: str, path: str) -> int:
+    """Write ``data_dir``'s documents at ``path`` as a pipeline source;
+    returns their count."""
+    docs = load_table(spark, data_dir, "documents").select(
+        F.col("doc_id").alias("id"),
+        F.col("text").alias("body"),
+        F.col("doc_id").cast("double").alias("_lwt"),
+    )
+    docs.write.parquet(path)
+    return docs.count()
+
+
+def _pipeline(spark, name: str, src: str, tmp: str, tag: str, dim: int,
+              pivots: list[list[float]], **kw) -> Pipeline:
+    """A bench pipeline from the doc source ``src`` into a fresh
+    ``tmp/<tag>_vec`` table: each batch embeds the docs not yet there
+    and adds their pivot-index columns."""
+    dest = ParquetTable(spark, os.path.join(tmp, f"{tag}_vec"), "id")
+
+    def handler(batch):
+        new = anti_join_new(batch, dest, "id", "id")
+        e = new.withColumn("embedding", embed_udf(dim)(F.col("body")))
+        return knn.build_pivot_index(e, pivots).select(
+            "id", "embedding", *[f"idx{i}" for i in range(len(pivots))]
+        )
+
+    return Pipeline(
+        spark, name, src, dest, handler, os.path.join(tmp, f"{tag}_cp"),
+        source_pk="id", **kw,
+    )
+
+
 #: the contract extras the 2x baseline gate grades, and the bounded
-#: self-correction knobs (r13, r12 verdict ask #2) — see the gate block
-#: in main() for the full rationale
+#: self-correction knobs (r13, r12 verdict ask #2) — see
+#: _gate_should_retry and _merge_gate_attempts
 GATE_MAX_ATTEMPTS = 3
 GATE_DRIFT_RETRY = 1.5
 GATE_THROUGHPUT = ("pipeline_docs_per_sec", "bulk_load_rows_per_sec")
@@ -97,11 +264,11 @@ def _gate_should_retry(
     drift probe ran slow vs the start calib, any gate row's best-of-2
     disagreed >2x, or (first attempt only) the start probe itself was
     still contended after its bounded re-probes."""
-    if drift > retry_threshold:
-        return True
-    if flags:
-        return True
-    return attempt_idx == 0 and start_contended
+    return (
+        drift > retry_threshold
+        or bool(flags)
+        or (attempt_idx == 0 and start_contended)
+    )
 
 
 def _merge_gate_attempts(
@@ -275,9 +442,8 @@ _SCALE_HEADLINE = [
 #: the 30x linearity subset (r9 verdict ask #2): the shuffle-heaviest
 #: rows, so time-vs-scale is MEASURED at 1x/10x/30x instead of
 #: extrapolated from 10x.  Facts only — dims stay broadcast-sized.
-#: Best-of-2 per row, same as every other column (see the loop below):
-#: a single inflated 30x sample would read as a false scale cliff in
-#: exactly the column built to rule cliffs out.
+#: Best-of-2 per row like every column (``_column``): one inflated 30x
+#: sample would read as a false scale cliff.
 _SCALE30_HEADLINE = [
     "graph_hits_authorities",
     "graph_ktruss_capped",
@@ -393,6 +559,7 @@ def main() -> None:
         or "calib_shuffle_sec" in _CONTENDED_EXTRA
     )
 
+
     emb = load_table(spark, sf_dir, "embeddings")
     n_vec = emb.count()
     dim = len(emb.select("embedding").first()[0])
@@ -405,33 +572,15 @@ def main() -> None:
         for r in emb.orderBy("vec_id").limit(N_SEARCH_QUERIES).collect()
     ]
 
-    # GATE-METRIC ORDERING (r11 verdict ask #4): the contract extras
-    # the 2x baseline gate grades (pipeline/bulk/knn/ann families) are
-    # timed FIRST, immediately after the start calibration probe --
-    # before the ~200-row headline pass and the 10x/30x columns age
-    # the JVM or a co-tenant ramps.  gate_calib_cpu_sec (probed at the
-    # end of every attempt) + gate_calib_drift make the gate numbers
-    # self-defending: a drifted box is machine-readable in the
-    # artifact, not an appendix anecdote.
-    #
-    # r13 (r12 verdict ask #2): self-CORRECTING, not just self-
-    # defending.  The whole gate block runs as an attempt; the block
-    # re-runs on the same warmed JVM (bounded) when the box self-flags:
-    # the start probe was contended, the attempt's own drift probe read
-    # > GATE_DRIFT_RETRY vs the start calib, or any gate row's
-    # best-of-2 disagreed >2x.  Per metric the recorded value is the
-    # best across attempts — contention is one-sided noise, the same
-    # justification as best-of-2 — and when >1 attempt ran, every
-    # attempt's full metric set + contended flags ship in
-    # gate_attempt_metrics / gate_attempt_contended for audit.
-    # <m>_drift_normalized columns (scaled by the cleanest attempt's
-    # same-run drift) give the driver a gateable number even when the
-    # box never quiets inside the attempt budget.
+    # The contract extras the 2x baseline gate grades (pipeline/bulk/
+    # knn/ann) are timed FIRST, right after the start calibration and
+    # before the headline pass and the scale columns age the JVM.  The
+    # block runs as an attempt and re-runs on the same warmed JVM,
+    # bounded, while the box self-flags (_gate_should_retry); the
+    # attempts fold into the metrics of record in _merge_gate_attempts.
     _gate_labels = (
         set(GATE_THROUGHPUT) | set(GATE_LATENCY) | {"gate_calib_cpu_sec"}
     )
-
-    from javascript_vector_database_spark.pivots import TUNED_INDEX_DISTANCE
 
     gate_sets: dict[str, list] = {}
 
@@ -454,63 +603,23 @@ def main() -> None:
                 # ~340-375 docs/s (confirmed by three r12 solo runs) —
                 # NOT the 540 single-run anecdote; treat that range as
                 # the expectation when reading this column.
-                _warm_sf = os.path.join(
+                warm_sf = os.path.join(
                     os.path.dirname(sf_dir.rstrip("/")), "sf0.001"
                 )
-                if os.path.isdir(_warm_sf):
-                    _wdocs = load_table(spark, _warm_sf, "documents").select(
-                        F.col("doc_id").alias("id"),
-                        F.col("text").alias("body"),
-                        F.col("doc_id").cast("double").alias("_lwt"),
-                    )
-                    _wsrc = os.path.join(tmp, "warm_items")
-                    _wdocs.write.parquet(_wsrc)
-                    _wdest = ParquetTable(
-                        spark, os.path.join(tmp, "warm_vec"), "id"
-                    )
-
-                    def _whandler(batch):
-                        new = anti_join_new(batch, _wdest, "id", "id")
-                        e = new.withColumn(
-                            "embedding", embed_udf(dim)(F.col("body"))
-                        )
-                        return knn.build_pivot_index(e, pivots).select(
-                            "id", "embedding",
-                            *[f"idx{i}" for i in range(len(pivots))],
-                        )
-
-                    Pipeline(
-                        spark, "bench_warm", _wsrc, _wdest, _whandler,
-                        os.path.join(tmp, "warm_cp"), source_pk="id",
+                if os.path.isdir(warm_sf):
+                    warm_src = os.path.join(tmp, "warm_items")
+                    _write_docs(spark, warm_sf, warm_src)
+                    _pipeline(
+                        spark, "bench_warm", warm_src, tmp, "warm", dim,
+                        pivots,
                     ).await_idle()
 
-            docs = load_table(spark, sf_dir, "documents").select(
-                F.col("doc_id").alias("id"),
-                F.col("text").alias("body"),
-                F.col("doc_id").cast("double").alias("_lwt"),
-            )
             src_path = os.path.join(tmp, "items")
-            docs.write.parquet(src_path)
-            n_docs = docs.count()
+            n_docs = _write_docs(spark, sf_dir, src_path)
 
             def run_pipeline(run: int) -> float:
-                dest = ParquetTable(
-                    spark, os.path.join(tmp, f"vectors{run}"), "id"
-                )
-
-                def handler(batch):
-                    new = anti_join_new(batch, dest, "id", "id")
-                    e = new.withColumn(
-                        "embedding", embed_udf(dim)(F.col("body"))
-                    )
-                    return knn.build_pivot_index(e, pivots).select(
-                        "id", "embedding",
-                        *[f"idx{i}" for i in range(len(pivots))],
-                    )
-
-                pipe = Pipeline(
-                    spark, "bench", src_path, dest, handler,
-                    os.path.join(tmp, f"cp{run}"), source_pk="id",
+                pipe = _pipeline(
+                    spark, "bench", src_path, tmp, f"run{run}", dim, pivots,
                     batch_size=max(1000, n_docs // 4),
                 )
                 t, total = _timed(pipe.await_idle)
@@ -537,93 +646,42 @@ def main() -> None:
         finally:
             shutil.rmtree(tmp, ignore_errors=True)
 
-        # exact kNN
-        t, gate_sets["exact"] = _timed_best2(
-            lambda: [
-                {r["vec_id"] for r in knn.exact_knn(emb, qv).collect()}
-                for qv in qvecs
-            ],
-            label="knn_exact_sec_per_query",
+        exact = gate_sets["exact"] = _extra(
+            g, "knn_exact", lambda qv: knn.exact_knn(emb, qv), qvecs
         )
-        g["knn_exact_sec_per_query"] = t / len(qvecs)
-
-        # ANN range (precomputed index) + recall
-        t, gate_sets["ann"] = _timed_best2(
-            lambda: [
-                {
-                    r["vec_id"]
-                    for r in knn.ann_index_range(
-                        indexed, qv, pivots, precomputed=True
-                    ).collect()
-                }
-                for qv in qvecs
-            ],
-            label="ann_range_sec_per_query",
+        gate_sets["ann"] = _extra(
+            g, "ann_range",
+            lambda qv: knn.ann_index_range(
+                indexed, qv, pivots, precomputed=True
+            ),
+            qvecs, exact,
         )
-        g["ann_range_sec_per_query"] = t / len(qvecs)
-        g["ann_range_recall_at_10"] = sum(
-            len(a & e) / len(e)
-            for a, e in zip(gate_sets["ann"], gate_sets["exact"])
-        ) / len(qvecs)
-
         # tuned band (r10): the band knob demonstrated — recall/docs-read
         # at pivots.TUNED_INDEX_DISTANCE alongside the faithful 0.003 row
-        t, gate_sets["tuned"] = _timed_best2(
-            lambda: [
-                {
-                    r["vec_id"]
-                    for r in knn.ann_index_range(
-                        indexed,
-                        qv,
-                        pivots,
-                        index_distance=TUNED_INDEX_DISTANCE,
-                        precomputed=True,
-                    ).collect()
-                }
-                for qv in qvecs
-            ],
-            label="ann_range_tuned_sec_per_query",
-        )
-        g["ann_range_tuned_sec_per_query"] = t / len(qvecs)
-        g["ann_range_tuned_recall_at_10"] = sum(
-            len(a & e) / len(e)
-            for a, e in zip(gate_sets["tuned"], gate_sets["exact"])
-        ) / len(qvecs)
-        g["ann_range_tuned_docs_read_ratio"] = (
-            knn.candidate_count(
-                indexed,
-                qvecs[0],
-                pivots,
-                index_distance=TUNED_INDEX_DISTANCE,
+        _extra(
+            g, "ann_range_tuned",
+            lambda qv: knn.ann_index_range(
+                indexed, qv, pivots, index_distance=TUNED_INDEX_DISTANCE,
                 precomputed=True,
-            )
-            / n_vec
+            ),
+            qvecs, exact,
         )
-
-        # ANN similarity
-        t, gate_sets["sim"] = _timed_best2(
-            lambda: [
-                {
-                    r["vec_id"]
-                    for r in knn.ann_index_similarity(
-                        indexed, qv, pivots, precomputed=True
-                    ).collect()
-                }
-                for qv in qvecs
-            ],
-            label="ann_similarity_sec_per_query",
+        g["ann_range_tuned_docs_read_ratio"] = knn.candidate_count(
+            indexed, qvecs[0], pivots, index_distance=TUNED_INDEX_DISTANCE,
+            precomputed=True,
+        ) / n_vec
+        gate_sets["sim"] = _extra(
+            g, "ann_similarity",
+            lambda qv: knn.ann_index_similarity(
+                indexed, qv, pivots, precomputed=True
+            ),
+            qvecs, exact,
         )
-        g["ann_similarity_sec_per_query"] = t / len(qvecs)
-        g["ann_similarity_recall_at_10"] = sum(
-            len(a & e) / len(e)
-            for a, e in zip(gate_sets["sim"], gate_sets["exact"])
-        ) / len(qvecs)
 
         # docs-read ratio for the range ANN (reference docReads metric)
-        reads = knn.candidate_count(
+        g["ann_docs_read_ratio"] = knn.candidate_count(
             indexed, qvecs[0], pivots, precomputed=True
-        )
-        g["ann_docs_read_ratio"] = reads / n_vec
+        ) / n_vec
 
         # attempt-local drift probe: the same fixed CPU workload as the
         # start calib, timed right where the gate numbers ended
@@ -665,65 +723,43 @@ def main() -> None:
     # Timed beside the recompute-per-query ann_range row, with the
     # footer-stats fraction of row groups the band skips (the index's
     # measured I/O value -- r11 verdict: "measured, not asserted").
-    from javascript_vector_database_spark.operators import layout as _lay
-    from javascript_vector_database_spark.pivots import INDEX_DISTANCE
-
     pividx_dir = tempfile.mkdtemp(prefix="bench_pividx_")
     try:
-        t, _ = _timed(
+        results["pivot_idx_build_sec"], _ = _timed(
             lambda: knn.write_pivot_index_tables(
                 emb, pivots, pividx_dir
             )
         )
-        results["pivot_idx_build_sec"] = t
         # open the table handles once (the reference holds its
         # collections open for the process lifetime; listing/footer
         # resolution is not part of the probe)
         _idx_tabs = knn.open_pivot_index_tables(
             spark, pividx_dir, len(pivots)
         )
-        t, idx_sets = _timed_best2(
-            lambda: [
-                {
-                    r["vec_id"]
-                    for r in knn.ann_index_range_stored(
-                        spark, pividx_dir, qv, pivots, tables=_idx_tabs
-                    ).collect()
-                }
-                for qv in qvecs
-            ],
-            label="ann_range_indexed_sec_per_query",
+        idx_sets = _extra(
+            results, "ann_range_indexed",
+            lambda qv: knn.ann_index_range_stored(
+                spark, pividx_dir, qv, pivots, tables=_idx_tabs
+            ),
+            qvecs,
         )
-        results["ann_range_indexed_sec_per_query"] = t / len(qvecs)
         assert idx_sets == ann_sets, "stored index != recomputed index"
-        fracs = []
-        for i, p in enumerate(pivots):
-            d_i = knn._py_euclid(p, qvecs[0])
-            band = (d_i - d_i * INDEX_DISTANCE, d_i + d_i * INDEX_DISTANCE)
-            stats = _lay.rowgroup_minmax_stats(
-                os.path.join(pividx_dir, f"idx{i}"), [f"idx{i}"]
-            )
-            fracs.append(_lay.prunable_fraction(stats, {f"idx{i}": band}))
-        results["pivot_idx_prunable_frac"] = sum(fracs) / len(fracs)
+        results["pivot_idx_prunable_frac"] = _pivot_prunable_frac(
+            pividx_dir, qvecs[0], pivots
+        )
 
         # the SECOND search mode over the same stored tables
         # (vectorSearchIndexSimilarity, src/search.ts:56-109) — the
         # steady-state probe beside the registered
         # knn_ann_similarity_indexed row (whose headline time includes
         # its in-row index build)
-        t, simidx_sets = _timed_best2(
-            lambda: [
-                {
-                    r["vec_id"]
-                    for r in knn.ann_index_similarity_stored(
-                        spark, pividx_dir, qv, pivots, tables=_idx_tabs
-                    ).collect()
-                }
-                for qv in qvecs
-            ],
-            label="ann_similarity_indexed_sec_per_query",
+        simidx_sets = _extra(
+            results, "ann_similarity_indexed",
+            lambda qv: knn.ann_index_similarity_stored(
+                spark, pividx_dir, qv, pivots, tables=_idx_tabs
+            ),
+            qvecs,
         )
-        results["ann_similarity_indexed_sec_per_query"] = t / len(qvecs)
         assert simidx_sets == sim_sets, (
             "stored similarity != recomputed similarity"
         )
@@ -756,42 +792,25 @@ def main() -> None:
             pivots, lsm_dir,
         )
 
-        def _lsm_frac() -> float:
-            fr = []
-            for i, p in enumerate(pivots):
-                d_i = knn._py_euclid(p, qvecs[0])
-                band = (
-                    d_i - d_i * INDEX_DISTANCE,
-                    d_i + d_i * INDEX_DISTANCE,
-                )
-                stats = _lay.rowgroup_minmax_stats(
-                    os.path.join(lsm_dir, f"idx{i}"), [f"idx{i}"]
-                )
-                fr.append(
-                    _lay.prunable_fraction(stats, {f"idx{i}": band})
-                )
-            return sum(fr) / len(fr)
+        def _lsm_ids() -> set:
+            return {
+                r["vec_id"]
+                for r in knn.ann_index_range_stored(
+                    spark, lsm_dir, qvecs[0], pivots
+                ).collect()
+            }
 
-        results["pivot_idx_prunable_frac_appended"] = _lsm_frac()
-        app_set = {
-            r["vec_id"]
-            for r in knn.ann_index_range_stored(
-                spark, lsm_dir, qvecs[0], pivots
-            ).collect()
-        }
-        assert app_set == ann_sets[0], "appended stored != recomputed"
-        t, _ = _timed(
+        results["pivot_idx_prunable_frac_appended"] = _pivot_prunable_frac(
+            lsm_dir, qvecs[0], pivots
+        )
+        assert _lsm_ids() == ann_sets[0], "appended stored != recomputed"
+        results["pivot_idx_compact_sec"], _ = _timed(
             lambda: knn.compact_pivot_index_tables(spark, lsm_dir)
         )
-        results["pivot_idx_compact_sec"] = t
-        results["pivot_idx_prunable_frac_compacted"] = _lsm_frac()
-        comp_set = {
-            r["vec_id"]
-            for r in knn.ann_index_range_stored(
-                spark, lsm_dir, qvecs[0], pivots
-            ).collect()
-        }
-        assert comp_set == ann_sets[0], "compacted stored != recomputed"
+        results["pivot_idx_prunable_frac_compacted"] = _pivot_prunable_frac(
+            lsm_dir, qvecs[0], pivots
+        )
+        assert _lsm_ids() == ann_sets[0], "compacted stored != recomputed"
     finally:
         shutil.rmtree(lsm_dir, ignore_errors=True)
 
@@ -804,28 +823,21 @@ def main() -> None:
         "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), cents)
     ).cache()
     assigned.count()
-    t, ivf_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in ann_scale.ivf_search(
-                    assigned, qv, cents=cents, precomputed=True
-                ).collect()
-            }
-            for qv in qvecs
-        ],
-        label="ivf_sec_per_query"
+    _extra(
+        results, "ivf",
+        lambda qv: ann_scale.ivf_search(
+            assigned, qv, cents=cents, precomputed=True
+        ),
+        qvecs, exact_sets,
     )
-    results["ivf_sec_per_query"] = t / len(qvecs)
-    results["ivf_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(ivf_sets, exact_sets)
-    ) / len(qvecs)
 
     # radius (range) search over the same IVF layout: triangle-bound
     # cell pruning measured, not asserted (r11 verdict ask #8).  On this
     # unit-norm corpus the covering radii blanket the space -- the
     # corpus fraction is expected ~0.0 and that honesty IS the metric;
     # the crafted 4-cluster fixture shows the bound biting (3/4 pruned).
+    # The timing is the registered ann_ivf_radius_search row's call: the
+    # fused one-scan operator, radius derivation included.
     radii = ann_scale.ivf_cell_radii(assigned, cents)
     from javascript_vector_database_spark.registry.ann_scale_queries import (
         RADIUS_NN,
@@ -835,36 +847,28 @@ def main() -> None:
     r_q = _nn_radius(emb, qvecs[0], RADIUS_NN)
     probe = ann_scale.ivf_radius_probe_cells(cents, qvecs[0], r_q, radii)
     results["radius_cells_pruned_frac_corpus"] = 1.0 - len(probe) / len(cents)
-    t, _ = _timed_best2(
-        lambda: ann_scale.ivf_radius_search(
-            assigned, qvecs[0], r_q, cents, radii
+    results["ivf_radius_sec_per_query"], _ = _timed_best2(
+        lambda: ann_scale.ivf_radius_fused(
+            emb, [(0, qvecs[0])], cents, RADIUS_NN
         ).collect(),
         label="ivf_radius_sec_per_query",
     )
-    results["ivf_radius_sec_per_query"] = t
-    import math as _math
-
-    _cl_pts = [
-        (c * 50 + i, [cx + _math.cos(2 * _math.pi * i / 50),
-                      cy + _math.sin(2 * _math.pi * i / 50)])
-        for c, (cx, cy) in enumerate(
-            [(0.0, 0.0), (100.0, 0.0), (0.0, 100.0), (100.0, 100.0)]
-        )
-        for i in range(50)
-    ]
-    _cl = spark.createDataFrame(_cl_pts, "vec_id long, embedding array<float>")
-    _cl_cents = [
-        (c, [float(cx), float(cy)])
-        for c, (cx, cy) in enumerate(
-            [(0.0, 0.0), (100.0, 0.0), (0.0, 100.0), (100.0, 100.0)]
-        )
-    ]
+    _cl_centers = [(0.0, 0.0), (100.0, 0.0), (0.0, 100.0), (100.0, 100.0)]
+    _cl = spark.createDataFrame(
+        [
+            (c * 50 + i, [cx + math.cos(2 * math.pi * i / 50),
+                          cy + math.sin(2 * math.pi * i / 50)])
+            for c, (cx, cy) in enumerate(_cl_centers)
+            for i in range(50)
+        ],
+        "vec_id long, embedding array<float>",
+    )
+    _cl_cents = [(c, [cx, cy]) for c, (cx, cy) in enumerate(_cl_centers)]
     _cl_a = _cl.withColumn(
         "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), _cl_cents)
     )
-    _cl_radii = ann_scale.ivf_cell_radii(_cl_a, _cl_cents)
     _cl_probe = ann_scale.ivf_radius_probe_cells(
-        _cl_cents, [0.5, 0.5], 3.0, _cl_radii
+        _cl_cents, [0.5, 0.5], 3.0, ann_scale.ivf_cell_radii(_cl_a, _cl_cents)
     )
     results["radius_cells_pruned_frac_clustered"] = 1.0 - len(_cl_probe) / 4.0
 
@@ -875,23 +879,14 @@ def main() -> None:
         "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), lcents)
     ).cache()
     lassigned.count()
-    t, lloyd_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in ann_scale.ivf_search(
-                    lassigned, qv, cents=lcents, precomputed=True,
-                    nprobe=ann_scale.LLOYD_NPROBE,
-                ).collect()
-            }
-            for qv in qvecs
-        ],
-        label="ivf_lloyd_sec_per_query"
+    _extra(
+        results, "ivf_lloyd",
+        lambda qv: ann_scale.ivf_search(
+            lassigned, qv, cents=lcents, precomputed=True,
+            nprobe=ann_scale.LLOYD_NPROBE,
+        ),
+        qvecs, exact_sets,
     )
-    results["ivf_lloyd_sec_per_query"] = t / len(qvecs)
-    results["ivf_lloyd_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(lloyd_sets, exact_sets)
-    ) / len(qvecs)
     lassigned.unpersist()
 
     planes = ann_scale.hyperplanes(dim)
@@ -899,22 +894,11 @@ def main() -> None:
         "bucket", ann_scale.lsh_bucket(F.col("embedding"), planes)
     ).cache()
     bucketed.count()
-    t, lsh_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in ann_scale.lsh_search(
-                    bucketed, qv, precomputed=True
-                ).collect()
-            }
-            for qv in qvecs
-        ],
-        label="lsh_sec_per_query"
+    _extra(
+        results, "lsh",
+        lambda qv: ann_scale.lsh_search(bucketed, qv, precomputed=True),
+        qvecs, exact_sets,
     )
-    results["lsh_sec_per_query"] = t / len(qvecs)
-    results["lsh_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(lsh_sets, exact_sets)
-    ) / len(qvecs)
     # scan cost of the directed probe set (r7 verdict: report the
     # docs-read ratio beside the recall number)
     lsh_reads = sum(
@@ -931,70 +915,43 @@ def main() -> None:
 
     # SQ8 scalar quantization: integer code-distance candidates + exact
     # re-rank — sec/query + recall vs exact
+    from javascript_vector_database_spark.operators import pq as pqm
     from javascript_vector_database_spark.operators import quant
 
     sq8_lo, sq8_hi = quant.sq8_params(emb)
-    t, sq8_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in quant.sq8_search(emb, qv, sq8_lo, sq8_hi).collect()
-            }
-            for qv in qvecs
-        ],
-        label="sq8_sec_per_query"
+    _extra(
+        results, "sq8",
+        lambda qv: quant.sq8_search(emb, qv, sq8_lo, sq8_hi),
+        qvecs, exact_sets,
     )
-    results["sq8_sec_per_query"] = t / len(qvecs)
-    results["sq8_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(sq8_sets, exact_sets)
-    ) / len(qvecs)
 
     # PQ product quantization over the write-time code table (the
-    # deployment shape — encode once, ADC per query): sec/query + recall
-    from javascript_vector_database_spark.operators import ann_scale as _as
-    from javascript_vector_database_spark.operators import pq as pqm
-
-    # sampled (hash-order, oracle-portable) codebook — continuity metric
-    pq_cb = pqm.pq_codebook(_as.collect_centroids(emb, k=pqm.PQ_K))
+    # deployment shape — encode once, ADC per query): sec/query + recall.
+    # The sampled (hash-order, oracle-portable) codebook is a recall-only
+    # continuity metric.
+    pq_cb = pqm.pq_codebook(ann_scale.collect_centroids(emb, k=pqm.PQ_K))
     pq_codes = pqm.pq_code_table(emb, pq_cb).cache()
     pq_codes.count()
-    _, pq_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in pqm.pq_search_precomputed(pq_codes, emb, qv, pq_cb).collect()
-            }
-            for qv in qvecs
-        ]
+    _extra(
+        results, "pq_sampled",
+        lambda qv: pqm.pq_search_precomputed(pq_codes, emb, qv, pq_cb),
+        qvecs, exact_sets, timed=False,
     )
-    results["pq_sampled_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(pq_sets, exact_sets)
-    ) / len(qvecs)
     pq_codes.unpersist()
 
     # trained (per-subspace k-means) codebook — the headline PQ metrics:
     # training happens once at write time, so it's reported separately
     # and excluded from the per-query cost
-    t_train, pq_cbt = _timed(
+    results["pq_train_sec"], pq_cbt = _timed(
         lambda: pqm.pq_train_codebook(emb, k=pqm.PQ_K_TRAINED)
     )
-    results["pq_train_sec"] = t_train
     pq_codes_t = pqm.pq_code_table(emb, pq_cbt).cache()
     pq_codes_t.count()
-    t, pq_sets_t = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in pqm.pq_search_precomputed(pq_codes_t, emb, qv, pq_cbt).collect()
-            }
-            for qv in qvecs
-        ],
-        label="pq_sec_per_query"
+    _extra(
+        results, "pq",
+        lambda qv: pqm.pq_search_precomputed(pq_codes_t, emb, qv, pq_cbt),
+        qvecs, exact_sets,
     )
-    results["pq_sec_per_query"] = t / len(qvecs)
-    results["pq_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(pq_sets_t, exact_sets)
-    ) / len(qvecs)
     pq_codes_t.unpersist()
 
     # reference-geometry (384-dim clustered fixture) IVF recall: the
@@ -1006,6 +963,7 @@ def main() -> None:
     # hash-order draw would cost in recall.
     from javascript_vector_database_spark.registry.ref_geometry import (
         FIXTURE_PATH,
+        trained_cents,
     )
 
     emb384 = spark.read.parquet(FIXTURE_PATH).cache()
@@ -1014,14 +972,12 @@ def main() -> None:
         [float(x) for x in r["embedding"]]
         for r in emb384.orderBy("vec_id").limit(5).collect()
     ]
-    exact384 = [
-        {r["vec_id"] for r in knn.exact_knn(emb384, qv).collect()} for qv in q384
-    ]
-    from javascript_vector_database_spark.registry.ref_geometry import (
-        trained_cents,
+    exact384 = _extra(
+        results, "knn_exact_384", lambda qv: knn.exact_knn(emb384, qv),
+        q384, timed=False,
     )
 
-    for tag, cents in (
+    for tag, cents384 in (
         ("sampled", ann_scale.collect_centroids(emb384)),
         ("kmeans", ann_scale.ivf_kmeans_centroids(emb384)),
         # the committed centroid fixture = exactly what the REGISTERED
@@ -1029,153 +985,90 @@ def main() -> None:
         ("registered_trained", trained_cents(spark)),
     ):
         assigned384 = emb384.withColumn(
-            "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), cents)
+            "ivf_cell", ann_scale.ivf_cell_expr(F.col("embedding"), cents384)
         )
-        sets384 = [
-            {
-                r["vec_id"]
-                for r in ann_scale.ivf_search(
-                    assigned384, qv, cents=cents, precomputed=True
-                ).collect()
-            }
-            for qv in q384
-        ]
-        results[f"ivf384_{tag}_recall_at_10"] = sum(
-            len(a & e) / len(e) for a, e in zip(sets384, exact384)
-        ) / len(q384)
         # the nprobe=4 point (of 16 cells, vs the N_PROBE=2 default):
         # documents the recall/probe-cost trade at reference geometry
-        sets384p4 = [
-            {
-                r["vec_id"]
-                for r in ann_scale.ivf_search(
-                    assigned384, qv, cents=cents, precomputed=True, nprobe=4
-                ).collect()
-            }
-            for qv in q384
-        ]
-        results[f"ivf384_{tag}_nprobe4_recall_at_10"] = sum(
-            len(a & e) / len(e) for a, e in zip(sets384p4, exact384)
-        ) / len(q384)
+        for name, kw in (
+            (f"ivf384_{tag}", {}),
+            (f"ivf384_{tag}_nprobe4", {"nprobe": 4}),
+        ):
+            _extra(
+                results, name,
+                lambda qv: ann_scale.ivf_search(
+                    assigned384, qv, cents=cents384, precomputed=True, **kw
+                ),
+                q384, exact384, timed=False,
+            )
 
     # quantizer recall at reference geometry (r6): SQ8's global affine
-    # vs the concentrated unit-norm components, and PQ at 48-dim
-    # subspaces — the compression regime the method was designed for
+    # vs the concentrated unit-norm components.  Binary quantization
+    # (1 bit/dim, r8): hamming probe + exact re-rank at the REGISTERED
+    # 384 pool (rerank=32 — 1-bit codes need the published 10-30x
+    # oversampling; sweep in quant.BQ_RERANK_384 notes: 0.52@8 / 0.68@16
+    # / 0.88@32 / 0.94@48), with the cheap-pool point beside it so the
+    # curve is visible.
     lo384, hi384 = quant.sq8_params(emb384)
-    sq8_384_sets = [
-        {
-            r["vec_id"]
-            for r in quant.sq8_search(emb384, qv, lo384, hi384).collect()
-        }
-        for qv in q384
-    ]
-    results["sq8_384_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(sq8_384_sets, exact384)
-    ) / len(q384)
-    # binary quantization (1 bit/dim, r8): hamming probe + exact re-rank
-    # at the REGISTERED 384 pool (rerank=32 — 1-bit codes need the
-    # published 10-30x oversampling; sweep in quant.BQ_RERANK_384
-    # notes: 0.52@8 / 0.68@16 / 0.88@32 / 0.94@48).  The cheap-pool
-    # point rides beside it so the curve is visible.
-    t, bq_384_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in quant.bq_search(
-                    emb384, qv, rerank=quant.BQ_RERANK_384
-                ).collect()
-            }
-            for qv in q384
-        ],
-        label="bq_384_sec_per_query"
-    )
-    results["bq_384_sec_per_query"] = t / len(q384)
-    results["bq_384_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(bq_384_sets, exact384)
-    ) / len(q384)
-    bq_384_r8 = [
-        {r["vec_id"] for r in quant.bq_search(emb384, qv).collect()}
-        for qv in q384
-    ]
-    results["bq_384_rerank8_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(bq_384_r8, exact384)
-    ) / len(q384)
+    for name, probe, timed in (
+        ("sq8_384", lambda qv: quant.sq8_search(emb384, qv, lo384, hi384),
+         False),
+        ("bq_384",
+         lambda qv: quant.bq_search(emb384, qv, rerank=quant.BQ_RERANK_384),
+         True),
+        ("bq_384_rerank8", lambda qv: quant.bq_search(emb384, qv), False),
+    ):
+        _extra(results, name, probe, q384, exact384, timed=timed)
+
     # r7 probe shape: M=96 4-dim subspaces + rerank=32 (PQ_M_384 notes in
     # operators/pq.py carry the full measured sweep — the r6 M=8 config
     # recalled 0.22 sampled / 0.38 trained).  Timing uses the deployment
     # shape: codes encoded ONCE (write-time at scale), ADC per query.
     cb384 = pqm.pq_codebook(
-        _as.collect_centroids(emb384, k=pqm.PQ_K), m=pqm.PQ_M_384
+        ann_scale.collect_centroids(emb384, k=pqm.PQ_K), m=pqm.PQ_M_384
     )
     codes384 = pqm.pq_code_table(emb384, cb384).cache()
     codes384.count()
-    t, pq_384_sets = _timed_best2(
-        lambda: [
-            {
-                r["vec_id"]
-                for r in pqm.pq_search_precomputed(
-                    codes384, emb384, qv, cb384, rerank=pqm.PQ_RERANK_384
-                ).collect()
-            }
-            for qv in q384
-        ],
-        label="pq_384_sec_per_query"
+    _extra(
+        results, "pq_384",
+        lambda qv: pqm.pq_search_precomputed(
+            codes384, emb384, qv, cb384, rerank=pqm.PQ_RERANK_384
+        ),
+        q384, exact384,
     )
-    results["pq_384_sec_per_query"] = t / len(q384)
-    results["pq_384_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(pq_384_sets, exact384)
-    ) / len(q384)
     codes384.unpersist()
     # the REGISTERED composed quantizer: trained coarse cells, nprobe=6,
     # sampled M=96 codebook, rerank=32 (r8 upgrade: 0.26 -> 0.88)
     cents384t = trained_cents(spark)
-    ivfpq_reg_sets = [
-        {
-            r["vec_id"]
-            for r in pqm.ivfpq_search(
-                emb384, qv, cents384t, cb384, nprobe=6,
-                rerank=pqm.PQ_RERANK_384,
-            ).collect()
-        }
-        for qv in q384
-    ]
-    results["ivfpq_384_registered_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(ivfpq_reg_sets, exact384)
-    ) / len(q384)
+    _extra(
+        results, "ivfpq_384_registered",
+        lambda qv: pqm.ivfpq_search(
+            emb384, qv, cents384t, cb384, nprobe=6, rerank=pqm.PQ_RERANK_384,
+        ),
+        q384, exact384, timed=False,
+    )
 
     # trained codebook: driver-side Lloyd's on the deterministic sample
     # (pq_train_codebook_local) — 96 MLlib fits replaced by one collect +
     # in-process numpy; trained recall reported at the shallow rerank=8
     # (ADC rank quality alone) and the default rerank=32
-    t0 = time.time()
-    cbt384 = pqm.pq_train_codebook_local(emb384, m=pqm.PQ_M_384, k=pqm.PQ_K)
-    results["pq_384_train_sec"] = time.time() - t0
+    results["pq_384_train_sec"], cbt384 = _timed(
+        lambda: pqm.pq_train_codebook_local(
+            emb384, m=pqm.PQ_M_384, k=pqm.PQ_K
+        )
+    )
     codes384t = pqm.pq_code_table(emb384, cbt384).cache()
     codes384t.count()
-    pq_384t_sets = [
-        {
-            r["vec_id"]
-            for r in pqm.pq_search_precomputed(
-                codes384t, emb384, qv, cbt384, rerank=8
-            ).collect()
-        }
-        for qv in q384
-    ]
-    results["pq_384_trained_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(pq_384t_sets, exact384)
-    ) / len(q384)
-    pq_384r_sets = [
-        {
-            r["vec_id"]
-            for r in pqm.pq_search_precomputed(
-                codes384t, emb384, qv, cbt384, rerank=pqm.PQ_RERANK_384
-            ).collect()
-        }
-        for qv in q384
-    ]
-    results["pq_384_trained_rerank32_recall_at_10"] = sum(
-        len(a & e) / len(e) for a, e in zip(pq_384r_sets, exact384)
-    ) / len(q384)
+    for name, rerank in (
+        ("pq_384_trained", 8),
+        ("pq_384_trained_rerank32", pqm.PQ_RERANK_384),
+    ):
+        _extra(
+            results, name,
+            lambda qv: pqm.pq_search_precomputed(
+                codes384t, emb384, qv, cbt384, rerank=rerank
+            ),
+            q384, exact384, timed=False,
+        )
     codes384t.unpersist()
     emb384.unpersist()
 
@@ -1193,14 +1086,12 @@ def main() -> None:
     batch_sets = {}
     for r in batch_rows:
         batch_sets.setdefault(r["query_id"], set()).add(r["vec_id"])
-    first_qid = min(batch_sets)
-    assert batch_sets[first_qid] == exact_sets[0], "batch kNN != exact kNN"
+    assert batch_sets[min(batch_sets)] == exact_sets[0], "batch kNN != exact kNN"
 
     # z-order clustering evidence (r10): footer-level prunable-file
     # fraction of the registered 2-D box query under the z-ordered
     # layout vs a single-column time-sorted layout — the user-dimension
     # number is the whole point (a time sort prunes ~0 of it)
-    from javascript_vector_database_spark.operators import layout as zl
     from javascript_vector_database_spark.registry.relational import (
         _ZBOX_TS,
         _ZBOX_USER,
@@ -1210,26 +1101,11 @@ def main() -> None:
     try:
         ev = load_table(spark, sf_dir, "events")
         zpath = os.path.join(tmp, "z")
-        zl.write_zorder_layout(
+        layout.write_zorder_layout(
             ev, zpath, F.col("user_id"), F.col("ts").cast("long")
         )
         tpath = os.path.join(tmp, "t")
-        ts_conf = "spark.sql.parquet.outputTimestampType"
-        prev_ts = spark.conf.get(ts_conf, None)
-        spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-        try:
-            ev.repartitionByRange(16, F.col("ts")).sortWithinPartitions(
-                "ts"
-            ).write.mode("overwrite").parquet(tpath)
-        finally:
-            # save/restore (not unset): mirror write_zorder_layout so a
-            # pre-existing session value survives the bench block
-            if prev_ts is None:
-                spark.conf.unset(ts_conf)
-            else:
-                spark.conf.set(ts_conf, prev_ts)
-        import datetime
-
+        layout._write_z_sorted(ev, tpath, F.col("ts"), 16, None)
         utc = datetime.timezone.utc
         box = {
             "user_id": _ZBOX_USER,
@@ -1238,15 +1114,15 @@ def main() -> None:
                 for s in _ZBOX_TS
             ),
         }
-        sz = zl.file_minmax_stats(zpath, ["user_id", "ts"])
-        st = zl.file_minmax_stats(tpath, ["user_id", "ts"])
-        results["zorder_box_prunable_frac"] = zl.prunable_fraction(sz, box)
-        results["timesort_box_prunable_frac"] = zl.prunable_fraction(st, box)
+        sz = layout.file_minmax_stats(zpath, ["user_id", "ts"])
+        st = layout.file_minmax_stats(tpath, ["user_id", "ts"])
+        results["zorder_box_prunable_frac"] = layout.prunable_fraction(sz, box)
+        results["timesort_box_prunable_frac"] = layout.prunable_fraction(st, box)
         user_only = {"user_id": _ZBOX_USER}
-        results["zorder_userdim_prunable_frac"] = zl.prunable_fraction(
+        results["zorder_userdim_prunable_frac"] = layout.prunable_fraction(
             sz, user_only
         )
-        results["timesort_userdim_prunable_frac"] = zl.prunable_fraction(
+        results["timesort_userdim_prunable_frac"] = layout.prunable_fraction(
             st, user_only
         )
 
@@ -1256,30 +1132,18 @@ def main() -> None:
         # local default 128 MB block leaves one group per small file).
         rg_bytes = 1 << 20
         zg = os.path.join(tmp, "zg")
-        zl.write_zorder_layout_nd(
+        layout.write_zorder_layout_nd(
             ev, zg, [F.col("user_id"), F.col("ts").cast("long")],
             n_files=4, rowgroup_bytes=rg_bytes,
         )
         tg = os.path.join(tmp, "tg")
-        prev_ts = spark.conf.get(ts_conf, None)
-        spark.conf.set(ts_conf, "TIMESTAMP_MICROS")
-        try:
-            ev.repartitionByRange(4, F.col("ts")).sortWithinPartitions(
-                "ts"
-            ).write.mode("overwrite").option(
-                "parquet.block.size", rg_bytes
-            ).parquet(tg)
-        finally:
-            if prev_ts is None:
-                spark.conf.unset(ts_conf)
-            else:
-                spark.conf.set(ts_conf, prev_ts)
-        zg_rg = zl.rowgroup_minmax_stats(zg, ["user_id", "ts"])
-        tg_rg = zl.rowgroup_minmax_stats(tg, ["user_id", "ts"])
-        results["zorder_rowgroup_prunable_frac"] = zl.prunable_fraction(
+        layout._write_z_sorted(ev, tg, F.col("ts"), 4, rg_bytes)
+        zg_rg = layout.rowgroup_minmax_stats(zg, ["user_id", "ts"])
+        tg_rg = layout.rowgroup_minmax_stats(tg, ["user_id", "ts"])
+        results["zorder_rowgroup_prunable_frac"] = layout.prunable_fraction(
             zg_rg, box
         )
-        results["timesort_rowgroup_prunable_frac"] = zl.prunable_fraction(
+        results["timesort_rowgroup_prunable_frac"] = layout.prunable_fraction(
             tg_rg, box
         )
         # the user-dimension row-group tier is z-order's actual win: a
@@ -1287,31 +1151,31 @@ def main() -> None:
         # ts-heavy box — the honest full-box pair above shows that) but
         # span the whole user range, pruning ~0 of a user-scoped scan
         results["zorder_rowgroup_userdim_prunable_frac"] = (
-            zl.prunable_fraction(zg_rg, user_only)
+            layout.prunable_fraction(zg_rg, user_only)
         )
         results["timesort_rowgroup_userdim_prunable_frac"] = (
-            zl.prunable_fraction(tg_rg, user_only)
+            layout.prunable_fraction(tg_rg, user_only)
         )
 
         # 2-D value-dim control measured BEFORE compaction rewrites
         # zpath (16 files, matching z3's file count — a 4-file control
         # would confound file granularity with the interleave effect)
         vbox = {"value": (250.0, float("inf"))}
-        results["zorder2_valuedim_prunable_frac"] = zl.prunable_fraction(
-            zl.file_minmax_stats(zpath, ["value"]), vbox
+        results["zorder2_valuedim_prunable_frac"] = layout.prunable_fraction(
+            layout.file_minmax_stats(zpath, ["value"]), vbox
         )
 
         # r11: clustering must survive compaction (the OPTIMIZE-rewrite
         # story): bin-pack 16 -> 4 files through the z-recompute path
         # and re-measure the same box on the row-group tier
-        zl.compact_zorder_layout(
+        layout.compact_zorder_layout(
             spark, zpath,
             [F.col("user_id"), F.col("ts").cast("long")],
             n_files=4, rowgroup_bytes=rg_bytes,
         )
         results["zorder_compacted_rowgroup_prunable_frac"] = (
-            zl.prunable_fraction(
-                zl.rowgroup_minmax_stats(zpath, ["user_id", "ts"]), box
+            layout.prunable_fraction(
+                layout.rowgroup_minmax_stats(zpath, ["user_id", "ts"]), box
             )
         )
 
@@ -1324,71 +1188,33 @@ def main() -> None:
         # only when it participates in the code, so the 2-D layout's
         # number beside it is the control.
         z3 = os.path.join(tmp, "z3")
-        zl.write_zorder_layout_nd(
+        layout.write_zorder_layout_nd(
             ev, z3,
             [F.col("user_id"), F.col("ts").cast("long"), F.col("value")],
             n_files=16, norm="quantile",
         )
-        s3 = zl.file_minmax_stats(z3, ["user_id", "ts", "value"])
-        results["zorder3_valuedim_prunable_frac"] = zl.prunable_fraction(
+        s3 = layout.file_minmax_stats(z3, ["user_id", "ts", "value"])
+        results["zorder3_valuedim_prunable_frac"] = layout.prunable_fraction(
             s3, vbox
         )
         box3 = dict(box, **vbox)
-        results["zorder3_box3_prunable_frac"] = zl.prunable_fraction(
+        results["zorder3_box3_prunable_frac"] = layout.prunable_fraction(
             s3, box3
         )
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
 
-    # ktruss phase split at 1x (r10 verdict ask #6): weight-agg vs
-    # peel itemized — the "capped = constant peel" claim measured.  The
-    # 30x pair lands in the scale section below.
-    from javascript_vector_database_spark.operators import graph as _gph
-    from javascript_vector_database_spark.registry import decorrelated as _dc
+    # k-truss / HITS phase split on sf_dir (r10 verdict ask #6, r11
+    # verdict ask #5): the "capped = constant peel" claim measured.  The
+    # 30x pair lands after the 30x column.
+    _phase_split(results, spark, sf_dir, "")
 
-    t_w, _capped1 = _timed_best2(
-        lambda: _dc._ktruss_capped_edges(spark, sf_dir),
-        label="ktruss_weight_agg_sec",
-    )
-    results["ktruss_weight_agg_sec"] = t_w
-    t_p, _ = _timed_best2(
-        lambda: _gph.ktruss_peel(
-            _capped1, k=_dc._KTRUSS_CAP_K, rounds=_dc._KTRUSS_ROUNDS
-        )
-        .orderBy(
-            F.col("support").desc(), F.col("src").asc(), F.col("dst").asc()
-        )
-        .limit(20)
-        .collect(),
-        label="ktruss_peel_sec",
-    )
-    results["ktruss_peel_sec"] = t_p
-
-    # HITS phase split at 1x (r11 verdict ask #5): the corpus-linear
-    # edge build vs the Pregel iteration itemized -- the combined row's
-    # noisy 30x ratio (3.98 recorded; 3.31/0.86 across solo runs)
-    # couldn't say which phase moved.  The 30x pair lands below.
-    t_e, _hits_e1 = _timed_best2(
-        lambda: _dc._hits_edges(spark, sf_dir),
-        label="hits_edges_sec",
-    )
-    results["hits_edges_sec"] = t_e
-    t_i, _ = _timed_best2(
-        lambda: _gph.hits(_hits_e1)
-        .orderBy(F.col("authority").desc(), F.col("node").asc())
-        .limit(20)
-        .collect(),
-        label="hits_iterate_sec",
-    )
-    results["hits_iterate_sec"] = t_i
-
-    # headline registry queries (one pass each).  The historically
+    # headline registry queries (best of 2 each).  The historically
     # contention-sensitive heavy graph/dedup rows go FIRST: when the
     # driver harness runs several sessions, whatever times LAST eats
     # the pile-up, and the r8 artifact recorded a uniform ~3x inflation
     # on exactly these rows (builder solo runs: 3-4s) — timing them
     # while the JVM is freshest keeps the committed record honest.
-    queries: dict[str, float] = {}
     headline = [
         "graph_hits_authorities",
         "dedup_minhash_calibration",
@@ -1641,104 +1467,29 @@ def main() -> None:
             except Exception:
                 pass  # warmup is best-effort; the timed run surfaces errors
 
-    # best-of-2 per query: a 32-thread local JVM takes multi-second GC
-    # pauses that can land on any query; the min of two timed runs
-    # reports the query's actual cost instead of the pause it absorbed
-    # contention self-documentation (r8 verdict): when a row's two
-    # timings disagree >2x the environment was contended during one of
-    # them (driver harness piling sessions, GC storms) — the recorded
-    # min is still the best honest number, but the artifact flags it so
-    # a round-over-round diff doesn't read variance as regression
-    contended: dict[str, float] = {}
-    for name in headline:
-        fn = registry.queries()[name]
-        t1, _ = _timed(lambda fn=fn: fn(spark, sf_dir).collect())
-        t2, _ = _timed(lambda fn=fn: fn(spark, sf_dir).collect())
-        queries[name] = round(min(t1, t2), 4)
-        if max(t1, t2) > 2 * min(t1, t2) and max(t1, t2) > 1.0:
-            contended[name] = round(max(t1, t2) / min(t1, t2), 2)
+    queries, contended = _column(spark, headline, sf_dir)
 
-    # 10x scale column (sf1.0 when sf_dir is sf0.1): single timed pass
-    # per query over the materialized scale-up — catches scale cliffs
-    # (quadratic candidate growth, unbounded shuffles) that sf0.1's
-    # job-overhead-dominated timings cannot see.  Skip with
-    # SPARK_GRAFT_SKIP_SCALE=1 for fast local iteration.
+    # 10x and 30x scale columns (sf1.0 / sf3.0 when sf_dir is sf0.1)
+    # over materialized scale-ups: they catch scale cliffs (quadratic
+    # candidate growth, unbounded shuffles) that sf0.1's job-overhead-
+    # dominated timings cannot see, and the third point measures time-
+    # vs-scale linearity for the shuffle-heaviest rows (the verdict reads
+    # sf30/sf1 <= ~3.9 per row).  Skip with SPARK_GRAFT_SKIP_SCALE=1.
     sf1_queries: dict[str, float] = {}
     sf1_contended: dict[str, float] = {}
-    sf1_gen_sec = 0.0
-    if os.environ.get("SPARK_GRAFT_SKIP_SCALE") != "1":
-        sf1_gen_sec, sf1_dir = _timed(lambda: _scaled_dir(spark, sf_dir))
-        # best-of-2, same as the headline pass: single-pass 10x timings
-        # measured up to ~3x swing between clean runs of identical code
-        # (GC pauses + AQE re-plans land on whole multi-second queries),
-        # which reads as a false regression in round-over-round diffs
-        for name in _SCALE_HEADLINE:
-            fn = registry.queries()[name]
-            t1, _ = _timed(lambda fn=fn: fn(spark, sf1_dir).collect())
-            t2, _ = _timed(lambda fn=fn: fn(spark, sf1_dir).collect())
-            sf1_queries[name] = round(min(t1, t2), 4)
-            _flag_contended(sf1_contended, name, t1, t2)
-
-    # 30x column: third point on the time-vs-scale curve for the
-    # shuffle-heaviest rows — linearity measured, not asserted.  The
-    # gate the verdict reads: sf30/sf1 time ratio <= ~3.9 per row
-    # (1.3x per data-x over the 10x->30x leg).  Best-of-2 like every
-    # other column: this box takes multi-second contention bursts
-    # (external sessions), and a single inflated 30x sample reads as a
-    # false scale cliff in exactly the column built to rule cliffs out.
     sf30_queries: dict[str, float] = {}
     sf30_contended: dict[str, float] = {}
-    sf30_gen_sec = 0.0
+    sf1_gen_sec = sf30_gen_sec = 0.0
     if os.environ.get("SPARK_GRAFT_SKIP_SCALE") != "1":
+        sf1_gen_sec, sf1_dir = _timed(lambda: _scaled_dir(spark, sf_dir))
+        sf1_queries, sf1_contended = _column(spark, _SCALE_HEADLINE, sf1_dir)
         sf30_gen_sec, sf30_dir = _timed(
             lambda: _scaled_dir(spark, sf_dir, factor=30)
         )
-        for name in _SCALE30_HEADLINE:
-            fn = registry.queries()[name]
-            t1, _ = _timed(lambda fn=fn: fn(spark, sf30_dir).collect())
-            t2, _ = _timed(lambda fn=fn: fn(spark, sf30_dir).collect())
-            sf30_queries[name] = round(min(t1, t2), 4)
-            _flag_contended(sf30_contended, name, t1, t2)
-        # ktruss itemized at 30x (r10 verdict ask #6): the row's cost =
-        # one corpus-linear weight agg + a constant-size peel over the
-        # capped 20k edges.  The 4.17 sf30/sf1 ratio on the combined row
-        # couldn't say WHICH phase grew; these two extras measure them
-        # separately (the 1x pair lives in the extras as
-        # ktruss_weight_agg_sec / ktruss_peel_sec).
-        from javascript_vector_database_spark.operators import graph as gph
-        from javascript_vector_database_spark.registry import decorrelated as dc
-
-        t_w, capped30 = _timed_best2(
-            lambda: dc._ktruss_capped_edges(spark, sf30_dir),
-            label="ktruss30_weight_agg_sec",
+        sf30_queries, sf30_contended = _column(
+            spark, _SCALE30_HEADLINE, sf30_dir
         )
-        results["ktruss30_weight_agg_sec"] = t_w
-        t_p, _ = _timed_best2(
-            lambda: gph.ktruss_peel(
-                capped30, k=dc._KTRUSS_CAP_K, rounds=dc._KTRUSS_ROUNDS
-            )
-            .orderBy(
-                F.col("support").desc(), F.col("src").asc(), F.col("dst").asc()
-            )
-            .limit(20)
-            .collect(),
-            label="ktruss30_peel_sec",
-        )
-        results["ktruss30_peel_sec"] = t_p
-
-        t_e, _hits_e30 = _timed_best2(
-            lambda: dc._hits_edges(spark, sf30_dir),
-            label="hits30_edges_sec",
-        )
-        results["hits30_edges_sec"] = t_e
-        t_i, _ = _timed_best2(
-            lambda: gph.hits(_hits_e30)
-            .orderBy(F.col("authority").desc(), F.col("node").asc())
-            .limit(20)
-            .collect(),
-            label="hits30_iterate_sec",
-        )
-        results["hits30_iterate_sec"] = t_i
+        _phase_split(results, spark, sf30_dir, "30")
 
     # end-of-run calibration: start-vs-end drift flags contention that
     # arrived DURING the run (the start pair alone can't)

@@ -355,7 +355,9 @@ def knn_batch_ivf(
             "distance"
         ),
     )
-    return top_n_per_query(scored, k, "query_id", "distance", id_col)
+    return top_n_per_query(
+        scored, k, "query_id", F.col("distance"), F.col(id_col)
+    )
 
 
 def hyperplanes(dim: int, bits: int = LSH_BITS, seed: int = LSH_SEED) -> list[list[float]]:

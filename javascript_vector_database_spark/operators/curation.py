@@ -23,6 +23,7 @@ from pyspark.sql import functions as F
 
 from javascript_vector_database_spark.functions.text import word_tokens
 from javascript_vector_database_spark.operators.dedup import shingles
+from javascript_vector_database_spark.operators.knn import top_n_per_query
 from javascript_vector_database_spark.tables import spread
 
 # ---------------------------------------------------------------------------
@@ -545,13 +546,8 @@ def keyword_terms(
             (F.col("tf").cast("double") / F.col("df")).alias("score"),
         )
     )
-    w = Window.partitionBy(id_col).orderBy(
-        F.col("score").desc(), F.col("term").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
+    return top_n_per_query(
+        scored, top_n, id_col, F.col("score").desc(), F.col("term")
     )
 
 

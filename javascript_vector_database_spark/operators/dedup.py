@@ -932,7 +932,7 @@ def cosine_batch_vs_corpus(
         hyperplanes,
         lsh_bucket,
     )
-    from pyspark.sql import Window
+    from javascript_vector_database_spark.operators.knn import top_n_per_query
 
     if dim is None:
         head = batch.where(F.col(vec_col).isNotNull()).select(vec_col).first()
@@ -967,13 +967,9 @@ def cosine_batch_vs_corpus(
         )
         .where(F.col("cos_sim") >= threshold)
     )
-    w = Window.partitionBy("batch_id").orderBy(
-        F.col("cos_sim").desc(), F.col("corpus_id").asc()
-    )
-    return (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .where(F.col("__rn") <= top_n)
-        .drop("__rn")
+    return top_n_per_query(
+        scored, top_n, "batch_id",
+        F.col("cos_sim").desc(), F.col("corpus_id"),
     )
 
 

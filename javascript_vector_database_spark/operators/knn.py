@@ -40,7 +40,12 @@ Spark-first design notes (scale: 100 TB, 1000 executors):
     ``pq.ivfpq_residual_search``;
   - ``top_n_per_query`` — the batch probes ``knn_batch``,
     ``ann_index_range_stored_batch``, ``ann_scale.knn_batch_ivf`` and
-    ``pq.pq_batch_search`` (its ADC pool and its re-rank).
+    ``pq.pq_batch_search`` (its ADC pool and its re-rank); with a
+    descending score it is also the per-row top-n of
+    ``dedup.cosine_batch_vs_corpus`` and ``curation.keyword_terms``.
+* ``pivot_bands`` is the one place the band ``d_i ± d_i·w`` is written:
+  the recompute, stored, batch and compat range probes, ``candidate_count``
+  and the bench's prunable-fraction extras all read it.
 * The reference issues 5 separate index-range queries and union-dedups
   (src/search.ts:23-40).  On a columnar store one scan with an OR of the 5
   range predicates is the same candidate set with 1/5 the reads; min-max
@@ -101,6 +106,21 @@ def _pivot_distances(
                 f"pivots have {len(p)}"
             )
     return [_py_euclid(p, query_vec) for p in pivots]
+
+
+def pivot_bands(
+    probe: str,
+    query_vec: list[float],
+    pivots: list[list[float]],
+    index_distance: float,
+) -> list[tuple[float, float]]:
+    """Per pivot, the open band ``(d_i - d_i·w, d_i + d_i·w)`` around the
+    query's pivot distance d_i: the candidate range of every pivot-range
+    probe (src/search.ts:27-36)."""
+    return [
+        (d - d * index_distance, d + d * index_distance)
+        for d in _pivot_distances(probe, query_vec, pivots)
+    ]
 
 
 def _ident(name: str) -> str:
@@ -179,16 +199,14 @@ def rerank_pool(
 
 
 def top_n_per_query(
-    scored: DataFrame, n: int, q_col: str, score_col: str, id_col: str
+    scored: DataFrame, n: int, q_col: str, *order: Column
 ) -> DataFrame:
-    """The rows of ``scored`` ranked ``<= n`` within their query by
-    (score, id) — the tail of every batch probe.  Catalyst rewrites the
-    rank filter into a two-phase ``WindowGroupLimit`` whose Partial phase
-    runs below the exchange, so each map partition ships at most n rows
-    per query."""
-    w = Window.partitionBy(q_col).orderBy(
-        F.col(score_col).asc(), F.col(id_col).asc()
-    )
+    """The rows of ``scored`` ranked ``<= n`` within their query by the
+    ``order`` columns — (score, id) ascending is the tail of every batch
+    probe.  Catalyst rewrites the rank filter into a two-phase
+    ``WindowGroupLimit`` whose Partial phase runs below the exchange, so
+    each map partition ships at most n rows per query."""
+    w = Window.partitionBy(q_col).orderBy(*order)
     return (
         scored.withColumn("__rn", F.row_number().over(w))
         .where(F.col("__rn") <= n)
@@ -284,8 +302,9 @@ def _band_cond(
 ) -> Column:
     """OR over the pivots of ``idx_i`` in the open band d_i ± d_i·w."""
     cond = None
-    for i, d_i in enumerate(_pivot_distances(probe, query_vec, pivots)):
-        lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
+    for i, (lo, hi) in enumerate(
+        pivot_bands(probe, query_vec, pivots, index_distance)
+    ):
         c = (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
         cond = c if cond is None else (cond | c)
     return cond
@@ -495,11 +514,11 @@ def ann_index_range_stored(
     The candidate set is band-bounded (tiny by construction: ±0.003 of
     each pivot distance); the base side stays partition-local, no corpus
     shuffle."""
-    ds = _pivot_distances("ann_index_range_stored", query_vec, pivots)
     bands = [
-        (f"idx{i}", double_sql(d - d * index_distance),
-         double_sql(d + d * index_distance))
-        for i, d in enumerate(ds)
+        (f"idx{i}", double_sql(lo), double_sql(hi))
+        for i, (lo, hi) in enumerate(pivot_bands(
+            "ann_index_range_stored", query_vec, pivots, index_distance
+        ))
     ]
     return _stored_top_k(
         spark, base_dir, tables, _band_union_sql(id_col, bands),
@@ -559,12 +578,14 @@ def ann_index_range_compat_stored(
     strings, so the string band prunes row groups the same way the
     double tables do; candidates union-dedup via the shared semi-join
     doc-read re-rank, no corpus shuffle."""
-    ds = _pivot_distances("ann_index_range_compat_stored", query_vec, pivots)
     # a key is the text of a number: it holds no quote to escape
     bands = [
-        (f"idx{i}_str", f"'{_py_index_string(d - d * index_distance)}'",
-         f"'{_py_index_string(d + d * index_distance)}'")
-        for i, d in enumerate(ds)
+        (f"idx{i}_str", f"'{_py_index_string(lo)}'",
+         f"'{_py_index_string(hi)}'")
+        for i, (lo, hi) in enumerate(pivot_bands(
+            "ann_index_range_compat_stored", query_vec, pivots,
+            index_distance,
+        ))
     ]
     return _stored_top_k(
         spark, base_dir, tables, _band_union_sql(id_col, bands),
@@ -602,15 +623,16 @@ def ann_index_range_stored_batch(
     batches prefer the IVF batch path (equi-join on stored cells) —
     this is the faithful stored-index shape for bounded batches.
     Output: (query_id, vec_id, distance)."""
-    dists = [
-        (qid, _pivot_distances("ann_index_range_stored_batch", qv, pivots))
+    q_bands = [
+        (qid, pivot_bands(
+            "ann_index_range_stored_batch", qv, pivots, index_distance
+        ))
         for qid, qv in queries
     ]
     tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
     cands = None
-    for qid, ds in dists:
-        for i, d_i in enumerate(ds):
-            lo, hi = d_i - d_i * index_distance, d_i + d_i * index_distance
+    for qid, bands in q_bands:
+        for i, (lo, hi) in enumerate(bands):
             c = (
                 tables[f"idx{i}"]
                 .where(
@@ -637,7 +659,9 @@ def ann_index_range_stored_batch(
             ).alias("distance"),
         )
     )
-    return top_n_per_query(scored, k, "query_id", "distance", id_col)
+    return top_n_per_query(
+        scored, k, "query_id", F.col("distance"), F.col(id_col)
+    )
 
 
 def ann_index_similarity_stored(
@@ -803,11 +827,11 @@ def ann_index_range_compat(
     double-key mode (``ann_index_range``, the consciously-fixed scale
     path).  tests/test_knn.py::test_compat_string_range_divergence pins
     the divergence down."""
-    ds = _pivot_distances("ann_index_range_compat", query_vec, pivots)
     cond = None
-    for i, d_i in enumerate(ds):
-        lo = _py_index_string(d_i - d_i * index_distance)
-        hi = _py_index_string(d_i + d_i * index_distance)
+    for i, (lo, hi) in enumerate(pivot_bands(
+        "ann_index_range_compat", query_vec, pivots, index_distance
+    )):
+        lo, hi = _py_index_string(lo), _py_index_string(hi)
         c = (F.col(f"idx{i}_str") > F.lit(lo)) & (F.col(f"idx{i}_str") < F.lit(hi))
         cond = c if cond is None else (cond | c)
     src = df if precomputed else build_pivot_index(
@@ -851,7 +875,7 @@ def knn_batch(
             "distance"
         ),
     )
-    return top_n_per_query(scored, k, q_id, "distance", id_col)
+    return top_n_per_query(scored, k, q_id, F.col("distance"), F.col(id_col))
 
 
 def candidate_count(

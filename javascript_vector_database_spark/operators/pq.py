@@ -551,9 +551,9 @@ def pq_batch_search(
         F.col(id_col),
         F.col("__x.ad").alias("__ad"),
     )
-    cand = top_n_per_query(scored, k * rerank, q_id, "__ad", id_col).select(
-        q_id, id_col
-    )
+    cand = top_n_per_query(
+        scored, k * rerank, q_id, F.col("__ad"), F.col(id_col)
+    ).select(q_id, id_col)
     qdf = codes.sparkSession.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         schema=f"{q_id} long, __qv array<double>",
@@ -569,7 +569,9 @@ def pq_batch_search(
             ).alias("distance"),
         )
     )
-    return top_n_per_query(reranked, k, q_id, "distance", id_col)
+    return top_n_per_query(
+        reranked, k, q_id, F.col("distance"), F.col(id_col)
+    )
 
 
 # ---------------------------------------------------------------------------

@@ -524,12 +524,7 @@ def ann_doc_reads(spark: SparkSession, sf_dir: str) -> DataFrame:
     pivots = used_pivots(len(qv))
     emb = load_table(spark, sf_dir, "embeddings")
     src = knn.build_pivot_index(emb, pivots)
-    cond = None
-    for i, p in enumerate(pivots):
-        d_i = knn._py_euclid(p, qv)
-        lo, hi = d_i - d_i * INDEX_DISTANCE, d_i + d_i * INDEX_DISTANCE
-        c = (F.col(f"idx{i}") > F.lit(lo)) & (F.col(f"idx{i}") < F.lit(hi))
-        cond = c if cond is None else (cond | c)
+    cond = knn._band_cond("ann_doc_reads", qv, pivots, INDEX_DISTANCE)
     return src.where(cond).agg(
         F.count(F.lit(1)).alias("doc_reads"),
         F.lit(emb.count()).cast("long").alias("total_docs"),

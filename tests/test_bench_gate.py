@@ -5,7 +5,9 @@ The retry decision and the attempt merge are the round's headline
 bench change; a regression here silently turns the gate artifact back
 into the r12 failure mode (a contended box's numbers recorded as the
 metrics of record with no correction), so both are pinned at the
-decision-table level.
+decision-table level.  The measurement helpers every probe extra and
+every column go through (``_extra``, ``_column``) are pinned with fake
+probes and a fake clock.
 """
 
 from __future__ import annotations
@@ -112,3 +114,81 @@ def test_merge_normalization_scales_by_cleanest_drift():
     assert out["knn_exact_sec_per_query_drift_normalized"] == pytest.approx(
         0.25
     )
+
+
+class _Rows:
+    """A probe result: ``collect()`` yields one ``vec_id`` row per id."""
+
+    def __init__(self, ids):
+        self.ids = ids
+
+    def collect(self):
+        return [{"vec_id": i} for i in self.ids]
+
+
+def _probe(answers: dict, calls: list):
+    def probe(q):
+        calls.append(q)
+        return _Rows(answers[q])
+
+    return probe
+
+
+def _fake_timed(monkeypatch, times):
+    """``bench._timed`` returning the given durations in turn."""
+    it = iter(times)
+    monkeypatch.setattr(bench, "_timed", lambda fn: (next(it), fn()))
+    monkeypatch.setattr(bench, "_CONTENDED_EXTRA", {})
+
+
+def test_extra_recall_is_mean_overlap_with_truth(monkeypatch):
+    _fake_timed(monkeypatch, [0.8, 0.6])
+    store, calls = {}, []
+    answers = {0: [1, 2, 3, 4], 1: [5, 6]}
+    truth = [{1, 2, 9, 10}, {5, 6}]
+    sets = bench._extra(store, "x", _probe(answers, calls), [0, 1], truth)
+    assert sets == [{1, 2, 3, 4}, {5, 6}]
+    # (2/4 + 2/2) / 2
+    assert store["x_recall_at_10"] == pytest.approx(0.75)
+
+
+def test_extra_sec_per_query_is_best_run_over_queries(monkeypatch):
+    _fake_timed(monkeypatch, [0.8, 0.6])
+    store, calls = {}, []
+    bench._extra(store, "x", _probe({0: [1], 1: [2]}, calls), [0, 1])
+    assert store == {"x_sec_per_query": pytest.approx(0.3)}
+    assert calls == [0, 1, 0, 1]  # two timed runs
+    assert bench._CONTENDED_EXTRA == {}
+
+
+def test_extra_flags_a_run_over_2x_slower(monkeypatch):
+    _fake_timed(monkeypatch, [3.0, 1.0])
+    store = {}
+    bench._extra(store, "x", _probe({0: [1]}, []), [0])
+    assert store["x_sec_per_query"] == pytest.approx(1.0)
+    assert bench._CONTENDED_EXTRA == {"x_sec_per_query": 3.0}
+
+
+def test_extra_untimed_runs_once_and_writes_no_timing(monkeypatch):
+    _fake_timed(monkeypatch, [])  # any _timed call would raise
+    store, calls = {}, []
+    sets = bench._extra(
+        store, "x", _probe({0: [1, 2], 1: [3]}, calls), [0, 1],
+        truth=[{1, 2}, {4}], timed=False,
+    )
+    assert calls == [0, 1]
+    assert sets == [{1, 2}, {3}]
+    assert store == {"x_recall_at_10": pytest.approx(0.5)}
+
+
+def test_column_best_of_2_per_row_and_flags(monkeypatch):
+    class _Registry:
+        @staticmethod
+        def queries():
+            return {"a": lambda s, d: _Rows([]), "b": lambda s, d: _Rows([])}
+
+    _fake_timed(monkeypatch, [1.23456, 1.0, 5.0, 2.0])
+    monkeypatch.setattr(bench, "registry", _Registry)
+    times, contended = bench._column(None, ["a", "b"], "/data")
+    assert times == {"a": 1.0, "b": 2.0}
+    assert contended == {"b": 2.5}

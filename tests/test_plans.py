@@ -5,6 +5,8 @@ lost partition pruning) fails CI."""
 
 from __future__ import annotations
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -442,10 +444,19 @@ def test_q7_star_broadcasts_all_dims(spark):
 def test_triangle_count_no_cartesian(spark):
     """Degree-oriented triangle counting: wedge + closing joins must all
     be hash joins on real keys — a nested-loop/cartesian means the
-    orientation or the semi-join broke."""
+    orientation or the semi-join broke.  Both are SHUFFLE_HASH-hinted in
+    ``graph.closed_wedges``: a sort-merge join would sort the O(m^1.5)
+    wedge set, so the wedge join and the closing LeftSemi are the plan's
+    only two joins and both are ShuffledHashJoin."""
     plan = _plan(registry.queries()["graph_triangle_count"](spark, SF))
     assert "CartesianProduct" not in plan, plan
     assert "BroadcastNestedLoopJoin" not in plan, plan
+    assert "SortMergeJoin" not in plan, plan
+    joins = re.findall(r"(\w+Join) \[[^\]]*\], \[[^\]]*\], (\w+)", plan)
+    assert sorted(joins) == [
+        ("ShuffledHashJoin", "Inner"),
+        ("ShuffledHashJoin", "LeftSemi"),
+    ], plan
 
 
 def test_q2_decorrelated_all_dims_broadcast(spark):
