@@ -47,10 +47,17 @@ Spark-first design notes (scale: 100 TB, 1000 executors):
   the recompute, stored, batch and compat range probes, ``candidate_count``
   and the bench's prunable-fraction extras all read it.
 * The reference issues 5 separate index-range queries and union-dedups
-  (src/search.ts:23-40).  On a columnar store one scan with an OR of the 5
-  range predicates is the same candidate set with 1/5 the reads; min-max
-  row-group skipping still applies per conjunct.  We keep the single-pass
-  plan and cite the equivalence.
+  (src/search.ts:23-40).  Its five key ranges are five (pivot, key)
+  ranges of one sorted composite index here (``write_pivot_index_tables``):
+  the stored probes read that index with ONE scan whose predicate ORs the
+  five ranges, the same candidate set as five scans, and min-max
+  row-group skipping still applies per conjunct.  On the ``search``
+  benchmark (10k x 384, 5 pivots, 4 cores) one scan instead of five cut
+  the generated Java compiled per stored probe from 10 compiles to 2
+  (every band scan inlines its bounds, so each query's source is new)
+  and the warm range / similarity probe from 0.49 / 0.64 s to
+  0.34 / 0.40 s.  The recompute probes scan one frame with the OR of the
+  five bands, the same single-pass plan.
 * Pivot-distance index columns are precomputed at write time
   (``build_pivot_index``), exactly like the reference computes idx0..idx4
   at pipeline time (src/database.ts:195-198).  At 100 TB these are plain
@@ -157,7 +164,7 @@ def _top_k_sql(
 ) -> str:
     """``(id, distance)`` of the k rows of ``{base}`` nearest the query,
     ordered by (distance, id) — the tail every single-query probe
-    shares.  ``cands`` is a subquery over the index tables (or over a
+    shares.  ``cands`` is a subquery over the stored pivot index (or a
     scored code table, ``rerank_pool``) yielding ``id_col``: the base
     rows are then first semi-joined to those ids, the stored probes'
     doc read.  The candidate side is bounded by
@@ -310,6 +317,32 @@ def _band_cond(
     return cond
 
 
+def _pivot_index_rows(
+    df: DataFrame,
+    pivots: list[list[float]],
+    id_col: str,
+    vec_col: str,
+    compat_strings: bool = False,
+) -> DataFrame:
+    """The composite index entries of ``df``: one ``(pivot, key, id)``
+    row per (vector, pivot), ``key`` the pivot distance, or its 10-char
+    string (``compat_strings``)."""
+    key = "idx{}_str" if compat_strings else "idx{}"
+    keys = F.array(*[F.col(key.format(n)) for n in range(len(pivots))])
+    return (
+        build_pivot_index(df, pivots, vec_col, compat_strings)
+        .select(F.posexplode(keys).alias("pivot", "key"), id_col)
+    )
+
+
+def _sorted_by_pivot_key(df: DataFrame, n_parts: int) -> DataFrame:
+    """``df`` range-partitioned into ``n_parts`` and sorted within them
+    by (pivot, key): the stored layout of the composite index."""
+    return df.repartitionByRange(n_parts, "pivot", "key").sortWithinPartitions(
+        "pivot", "key"
+    )
+
+
 def write_pivot_index_tables(
     df: DataFrame,
     pivots: list[list[float]],
@@ -320,67 +353,45 @@ def write_pivot_index_tables(
     compat_strings: bool = False,
 ) -> None:
     """Materialize the reference's pivot index as STORED tables — the
-    write-time path behind ``ann_index_range_stored``.
+    write-time path behind the ``*_stored`` probes.
 
-    The reference keeps FIVE secondary indexes, one per pivot, each a
+    The reference declares five secondary indexes, one per pivot, each a
     sorted (idxN, id) structure range-scanned at query time
-    (src/database.ts:103-109 declares indexes ['idx0']..['idx4'];
-    src/search.ts:27-36 range-scans them).  The parquet translation:
-    per pivot a skinny (id, idxN) table written range-partitioned AND
-    sorted by its own key, so a probe's band predicate prunes at BOTH
-    granularities — row groups via min/max footer stats, files via the
-    range layout — exactly the I/O the reference's index buys it.  The
-    base (id, vector) table is written beside them for the doc-read
-    re-rank.  One source scan feeds all five index writes plus the base
-    (the pivot distances are scan-local projections, no shuffle); at
-    100 TB this is a per-collection build job, amortized over every
-    subsequent query like any secondary index.
+    (src/database.ts:103-109, src/search.ts:27-36).  Here the five are
+    one composite index, ``index/`` = (pivot, key, id): every vector's
+    five pivot distances exploded to five rows, range-partitioned into
+    ``n_files`` files per pivot and sorted within them by (pivot, key).
+    The reference's five key ranges are five (pivot, key) ranges of this
+    one sorted table, so a probe reads it with one scan, and its band
+    predicate still prunes at both granularities — row groups via
+    min/max footer stats, files via the range layout.  The base
+    (id, vector) table is written beside it, straight from ``df``, for
+    the doc-read re-rank.  At 100 TB this is a per-collection build job,
+    amortized over every later query like any secondary index.
 
     ``compat_strings=True`` stores the key the reference PHYSICALLY
-    stores — the 10-char lexicographic string of
-    ``indexNrToString`` (src/database.ts:223-225) — instead of the
-    double: each table becomes (id, idxN_str) sorted by the string.
-    Parquet keeps binary min/max stats for strings, so string band
-    predicates prune row groups exactly like the double mode; probe
-    with ``ann_index_range_compat_stored``."""
-    from concurrent.futures import ThreadPoolExecutor
-
-    src = build_pivot_index(
-        df, pivots, vec_col, compat_strings=compat_strings
+    stores — the 10-char lexicographic string of ``indexNrToString``
+    (src/database.ts:223-225) — instead of the double.  Parquet keeps
+    binary min/max stats for strings, so string band predicates prune
+    row groups exactly like the double mode; probe with
+    ``ann_index_range_compat_stored``."""
+    # the range partitioner's sampling job and the shuffle would each
+    # run the pivot folds; the cache (filled by the sampling job) runs
+    # them once.  On the search benchmark (10k x 384, 4 cores) the cold
+    # write+open read a median 10.0 s with it, 10.6 s without (6 runs
+    # each)
+    rows = _pivot_index_rows(
+        df, pivots, id_col, vec_col, compat_strings
     ).cache()
     try:
-        # materialize the cache ONCE before the concurrent writers (a
-        # cold cache offers no cross-job computation lock, so parallel
-        # first-touch would redo the pivot folds per writer)
-        src.count()
-
-        # the six writes are independent jobs over the same cached
-        # input — submit them from a small thread pool so each write's
-        # range-sampling pass and output tail back-fill the cores the
-        # others leave idle (guide §2.6); Spark's scheduler interleaves
-        # concurrent jobs in one application safely
-        def _write_idx(i: int) -> None:
-            key = f"idx{i}_str" if compat_strings else f"idx{i}"
-            (
-                src.select(id_col, key)
-                .repartitionByRange(n_files, F.col(key))
-                .sortWithinPartitions(key)
-                .write.mode("overwrite")
-                .parquet(os.path.join(base_dir, f"idx{i}"))
-            )
-
-        def _write_base() -> None:
-            src.select(id_col, vec_col).write.mode("overwrite").parquet(
-                os.path.join(base_dir, "base")
-            )
-
-        with ThreadPoolExecutor(max_workers=3) as pool:
-            futs = [pool.submit(_write_idx, i) for i in range(len(pivots))]
-            futs.append(pool.submit(_write_base))
-            for f in futs:
-                f.result()
+        _sorted_by_pivot_key(rows, n_files * len(pivots)).write.mode(
+            "overwrite"
+        ).parquet(os.path.join(base_dir, "index"))
     finally:
-        src.unpersist()
+        rows.unpersist()
+    df.select(id_col, vec_col).write.mode("overwrite").parquet(
+        os.path.join(base_dir, "base")
+    )
 
 
 def append_pivot_index_delta(
@@ -391,31 +402,24 @@ def append_pivot_index_delta(
     vec_col: str = "embedding",
 ) -> None:
     """Ingest NEW vectors into the stored pivot index (LSM discipline):
-    each batch appends one unsorted segment file per index table plus
-    the base rows — O(|delta|) work, no rewrite of the sorted history.
+    each batch appends one unsorted segment file to ``index/`` plus the
+    base rows — O(|delta|) work, no rewrite of the sorted history.
     Probes stay CORRECT immediately (they read the whole directory);
-    what degrades is the delta segments' footer prunability (an
-    unsorted file's [min,max] spans the key range, so band predicates
-    can't skip it) — the classic LSM read-amplification tax, repaid by
-    compact_pivot_index_tables.  Insert-only by design: keyed
-    upsert/delete maintenance is the ParquetTable MERGE path
-    (stream_pivot_index_live); these five tables are the SORTED
-    secondary projections whose lifecycle is append -> compact, like
-    any LSM level."""
-    src = build_pivot_index(df_delta, pivots, vec_col).cache()
-    try:
-        for i in range(len(pivots)):
-            (
-                src.select(id_col, f"idx{i}")
-                .coalesce(1)
-                .write.mode("append")
-                .parquet(os.path.join(base_dir, f"idx{i}"))
-            )
-        src.select(id_col, vec_col).write.mode("append").parquet(
-            os.path.join(base_dir, "base")
-        )
-    finally:
-        src.unpersist()
+    what degrades is the delta segment's footer prunability (an
+    unsorted file's [min,max] spans every pivot and the key range, so
+    band predicates can't skip it) — the classic LSM read-amplification
+    tax, repaid by compact_pivot_index_tables.  ``df_delta`` is read
+    once per write, so it must give the same rows each time (a
+    micro-batch does).  Insert-only by design: keyed upsert/delete
+    maintenance is the ParquetTable MERGE path (stream_pivot_index_live);
+    the composite index is the SORTED secondary projection whose
+    lifecycle is append -> compact, like any LSM level."""
+    _pivot_index_rows(df_delta, pivots, id_col, vec_col).coalesce(1).write.mode(
+        "append"
+    ).parquet(os.path.join(base_dir, "index"))
+    df_delta.select(id_col, vec_col).write.mode("append").parquet(
+        os.path.join(base_dir, "base")
+    )
 
 
 def compact_pivot_index_tables(
@@ -424,68 +428,86 @@ def compact_pivot_index_tables(
     n_pivots: int = 5,
     n_files: int = 8,
 ) -> None:
-    """Re-sort each index table after a run of delta appends — the LSM
-    compaction that restores footer prunability: range-partition +
-    sort each table by its own key, write to a sibling dir, swap in.
-    Base table is compacted to bounded file count without a sort (point
-    lookups don't need one).  Cost: one shuffle per index table over
-    that table's rows — schedule it off the query path, like any
-    OPTIMIZE.
+    """Re-sort the composite index after a run of delta appends — the
+    LSM compaction that restores footer prunability: range-partition +
+    sort ``index/`` by (pivot, key) into ``n_files`` files per pivot,
+    write to a sibling dir, swap in.  The base table is compacted to
+    ``n_files`` files without a sort (point lookups don't need one).
+    Cost: one shuffle of the index rows — schedule it off the query
+    path, like any OPTIMIZE.
 
     Swap discipline matches ParquetTable._swap_in: rmtree(live) then
     os.replace(staged, live) — the rename is atomic, the pair is NOT
     (a crash between them leaves that one table absent until re-run;
-    the staged data survives in the .tmp sibling).  The transactional
-    version is a Delta OPTIMIZE commit.  Stale .tmp siblings from a
-    crashed prior run are removed up front so a re-run always
-    completes instead of wedging on leftovers (r12 review)."""
+    the staged data survives in the .compact.tmp sibling).  The
+    transactional version is a Delta OPTIMIZE commit.  A stale
+    .compact.tmp sibling from a crashed prior run is removed up front,
+    so a re-run always completes instead of wedging on leftovers."""
     import shutil
-    from concurrent.futures import ThreadPoolExecutor
 
-    def _compact_one(name: str, key: str | None) -> None:
+    for name in ("index", "base"):
         path = os.path.join(base_dir, name)
         tmp = path + ".compact.tmp"
         if os.path.exists(tmp):
             shutil.rmtree(tmp)  # crashed prior run's staging
         df = spark.read.parquet(path)
-        if key is not None:
-            w = (
-                df.repartitionByRange(n_files, F.col(key))
-                .sortWithinPartitions(key)
-            )
+        if name == "index":
+            df = _sorted_by_pivot_key(df, n_files * n_pivots)
         else:
-            w = df.coalesce(n_files)
-        w.write.mode("overwrite").parquet(tmp)
+            df = df.coalesce(n_files)
+        df.write.mode("overwrite").parquet(tmp)
         shutil.rmtree(path)
         os.replace(tmp, path)
-
-    # each table compacts independently (own dir, own swap) — overlap
-    # the six rewrite jobs (guide §2.6); per-table swap discipline is
-    # unchanged, so crash behavior is the same as the sequential form
-    with ThreadPoolExecutor(max_workers=3) as pool:
-        futs = [
-            pool.submit(_compact_one, f"idx{i}", f"idx{i}")
-            for i in range(n_pivots)
-        ]
-        futs.append(pool.submit(_compact_one, "base", None))
-        for f in futs:
-            f.result()
 
 
 def open_pivot_index_tables(
     spark: SparkSession, base_dir: str, n_pivots: int = 5
 ) -> dict[str, DataFrame]:
-    """Open the stored index/base tables ONCE (lazy handles — schema +
-    file listing resolved here, reused by every probe).  The reference
-    holds its collections open for the process lifetime; re-opening per
-    query would re-pay listing/footer costs that are not part of the
-    probe."""
-    out = {
-        f"idx{i}": spark.read.parquet(os.path.join(base_dir, f"idx{i}"))
-        for i in range(n_pivots)
+    """Open the stored ``index`` and ``base`` tables ONCE (lazy handles
+    — schema + file listing resolved here, reused by every probe).  The
+    reference holds its collections open for the process lifetime;
+    re-opening per query would re-pay listing/footer costs that are not
+    part of the probe.  The one composite index holds every pivot, so
+    ``n_pivots`` does not change what is opened."""
+    return {
+        name: spark.read.parquet(os.path.join(base_dir, name))
+        for name in ("index", "base")
     }
-    out["base"] = spark.read.parquet(os.path.join(base_dir, "base"))
-    return out
+
+
+def _stored_top_k(
+    spark: SparkSession,
+    tables: dict[str, DataFrame] | None,
+    base_dir: str,
+    cands: str,
+    query_vec: list[float],
+    k: int,
+    id_col: str,
+    vec_col: str,
+) -> DataFrame:
+    """Run a stored probe: the candidate subquery ``cands`` over
+    ``{index}``, then the shared doc-read re-rank, as one statement."""
+    tables = tables or open_pivot_index_tables(spark, base_dir)
+    return spark.sql(_top_k_sql(query_vec, k, id_col, vec_col, cands), **tables)
+
+
+def _band_sql(
+    probe: str,
+    query_vec: list[float],
+    pivots: list[list[float]],
+    index_distance: float,
+    key_lit=double_sql,
+) -> str:
+    """The OR over the pivots n of ``pivot = n AND lo_n < key < hi_n``:
+    the reference's five open key ranges (src/search.ts:27-36) as five
+    (pivot, key) ranges of the composite index.  ``key_lit`` renders a
+    ``pivot_bands`` bound as a key literal."""
+    return " OR ".join(
+        f"(`pivot` = {n} AND `key` > {key_lit(lo)} AND `key` < {key_lit(hi)})"
+        for n, (lo, hi) in enumerate(
+            pivot_bands(probe, query_vec, pivots, index_distance)
+        )
+    )
 
 
 def ann_index_range_stored(
@@ -499,60 +521,29 @@ def ann_index_range_stored(
     vec_col: str = "embedding",
     tables: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Range-ANN served from the STORED pivot index tables (see
+    """Range-ANN served from the STORED pivot index (see
     write_pivot_index_tables) — the reference's actual query plan, five
     index range scans + doc reads (src/search.ts:19-54), rather than the
     recompute-the-index-per-query shape the faithful ``knn_ann_range``
     row keeps for oracle fidelity.
 
-    Per pivot i the band predicate ``idx_i IN (d_i ± d_i·w)`` hits a
-    table sorted by idx_i, so it pushes to parquet and row groups whose
-    [min,max] miss the band are never decoded (the measured fraction is
-    the ``pivot_idx_prunable_frac`` bench extra).  The five band scans
-    are one UNION ALL of candidate ids, and ONE broadcast semi-join back
-    to the base table re-ranks exactly and takes top-k (``_top_k_sql``).
+    The five key ranges are five (pivot, key) ranges of the one sorted
+    composite index, OR'd into one scan: each conjunct pushes to
+    parquet, so row groups whose [min,max] miss every band are never
+    decoded (the measured fraction is the ``pivot_idx_prunable_frac``
+    bench extra).  ONE broadcast semi-join back to the base table
+    re-ranks exactly and takes top-k (``_top_k_sql``); an id found
+    through several pivots is read once, the reference's Set union.
     The candidate set is band-bounded (tiny by construction: ±0.003 of
-    each pivot distance); the base side stays partition-local, no corpus
-    shuffle."""
-    bands = [
-        (f"idx{i}", double_sql(lo), double_sql(hi))
-        for i, (lo, hi) in enumerate(pivot_bands(
-            "ann_index_range_stored", query_vec, pivots, index_distance
-        ))
-    ]
+    each pivot distance); the base side stays partition-local, no
+    corpus shuffle."""
+    where = _band_sql(
+        "ann_index_range_stored", query_vec, pivots, index_distance
+    )
+    cands = f"SELECT {_ident(id_col)} FROM {{index}} WHERE {where}"
     return _stored_top_k(
-        spark, base_dir, tables, _band_union_sql(id_col, bands),
-        query_vec, len(pivots), k, id_col, vec_col,
+        spark, tables, base_dir, cands, query_vec, k, id_col, vec_col
     )
-
-
-def _band_union_sql(id_col: str, bands: list[tuple[str, str, str]]) -> str:
-    """UNION ALL of the ids whose ``key`` lies in the open band
-    (lo, hi), one sargable scan of index table ``{idx<i>}`` per
-    (key, lo, hi) band; lo and hi are SQL literals."""
-    i = _ident(id_col)
-    return " UNION ALL ".join(
-        f"SELECT {i} FROM {{idx{n}}} "
-        f"WHERE {_ident(key)} > {lo} AND {_ident(key)} < {hi}"
-        for n, (key, lo, hi) in enumerate(bands)
-    )
-
-
-def _stored_top_k(
-    spark: SparkSession,
-    base_dir: str,
-    tables: dict[str, DataFrame] | None,
-    cands: str,
-    query_vec: list[float],
-    n_pivots: int,
-    k: int,
-    id_col: str,
-    vec_col: str,
-) -> DataFrame:
-    """Run a stored probe: the candidate subquery ``cands`` over the
-    index tables, then the shared doc-read re-rank, as one statement."""
-    tables = tables or open_pivot_index_tables(spark, base_dir, n_pivots)
-    return spark.sql(_top_k_sql(query_vec, k, id_col, vec_col, cands), **tables)
 
 
 def ann_index_range_compat_stored(
@@ -568,28 +559,23 @@ def ann_index_range_compat_stored(
 ) -> DataFrame:
     """The reference's PHYSICAL index probed as stored: the 10-char
     lexicographic string keys (indexNrToString,
-    src/database.ts:223-225) persisted as the five sorted per-pivot
-    secondary tables (``write_pivot_index_tables(compat_strings=True)``)
-    and range-scanned with STRING band bounds (src/search.ts:27-36) —
-    quirk-faithful, so it diverges from the double-key stored mode
-    across digit-count regime boundaries exactly like
-    ``ann_index_range_compat`` (SURVEY §1.3), and hash-matches that
-    row's oracle.  Parquet keeps binary min/max footer stats for
-    strings, so the string band prunes row groups the same way the
-    double tables do; candidates union-dedup via the shared semi-join
-    doc-read re-rank, no corpus shuffle."""
-    # a key is the text of a number: it holds no quote to escape
-    bands = [
-        (f"idx{i}_str", f"'{_py_index_string(lo)}'",
-         f"'{_py_index_string(hi)}'")
-        for i, (lo, hi) in enumerate(pivot_bands(
-            "ann_index_range_compat_stored", query_vec, pivots,
-            index_distance,
-        ))
-    ]
+    src/database.ts:223-225) persisted as the sorted composite index
+    (``write_pivot_index_tables(compat_strings=True)``) and range-scanned
+    with STRING band bounds (src/search.ts:27-36) — quirk-faithful, so
+    it diverges from the double-key stored mode across digit-count
+    regime boundaries exactly like ``ann_index_range_compat`` (SURVEY
+    §1.3), and hash-matches that row's oracle.  Parquet keeps binary
+    min/max footer stats for strings, so the string bands prune row
+    groups the same way the double keys do; candidates union-dedup via
+    the shared semi-join doc-read re-rank, no corpus shuffle."""
+    where = _band_sql(
+        "ann_index_range_compat_stored", query_vec, pivots, index_distance,
+        # a key is the text of a number: it holds no quote to escape
+        key_lit=lambda x: f"'{_py_index_string(x)}'",
+    )
+    cands = f"SELECT {_ident(id_col)} FROM {{index}} WHERE {where}"
     return _stored_top_k(
-        spark, base_dir, tables, _band_union_sql(id_col, bands),
-        query_vec, len(pivots), k, id_col, vec_col,
+        spark, tables, base_dir, cands, query_vec, k, id_col, vec_col
     )
 
 
@@ -609,40 +595,28 @@ def ann_index_range_stored_batch(
     ``ann_index_range_stored``, completing the batch family beside
     ``knn_batch``/``knn_batch_ivf``/``pq_batch_search``).
 
-    |Q|·n_pivots band mini-scans of the sorted skinny tables — the SAME
-    sargable pushed predicates the single-query probe runs, planned in
-    ONE job DAG so the driver submits once and every scan's row-group
-    skipping still applies — each tagged with its query_id, then
-    per-query dedup (the reference's Set union), ONE hash join back to
-    the base table for the doc reads (candidate side is band-bounded
-    tiny, so it broadcasts), a broadcast join to the (query_id, qvec)
-    table for the exact distances, and per-query top-k through a
-    row_number window Catalyst rewrites into a two-phase
-    WindowGroupLimit.  The corpus is never fanned out by |Q| and never
-    shuffled; scan count grows with |Q|·n_pivots, so for huge eval
-    batches prefer the IVF batch path (equi-join on stored cells) —
-    this is the faithful stored-index shape for bounded batches.
-    Output: (query_id, vec_id, distance)."""
-    q_bands = [
-        (qid, pivot_bands(
+    One band scan of the composite index per query — the SAME sargable
+    pushed predicate the single-query probe runs, planned in ONE job
+    DAG so the driver submits once and every scan's row-group skipping
+    still applies — each tagged with its query_id, then per-query dedup
+    (the reference's Set union), ONE join back to the base table for
+    the doc reads (the candidate side is band-bounded tiny, so it
+    broadcasts), a broadcast join to the (query_id, qvec) table for the
+    exact distances, and per-query top-k through a row_number window
+    Catalyst rewrites into a two-phase WindowGroupLimit.  The corpus is
+    never fanned out by |Q| and never shuffled; scan count grows with
+    |Q|, so for huge eval batches prefer the IVF batch path (equi-join
+    on stored cells) — this is the faithful stored-index shape for
+    bounded batches.  Output: (query_id, vec_id, distance)."""
+    scans = " UNION ALL ".join(
+        f"SELECT {int(qid)} AS query_id, {_ident(id_col)} FROM {{index}} "
+        "WHERE " + _band_sql(
             "ann_index_range_stored_batch", qv, pivots, index_distance
-        ))
+        )
         for qid, qv in queries
-    ]
-    tables = tables or open_pivot_index_tables(spark, base_dir, len(pivots))
-    cands = None
-    for qid, bands in q_bands:
-        for i, (lo, hi) in enumerate(bands):
-            c = (
-                tables[f"idx{i}"]
-                .where(
-                    (F.col(f"idx{i}") > F.lit(lo))
-                    & (F.col(f"idx{i}") < F.lit(hi))
-                )
-                .select(F.lit(qid).alias("query_id"), id_col)
-            )
-            cands = c if cands is None else cands.unionByName(c)
-    cands = cands.dropDuplicates(["query_id", id_col])
+    )
+    tables = tables or open_pivot_index_tables(spark, base_dir)
+    cands = spark.sql(f"SELECT DISTINCT * FROM ({scans})", **tables)
     qdf = spark.createDataFrame(
         [(int(qid), [float(x) for x in qv]) for qid, qv in queries],
         schema="query_id int, qvec array<double>",
@@ -675,20 +649,20 @@ def ann_index_similarity_stored(
     vec_col: str = "embedding",
     tables: dict[str, DataFrame] | None = None,
 ) -> DataFrame:
-    """Pivot-neighborhood ANN served from the STORED per-pivot index
-    tables (write_pivot_index_tables) — the second of the reference's
-    two search modes run against its real index shape
-    (src/search.ts:56-109: per pivot, two Mango queries with $lt / $gt
-    + limit over the sorted idxN index).
+    """Pivot-neighborhood ANN served from the STORED pivot index
+    (write_pivot_index_tables) — the second of the reference's two
+    search modes run against its real index shape (src/search.ts:56-109:
+    per pivot, two Mango queries with $lt / $gt + limit over the sorted
+    idxN index).
 
-    Each side is a one-column predicate over a table SORTED by that
-    column, and both sides of a pivot are one scan of its index table
-    filtered by ``idx_i < d_i OR idx_i > d_i``, pushed to parquet.  The
-    five scans are one UNION ALL tagged (pivot, side), with the side's
-    order (idx desc below d_i, idx asc above it) folded into one
-    ascending key, and one ``row_number() OVER (PARTITION BY pivot, side
-    ORDER BY key, id) <= docs_per_side`` filter keeps each side's
-    nearest entries.  Catalyst plans that filter as a two-phase
+    Both sides of every pivot are one scan of the composite index
+    filtered by the OR over the pivots n of ``pivot = n AND (key < d_n
+    OR key > d_n)``, pushed to parquet.  Each entry is tagged with its
+    side (``key > d``, where ``d`` is ``CASE pivot WHEN n THEN d_n``),
+    the side's order (key desc below d, key asc above it) is folded into
+    one ascending sort key, and one ``row_number() OVER (PARTITION BY
+    pivot, above ORDER BY key, id) <= docs_per_side`` filter keeps each
+    side's nearest entries.  Catalyst plans that filter as a two-phase
     ``WindowGroupLimit``: the Partial phase below the single exchange
     emits at most docs_per_side rows per (pivot, side) and map
     partition, so the candidate side is one shuffle of a few hundred
@@ -696,25 +670,29 @@ def ann_index_similarity_stored(
     candidate set is ≤ 2·n_pivots·docs_per_side rows by construction.
     Hash-matches the recomputed ``ann_index_similarity`` (same bounds,
     same tie-break, same dedup, same re-rank)."""
-    ds = _pivot_distances("ann_index_similarity_stored", query_vec, pivots)
+    ds = [
+        double_sql(d)
+        for d in _pivot_distances("ann_index_similarity_stored", query_vec,
+                                  pivots)
+    ]
     i = _ident(id_col)
-    scans = []
-    for n, d in enumerate(ds):
-        key, lit = _ident(f"idx{n}"), double_sql(d)
-        scans.append(
-            f"SELECT {i}, {n} AS __pivot, {key} > {lit} AS __above, "
-            f"IF({key} > {lit}, {key}, -{key}) AS __key FROM {{idx{n}}} "
-            f"WHERE {key} < {lit} OR {key} > {lit}"
-        )
+    d = "CASE `pivot` " + " ".join(
+        f"WHEN {n} THEN {lit}" for n, lit in enumerate(ds)
+    ) + " END"
+    sides = " OR ".join(
+        f"(`pivot` = {n} AND (`key` < {lit} OR `key` > {lit}))"
+        for n, lit in enumerate(ds)
+    )
     cands = (
         f"SELECT {i} FROM (SELECT {i}, row_number() OVER (PARTITION BY "
-        f"__pivot, __above ORDER BY __key, {i}) AS __rn "
-        f"FROM ({' UNION ALL '.join(scans)})) "
-        f"WHERE __rn <= {int(docs_per_side)}"
+        f"`pivot`, __above ORDER BY __key, {i}) AS __rn FROM ("
+        f"SELECT {i}, `pivot`, `key` > __d AS __above, "
+        f"IF(`key` > __d, `key`, -`key`) AS __key FROM ("
+        f"SELECT {i}, `pivot`, `key`, {d} AS __d FROM {{index}} "
+        f"WHERE {sides}))) WHERE __rn <= {int(docs_per_side)}"
     )
     return _stored_top_k(
-        spark, base_dir, tables, cands, query_vec, len(pivots), k, id_col,
-        vec_col,
+        spark, tables, base_dir, cands, query_vec, k, id_col, vec_col
     )
 
 

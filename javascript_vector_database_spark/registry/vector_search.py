@@ -162,16 +162,17 @@ knn_ann_range_tuned.__doc__ = knn_ann_range_tuned.__doc__.format(
 def knn_ann_range_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's pivot index STORED and probed — the plan it
     actually runs, demonstrated in our engine rather than asserted:
-    five skinny (id, idxN) secondary-index tables are written at build
-    time, each sorted by its own key (src/database.ts:103-109's five
-    declared indexes), and the query is five band range-scans +
-    union-dedup + doc-read re-rank (src/search.ts:19-54).  Unlike the
+    src/database.ts:103-109's five declared indexes are written at
+    build time as one composite (pivot, key, id) index sorted by
+    (pivot, key), and the query's five band range-scans
+    (src/search.ts:19-54) are five (pivot, key) ranges of it, read in
+    one scan + union-dedup + doc-read re-rank.  Unlike the
     sibling ``knn_ann_range`` (which recomputes the pivot distances per
     query for oracle-shape fidelity), here the band predicates hit
     SORTED stored columns: they push to parquet and row groups outside
     the band are skipped via footer min/max — the index's I/O value,
     measured as the ``pivot_idx_prunable_frac`` bench extra and
-    plan-pinned (PushedFilters) in tests/test_r12_wave.py.  Same oracle
+    plan-pinned (PushedFilters) in tests/test_plans.py.  Same oracle
     as ``knn_ann_range``: the stored probe must return hash-identical
     results to the recomputed scan."""
     import os
@@ -233,10 +234,11 @@ def knn_ann_range_indexed_batch(
     STORED index — the batch sibling of knn_ann_range_indexed,
     completing the batch family (knn_batch_exact / ann_ivf_batch_search
     / ann_pq_batch_search) on the index shape the reference actually
-    ships.  |Q|·5 sargable band mini-scans planned in ONE job (each
-    still pushes to parquet and skips row groups), per-query Set-union
-    dedup, one broadcast doc-read join, per-query top-10 through a
-    WindowGroupLimit (operators/knn.py:ann_index_range_stored_batch)."""
+    ships.  One sargable band scan of the composite index per query,
+    planned in ONE job (each still pushes to parquet and skips row
+    groups), per-query Set-union dedup, one broadcast doc-read join,
+    per-query top-10 through a WindowGroupLimit
+    (operators/knn.py:ann_index_range_stored_batch)."""
     import os
     import tempfile
 
@@ -268,19 +270,19 @@ def stream_pivot_index_tables_live(
 ) -> DataFrame:
     """The SORTED secondary-index lifecycle certified live —
     the sibling of stream_pivot_index_live (which maintains the keyed
-    MERGE table); this row maintains the five per-pivot SORTED index
-    tables (the reference's declared indexes, src/database.ts:103-109)
+    MERGE table); this row maintains the SORTED composite (pivot, key)
+    index (the reference's declared indexes, src/database.ts:103-109)
     under streaming ingest with the LSM discipline:
 
     * each micro-batch ANTI-JOINS against the stored base ids first
       (the reference pipeline's idempotence gate, src/database.ts:182 —
       an append-only sink must dedup BEFORE appending, unlike the MERGE
       path where re-delivery is absorbed by the upsert), then appends
-      one unsorted segment per index table (append_pivot_index_delta);
+      one unsorted index segment (append_pivot_index_delta);
     * the feed arrives in two halves with a STOP/RESTART from the same
       checkpoint between them, plus a RE-DELIVERED slice of the first
       half that the anti-join must swallow;
-    * after the drain, compact_pivot_index_tables re-sorts every table
+    * after the drain, compact_pivot_index_tables re-sorts the index
       (the footer-prunability repayment measured by
       tests/test_r12_wave.py and the pivot_idx_prunable_frac extra);
     * the faithful ±0.003 band probe over the compacted stored tables
@@ -472,7 +474,7 @@ def knn_ann_similarity_indexed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The reference's SECOND search mode over its stored index —
     vectorSearchIndexSimilarity's per-pivot $lt/$gt + limit Mango
     queries (src/search.ts:56-109) run as sargable mini-scans of the
-    five sorted per-pivot secondary-index tables
+    sorted composite (pivot, key) index, one scan for all five pivots
     (operators/knn.py:ann_index_similarity_stored), union-dedup +
     broadcast doc-read re-rank.  Same oracle as knn_ann_similarity:
     the stored probe must hash-match the recompute path.  The in-row

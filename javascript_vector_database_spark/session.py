@@ -26,6 +26,24 @@ def shuffle_partitions_or_default(spark: SparkSession) -> int:
         return spark.sparkContext.defaultParallelism
 
 
+#: the driver heap asked for where the machine has room for it
+DRIVER_MEMORY_CAP_MIB = 24 * 1024
+
+
+def default_driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``spark.driver.memory`` when $SPARK_GRAFT_DRIVER_MEM is unset: 24g,
+    or half of the machine's MemTotal where that is less, so one driver
+    leaves room for a second process beside it.  Where ``meminfo`` can't
+    be read, 24g."""
+    try:
+        with open(meminfo) as f:
+            fields = dict(line.split(":", 1) for line in f if ":" in line)
+        half_mib = int(fields["MemTotal"].split()[0]) // 2048  # kB -> MiB
+    except (OSError, KeyError, ValueError, IndexError):
+        half_mib = DRIVER_MEMORY_CAP_MIB
+    return f"{min(DRIVER_MEMORY_CAP_MIB, half_mib)}m"
+
+
 def get_spark(
     app_name: str = "javascript-vector-database-spark",
     cpus: int | None = None,
@@ -34,7 +52,8 @@ def get_spark(
 ) -> SparkSession:
     """Build (or reuse) the tuned SparkSession.
 
-    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32.
+    ``cpus`` defaults to $SPARK_GRAFT_CPUS (driver contract) or 32; the
+    driver memory to $SPARK_GRAFT_DRIVER_MEM or ``default_driver_memory()``.
 
     The builder configs take full effect only when this call launches
     the JVM.  If a SparkContext already runs in this process, or the
@@ -73,7 +92,10 @@ def get_spark(
                 "SPARK_GRAFT_WAREHOUSE", "/tmp/spark_graft_warehouse"
             ),
         )
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         # JVM unified logging writes [warning][gc,alloc] lines to STDOUT
         # (observed: a GCLocker retry warning landed in front of bench.py's
         # one-JSON-line output); disable it so the driver contract's stdout

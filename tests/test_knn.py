@@ -419,3 +419,28 @@ def test_stored_probes_quote_identifiers(spark, stored_index, tmp_path):
     assert _rows(knn.ann_index_range(odd, qv, pivots, **names)) == _rows(
         knn.ann_index_range(emb, qv, pivots)
     )
+
+
+def test_stored_probes_over_empty_corpus(spark, stored_index, tmp_path):
+    """An index written over a zero-row frame answers every stored probe
+    with an empty frame of the probe's columns, not an error."""
+    emb, qv, pivots, _base = stored_index
+    empty = emb.where(F.lit(False))
+    base, compat = str(tmp_path / "empty"), str(tmp_path / "empty_compat")
+    knn.write_pivot_index_tables(empty, pivots, base)
+    knn.write_pivot_index_tables(empty, pivots, compat, compat_strings=True)
+    probes = {
+        "range": knn.ann_index_range_stored(spark, base, qv, pivots),
+        "similarity": knn.ann_index_similarity_stored(
+            spark, base, qv, pivots),
+        "compat": knn.ann_index_range_compat_stored(
+            spark, compat, qv, pivots),
+        "batch": knn.ann_index_range_stored_batch(
+            spark, base, [(1, qv), (2, qv)], pivots),
+    }
+    for name, got in probes.items():
+        cols = ["vec_id", "distance"]
+        if name == "batch":
+            cols = ["query_id", *cols]
+        assert got.columns == cols, name
+        assert got.collect() == [], name

@@ -13,6 +13,11 @@ from pyspark.sql import functions as F
 from javascript_vector_database_spark import registry
 from javascript_vector_database_spark.operators import ann_scale
 from javascript_vector_database_spark.tables import load_table
+from tests.plan_scans import (
+    file_scans,
+    pivot_band_bounds,
+    pivot_side_bounds,
+)
 
 SF = "/root/testdata/sf0.01"
 
@@ -631,35 +636,52 @@ def test_weighted_median_pid_scan(spark):
     assert "BroadcastHashJoin" in plan, plan
 
 
+def _stored_probe_scans(probe) -> dict[str, str]:
+    """The probe's parquet scans by directory name: exactly two, the
+    one composite pivot index and the base table."""
+    scans = file_scans(probe)
+    assert sorted(name for name, _ in scans) == ["base", "index"], scans
+    return dict(scans)
+
+
 def test_ann_range_indexed_pushes_bands_to_stored_index(spark):
-    """The stored-pivot-index probe (knn_ann_range_indexed): every band
-    predicate must reach its skinny index table's parquet scan as a
-    PushedFilter on that idx column — the I/O the reference's five
-    secondary indexes exist to buy (src/database.ts:103-109)."""
+    """The stored-pivot-index probe (knn_ann_range_indexed) reads the
+    one composite (pivot, key) index with ONE scan, and every pivot's
+    band reaches that scan as a PushedFilter ``pivot = i AND key > lo_i
+    AND key < hi_i`` with the bounds of ``knn.pivot_bands`` — the I/O
+    the reference's five secondary indexes exist to buy
+    (src/database.ts:103-109)."""
+    from javascript_vector_database_spark.operators import knn
+    from javascript_vector_database_spark.pivots import INDEX_DISTANCE
+
     probe = registry.queries()["knn_ann_range_indexed"](spark, SF)
-    plan = _plan(probe)
-    segs = [
-        p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]
-    ]
-    for i in range(5):
-        assert any(
-            f"GreaterThan(idx{i}" in s and f"LessThan(idx{i}" in s
-            for s in segs
-        ), (i, segs)
+    pushed = _stored_probe_scans(probe)["index"]
+    qv = registry.get_query_vec(spark, SF)
+    pivots = registry.used_pivots(len(qv))
+    want = knn.pivot_bands("plan pin", qv, pivots, INDEX_DISTANCE)
+    got = {
+        n: (float(lo), float(hi))
+        for n, (lo, hi) in pivot_band_bounds(pushed).items()
+    }
+    assert got == dict(enumerate(want)), pushed
     # the doc-read re-rank never shuffles the corpus into a cartesian
-    assert "CartesianProduct" not in plan
+    assert "CartesianProduct" not in _plan(probe)
 
 
 def test_ann_similarity_indexed_one_exchange_window(spark):
-    """The stored similarity probe (knn_ann_similarity_indexed): its
-    per-pivot index scans are one UNION ALL whose per-(pivot, side)
-    row_number limit runs as a Partial WindowGroupLimit BELOW the one
-    hash exchange (not one TakeOrderedAndProject job per side); both
-    one-sided filters still reach each index scan, the doc read is a
-    broadcast left-semi join, and the only top-k is the final one."""
+    """The stored similarity probe (knn_ann_similarity_indexed): ONE
+    scan of the composite index, whose per-(pivot, side) row_number
+    limit runs as a Partial WindowGroupLimit BELOW the one hash exchange
+    (not one TakeOrderedAndProject job per side); both one-sided
+    filters of every pivot, ``pivot = i AND (key < d_i OR key > d_i)``,
+    reach that scan, the doc read is a broadcast left-semi join, and the
+    only top-k is the final one."""
+    from javascript_vector_database_spark.operators import knn
     from javascript_vector_database_spark.pivots import DOCS_PER_INDEX_SIDE
 
-    plan = _plan(registry.queries()["knn_ann_similarity_indexed"](spark, SF))
+    probe = registry.queries()["knn_ann_similarity_indexed"](spark, SF)
+    pushed = _stored_probe_scans(probe)["index"]
+    plan = _plan(probe)
     assert plan.count("TakeOrderedAndProject") == 1, plan
     top = plan.find("TakeOrderedAndProject")
     assert top < plan.find("BroadcastHashJoin"), plan
@@ -675,10 +697,15 @@ def test_ann_similarity_indexed_one_exchange_window(spark):
     partial = plan.find(f"row_number(), {DOCS_PER_INDEX_SIDE}, Partial")
     assert partial != -1 and plan.count(", Partial") == 1, plan
     assert plan.find("BroadcastExchange") < ex[0] < partial, plan
-    segs = [p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]]
-    for i in range(5):
-        assert any(f"LessThan(idx{i}" in s for s in segs), (i, segs)
-        assert any(f"GreaterThan(idx{i}" in s for s in segs), (i, segs)
+    qv = registry.get_query_vec(spark, SF)
+    ds = knn._pivot_distances(
+        "plan pin", qv, registry.used_pivots(len(qv))
+    )
+    got = {
+        n: (float(lt), float(gt))
+        for n, (lt, gt) in pivot_side_bounds(pushed).items()
+    }
+    assert got == {n: (d, d) for n, d in enumerate(ds)}, pushed
 
 
 def test_ivf_radius_partitioned_probe_prunes(spark):

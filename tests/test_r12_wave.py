@@ -232,10 +232,11 @@ def test_find_by_ids_rejects_nonprimitive_ids(spark, tmp_path):
 
 
 def test_pivot_index_rowgroups_prunable_on_band(spark, tmp_path):
-    """The written per-pivot index tables are sorted by their own key, so
-    the ±0.003 band skips most row groups on footer min/max alone —
-    the measured I/O win knn_ann_range_indexed claims (also emitted as
-    the pivot_idx_prunable_frac bench extra)."""
+    """The written composite index is sorted by (pivot, key), so each
+    pivot's ±0.003 band — the box {pivot: (i, i), key: (lo, hi)} — skips
+    most row groups on footer min/max alone: the measured I/O win
+    knn_ann_range_indexed claims (the pivot_idx_prunable_frac bench
+    extra reads the same boxes)."""
     from javascript_vector_database_spark.operators import knn, layout
     from javascript_vector_database_spark.pivots import INDEX_DISTANCE
     from javascript_vector_database_spark.registry import (
@@ -250,15 +251,20 @@ def test_pivot_index_rowgroups_prunable_on_band(spark, tmp_path):
     pivots = used_pivots(len(qv))
     base = str(tmp_path / "pividx")
     knn.write_pivot_index_tables(emb, pivots, base, n_files=8)
+    stats = layout.rowgroup_minmax_stats(
+        os.path.join(base, "index"), ["pivot", "key"]
+    )
+    assert len(stats) >= 8  # range layout actually produced files
     fracs = []
     for i, p in enumerate(pivots):
         d_i = knn._py_euclid(p, qv)
         lo, hi = d_i - d_i * INDEX_DISTANCE, d_i + d_i * INDEX_DISTANCE
-        stats = layout.rowgroup_minmax_stats(
-            os.path.join(base, f"idx{i}"), [f"idx{i}"]
-        )
-        assert len(stats) >= 8  # range layout actually produced files
-        fracs.append(layout.prunable_fraction(stats, {f"idx{i}": (lo, hi)}))
+        box = {"pivot": (i, i), "key": (lo, hi)}
+        fracs.append(layout.prunable_fraction(stats, box))
+        # the key band alone, over the row groups that hold pivot i:
+        # the other pivots' row groups must not carry the floor
+        own = [s for s in stats if s["pivot"][0] <= i <= s["pivot"][1]]
+        fracs.append(layout.prunable_fraction(own, {"key": (lo, hi)}))
     # a narrow band over a sorted key skips nearly everything; demand a
     # conservative floor so the pin is robust to row-group sizing
     assert min(fracs) >= 0.5, fracs
@@ -276,9 +282,11 @@ def test_pivot_index_rowgroups_prunable_on_band(spark, tmp_path):
 
 def test_ann_index_similarity_stored_matches_recompute(spark, tmp_path):
     """The stored-index similarity probe (the $lt and $gt sides of each
-    pivot over the sorted skinny tables + doc-read re-rank) must return
-    exactly the recompute-path rows, and its side predicates must push
-    to the parquet scans."""
+    pivot over the sorted composite index + doc-read re-rank) must
+    return exactly the recompute-path rows, and every pivot's side
+    predicates must push to the one index scan."""
+    from tests.plan_scans import file_scans, pivot_side_bounds
+
     from javascript_vector_database_spark.operators import knn
     from javascript_vector_database_spark.registry import (
         get_query_vec,
@@ -293,15 +301,15 @@ def test_ann_index_similarity_stored_matches_recompute(spark, tmp_path):
     base = str(tmp_path / "pividx_sim")
     knn.write_pivot_index_tables(emb, pivots, base)
     got = knn.ann_index_similarity_stored(spark, base, qv, pivots)
+    scans = dict(file_scans(got))
+    assert sorted(scans) == ["base", "index"], scans
+    assert sorted(pivot_side_bounds(scans["index"])) == list(
+        range(len(pivots))
+    ), scans
     ref = knn.ann_index_similarity(emb, qv, pivots)
     assert [tuple(r) for r in got.collect()] == [
         tuple(r) for r in ref.collect()
     ]
-    plan = got._jdf.queryExecution().executedPlan().toString()
-    segs = [p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]]
-    for i in range(5):
-        assert any(f"LessThan(idx{i}" in s for s in segs), (i, segs)
-        assert any(f"GreaterThan(idx{i}" in s for s in segs), (i, segs)
 
 
 def test_ivf_radius_batch_matches_single(spark):
@@ -458,9 +466,10 @@ def test_pivot_index_append_compact_lifecycle(spark, tmp_path):
         d0 = knn._py_euclid(pivots[0], qv)
         band = (d0 - d0 * INDEX_DISTANCE, d0 + d0 * INDEX_DISTANCE)
         stats = layout.rowgroup_minmax_stats(
-            os.path.join(base, "idx0"), ["idx0"]
+            os.path.join(base, "index"), ["pivot", "key"]
         )
-        return layout.prunable_fraction(stats, {"idx0": band}), len(stats)
+        box = {"pivot": (0, 0), "key": band}
+        return layout.prunable_fraction(stats, box), len(stats)
 
     sorted_frac, n0 = frac0()
     # two delta batches (LSM segments)
@@ -529,7 +538,7 @@ def test_compact_pivot_index_recovers_from_stale_staging(spark, tmp_path):
     pivots = used_pivots(len(qv))
     base = str(tmp_path / "stale")
     knn.write_pivot_index_tables(emb, pivots, base)
-    os.makedirs(os.path.join(base, "idx0.compact.tmp", "junk"))
+    os.makedirs(os.path.join(base, "index.compact.tmp", "junk"))
     knn.compact_pivot_index_tables(spark, base)
     got = knn.ann_index_range_stored(spark, base, qv, pivots).collect()
     ref = knn.ann_index_range(emb, qv, pivots).collect()

@@ -61,10 +61,12 @@ def test_compat_stored_equals_recompute_and_keeps_the_quirk(spark, tmp_path):
     got = knn.ann_index_range_compat_stored(spark, base, qv, pivots).collect()
     assert [tuple(r) for r in got] == [tuple(r) for r in ref]
 
-    # the stored table really carries the 10-char string key, and its
+    # the stored index really carries the 10-char string key, and its
     # values agree with the driver-side mirror
-    t0 = spark.read.parquet(os.path.join(base, "idx0"))
-    assert dict(t0.dtypes)["idx0_str"] == "string"
+    index = spark.read.parquet(os.path.join(base, "index"))
+    assert index.dtypes == [
+        ("pivot", "int"), ("key", "string"), ("vec_id", "bigint")
+    ]
     row = (
         knn.build_pivot_index(emb, pivots[:1], compat_strings=True)
         .select("vec_id", "idx0", "idx0_str")
@@ -73,23 +75,37 @@ def test_compat_stored_equals_recompute_and_keeps_the_quirk(spark, tmp_path):
     )
     assert row["idx0_str"] == knn._py_index_string(float(row["idx0"]))
     assert len(row["idx0_str"]) == 10
+    stored = index.where(
+        (F.col("pivot") == 0) & (F.col("vec_id") == row["vec_id"])
+    ).collect()
+    assert [r["key"] for r in stored] == [row["idx0_str"]]
 
 
 def test_compat_stored_pushes_string_bands(spark):
-    """Every string band predicate must reach its skinny index table's
-    parquet scan as a PushedFilter on idxN_str — parquet keeps binary
-    min/max stats for strings, so the reference's physical key buys the
-    same row-group skipping as the double tables."""
+    """The string probe reads the one composite index with ONE scan
+    beside the base scan, and every pivot's string band reaches it as a
+    PushedFilter ``pivot = i AND key > lo_i AND key < hi_i`` over the
+    10-char keys — parquet keeps binary min/max stats for strings, so
+    the reference's physical key buys the same row-group skipping as
+    the double keys."""
+    from javascript_vector_database_spark.pivots import INDEX_DISTANCE
     from javascript_vector_database_spark.registry import vector_search as vs
+    from tests.plan_scans import file_scans, pivot_band_bounds
 
     probe = vs.knn_ann_range_compat_indexed(spark, SF_SMOKE)
+    scans = file_scans(probe)
+    assert sorted(name for name, _ in scans) == ["base", "index"], scans
+    qv = get_query_vec(spark, SF_SMOKE)
+    bands = knn.pivot_bands(
+        "plan pin", qv, used_pivots(len(qv)), INDEX_DISTANCE
+    )
+    want = {
+        n: (knn._py_index_string(lo), knn._py_index_string(hi))
+        for n, (lo, hi) in enumerate(bands)
+    }
+    pushed = dict(scans)["index"]
+    assert pivot_band_bounds(pushed) == want, pushed
     plan = probe._jdf.queryExecution().executedPlan().toString()
-    segs = [p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]]
-    for i in range(5):
-        assert any(
-            f"GreaterThan(idx{i}_str" in s and f"LessThan(idx{i}_str" in s
-            for s in segs
-        ), (i, segs)
     assert "CartesianProduct" not in plan
 
 
@@ -112,6 +128,7 @@ def test_indexed_batch_equals_singles_and_plan(spark, tmp_path):
     the 100 TB shape: no cartesian, rank filter rewritten into a
     WindowGroupLimit, band predicates pushed to the index scans."""
     from javascript_vector_database_spark.registry import vector_search as vs
+    from tests.plan_scans import file_scans, pivot_band_bounds
 
     emb = load_table(spark, SF_SMOKE, "embeddings")
     pivots = used_pivots(len(get_query_vec(spark, SF_SMOKE)))
@@ -127,6 +144,7 @@ def test_indexed_batch_equals_singles_and_plan(spark, tmp_path):
         for r in q_rows
     ]
     batch = knn.ann_index_range_stored_batch(spark, base, queries, pivots)
+    scans = file_scans(batch)  # before the plan runs: see file_scans
     got = {
         (r["query_id"], r["vec_id"], r["distance"])
         for r in batch.collect()
@@ -140,8 +158,16 @@ def test_indexed_batch_equals_singles_and_plan(spark, tmp_path):
     plan = batch._jdf.queryExecution().executedPlan().toString()
     assert "CartesianProduct" not in plan
     assert "WindowGroupLimit" in plan, plan
-    segs = [p.split("]", 1)[0] for p in plan.split("PushedFilters: [")[1:]]
-    assert any("GreaterThan(idx0" in s and "LessThan(idx0" in s for s in segs)
+    # one band scan of the composite index per query, each pushing
+    # every pivot's band
+    assert sorted(name for name, _ in scans) == (
+        ["base"] + ["index"] * len(queries)
+    ), scans
+    for name, pushed in scans:
+        if name == "index":
+            assert sorted(pivot_band_bounds(pushed)) == list(
+                range(len(pivots))
+            ), pushed
 
 
 def test_r13_window_composition():
