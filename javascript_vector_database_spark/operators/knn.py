@@ -51,13 +51,9 @@ Spark-first design notes (scale: 100 TB, 1000 executors):
   ranges of one sorted composite index here (``write_pivot_index_tables``):
   the stored probes read that index with ONE scan whose predicate ORs the
   five ranges, the same candidate set as five scans, and min-max
-  row-group skipping still applies per conjunct.  On the ``search``
-  benchmark (10k x 384, 5 pivots, 4 cores) one scan instead of five cut
-  the generated Java compiled per stored probe from 10 compiles to 2
-  (every band scan inlines its bounds, so each query's source is new)
-  and the warm range / similarity probe from 0.49 / 0.64 s to
-  0.34 / 0.40 s.  The recompute probes scan one frame with the OR of the
-  five bands, the same single-pass plan.
+  row-group skipping still applies per conjunct.  The recompute probes
+  scan one frame with the OR of the five bands, the same single-pass
+  plan.
 * Pivot-distance index columns are precomputed at write time
   (``build_pivot_index``), exactly like the reference computes idx0..idx4
   at pipeline time (src/database.ts:195-198).  At 100 TB these are plain
@@ -375,20 +371,10 @@ def write_pivot_index_tables(
     binary min/max stats for strings, so string band predicates prune
     row groups exactly like the double mode; probe with
     ``ann_index_range_compat_stored``."""
-    # the range partitioner's sampling job and the shuffle would each
-    # run the pivot folds; the cache (filled by the sampling job) runs
-    # them once.  On the search benchmark (10k x 384, 4 cores) the cold
-    # write+open read a median 10.0 s with it, 10.6 s without (6 runs
-    # each)
-    rows = _pivot_index_rows(
-        df, pivots, id_col, vec_col, compat_strings
-    ).cache()
-    try:
-        _sorted_by_pivot_key(rows, n_files * len(pivots)).write.mode(
-            "overwrite"
-        ).parquet(os.path.join(base_dir, "index"))
-    finally:
-        rows.unpersist()
+    _sorted_by_pivot_key(
+        _pivot_index_rows(df, pivots, id_col, vec_col, compat_strings),
+        n_files * len(pivots),
+    ).write.mode("overwrite").parquet(os.path.join(base_dir, "index"))
     df.select(id_col, vec_col).write.mode("overwrite").parquet(
         os.path.join(base_dir, "base")
     )
