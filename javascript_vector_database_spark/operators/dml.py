@@ -15,6 +15,22 @@ exact, and untouched partitions' files are never rewritten (pinned by
 tests/test_pipeline_dml.py).  At 100 TB: N scales with the table, reads
 of the merge side are partition-pruned, and the per-verb write cost is
 O(|delta| + touched-partition size), not O(table).
+
+Every keyed write verb runs ONE rewrite cycle (``ParquetTable._rewrite``):
+find the touched partitions (none for a flat table), read them, build
+their new state, write it back.  Two bodies run on it:
+
+* one MERGE (``_merge``) for ``bulk_insert``, ``bulk_upsert`` and
+  ``merge_cdc``: the delta left-joins the stored ``(pk, _rev, …)``,
+  keeps its winners by the verb's rule (no stored row / every row / the
+  CSN rule), bumps their ``_rev``, anti-joins them out of the stored
+  rows and unions them back in;
+* one in-place UPDATE (``_update``) for ``bulk_remove`` and
+  ``incremental_modify``: the matched rows get new values, ``_lwt`` and
+  a bumped ``_rev``.
+
+``bulk_delete_rows`` runs its anti-join on the same cycle.  A delta that
+repeats a primary key raises before anything is written.
 """
 
 from __future__ import annotations
@@ -33,6 +49,11 @@ BUCKET_COL = "__pkb"
 #: layout descriptor, written inside the table dir (underscore-prefixed
 #: files are ignored by Spark's parquet reader, like _SUCCESS)
 META_FILE = "_table_meta.json"
+
+#: merge_cdc's delta columns: the producer-assigned change sequence number
+#: (monotonic per key) and the delete flag
+CSN_COL = "_csn"
+TOMBSTONE_COL = "_tombstone"
 
 
 #: characters Spark/Hive escape in partition directory names
@@ -100,9 +121,23 @@ def _payload_hash(cols: list[str]) -> F.Column:
     return F.md5(F.concat_ws("|", *[F.col(c).cast("string") for c in user]))
 
 
+def _lwt_lit(lwt: float | None) -> F.Column:
+    """The write's ``_lwt`` stamp: the caller's, else the wall clock in ms."""
+    return F.lit(time.time() * 1000.0 if lwt is None else float(lwt))
+
+
+def _live(rows: DataFrame) -> DataFrame:
+    """Insert/upsert rows are live unless they carry their own ``_deleted``."""
+    if "_deleted" in rows.columns:
+        return rows
+    return rows.withColumn("_deleted", F.lit(False))
+
+
 class ParquetTable:
     """A tiny managed table: PK-bucket-partitioned parquet dir giving the
-    reference's DML verbs as touched-partition read-modify-write cycles.
+    reference's DML verbs on one touched-partition read-modify-write
+    cycle (``_rewrite``), with one MERGE body (insert, upsert, CDC) and
+    one in-place UPDATE body (remove, modify).
     ``n_buckets=None`` keeps a flat single-dir layout (used for small
     wholesale-replaced views like the reactive bounded emission).
 
@@ -367,141 +402,227 @@ class ParquetTable:
             pred = pred | F.col(self._part).isNull()
         return pred
 
-    def _touched(self, keyed_df: DataFrame) -> list[int]:
-        """Distinct partitions the delta lands in (≤ partition count,
-        bounded driver collect).  Under a ``partition_col`` layout a
-        keys-only delta (bulk_remove) can't derive its partitions from
-        the hash — fall back to a PK semi-join over the stored table
-        (the documented no-PK-index scan; the MERGE path always carries
-        the column and never takes this branch)."""
+    def _touched(self, keyed_df: DataFrame) -> list:
+        """Distinct partitions a keys-only delta lands in (≤ partition
+        count, bounded driver collect).  Under a ``partition_col`` layout
+        a keys-only delta (bulk_remove) can't derive its partitions from
+        the hash — fall back to a PK semi-join over the stored table (the
+        documented no-PK-index scan; the MERGE always carries the column
+        and never takes this branch)."""
         if self.partition_col and self.partition_col not in keyed_df.columns:
             src = self._raw().join(
                 keyed_df.select(self.primary_key), self.primary_key,
                 "left_semi",
             )
-            return [
-                r[0]
-                for r in src.select(self._part).distinct().collect()
-            ]
-        return [
-            r[0]
-            for r in self._with_bucket(keyed_df)
-            .select(self._part)
-            .distinct()
-            .collect()
+        else:
+            src = self._with_bucket(keyed_df)
+        return [r[0] for r in src.select(self._part).distinct().collect()]
+
+    def _scan_delta(self, delta: DataFrame) -> tuple[int, list | None]:
+        """The MERGE's first job over its delta: the row count and, on an
+        existing partitioned table, the partitions the delta lands in
+        (None otherwise).  It also finds a primary key the delta repeats
+        — both rows would be stored under it — and raises naming it
+        before anything is written.  On a partitioned table the counts
+        ride the touched-partition collect as observed metrics and cost
+        no job of their own."""
+        pk = self.primary_key
+        counts = [
+            F.count(F.lit(1)).alias("rows"),
+            F.count(pk).alias("keyed"),
+            F.size(F.collect_set(pk)).alias("keys"),
         ]
+        touched = None
+        if self.exists() and self._bucketed():
+            q = (
+                self._with_bucket(delta)
+                .observe("__delta_keys", *counts)
+                .select(self._part)
+                .distinct()
+            )
+            touched = [r[0] for r in q.collect()]
+            # read off the query execution the collect ran: synchronous,
+            # where Observation.get waits on a listener of the session
+            row = q._jdf.queryExecution().observedMetrics().get("__delta_keys").get()
+            n, keyed, keys = (row.get(i) for i in range(3))
+        else:
+            n, keyed, keys = delta.agg(*counts).first()
+        if keyed != keys:
+            rep = delta.groupBy(pk).count().where(F.col("count") > 1)
+            raise ValueError(
+                f"the delta repeats primary key {pk}="
+                f"{[r[0] for r in rep.limit(3).collect()]}: one row per key"
+            )
+        return n, touched
 
     # -- write --------------------------------------------------------------
 
-    def _stamp(self, rows: DataFrame, lwt: float | None = None) -> DataFrame:
-        lwt = time.time() * 1000.0 if lwt is None else lwt
-        out = rows
-        if "_deleted" not in rows.columns:
-            out = out.withColumn("_deleted", F.lit(False))
-        return out.withColumn("_lwt", F.lit(float(lwt)))
+    def _rewrite(self, touched: list | None, build, src=None) -> None:
+        """The one read-modify-write cycle of every keyed write verb: read
+        the ``touched`` partitions (the whole table when it is flat:
+        ``touched`` None), ``build`` their new state, and write it back
+        — ``_replace_partitions`` swaps exactly those partitions,
+        ``_swap_in`` the flat table.  ``src`` is a ``_raw()`` read the
+        caller already holds: each read lists the table's footers in a
+        job of its own."""
+        if touched is None:
+            self._swap_in(build(self.df()))
+        else:
+            cur = (self._raw() if src is None else src).where(
+                self._touched_pred(touched)
+            )
+            self._replace_partitions(build(cur), touched)
+
+    def _merge(
+        self,
+        delta: DataFrame,
+        win: F.Column,
+        lwt,
+        moved_keys: str | None = None,
+        tally: bool = False,
+    ) -> tuple[int, int | None]:
+        """The one MERGE (bulk_insert, bulk_upsert, merge_cdc).  The delta
+        is stamped ``_lwt``, loses any ``_rev``, and is cached: its touched
+        partitions, the join and the write are separate actions, and an
+        uncached delta would re-run the caller's upstream computation
+        (e.g. the pipeline's embedding UDF) once per action.
+
+        On the rewrite cycle the delta left-joins the stored rows' ``(pk,
+        _rev, _csn, _deleted)``; ``win`` keeps the rows that replace or
+        add a stored row.  Each winner's ``_rev`` is bumped over the
+        stored one — ``_rev_bump(NULL, h)`` is ``'1-h'``, so new keys and
+        a new table need no branch of their own — and the winners are
+        anti-joined out of the stored rows and unioned back in.  Returns
+        (delta rows, winners), counting the winners in a job of their own
+        only with ``tally``.  ``moved_keys`` is merge_cdc's key-stability
+        mode."""
+        pk = self.primary_key
+        delta = delta.drop("_rev").withColumn("_lwt", _lwt_lit(lwt))
+        stamp = _payload_hash(delta.columns)
+        cached = [delta.cache()]
+        won = [None]
+        try:
+            n, touched = self._scan_delta(delta)
+            if not self.exists():
+                self._swap_in(
+                    delta.withColumn("_rev", _rev_bump(F.lit(None), stamp))
+                )
+                return n, n
+            detect = self.partition_col and moved_keys == "detect"
+            if self.partition_col and moved_keys == "repair":
+                # the stored partitions of the delta's keys too, so a
+                # moved key's old directory is rewritten without it
+                touched = list({*touched, *self._touched(delta.select(pk))})
+
+            def build(cur: DataFrame) -> DataFrame:
+                def stored(c, default):
+                    return F.col(c) if c in cur.columns else default
+
+                prev = cur.select(
+                    pk,
+                    F.lit(True).alias("__prev"),
+                    stored("_rev", F.lit(None).cast("string")).alias("__prev_rev"),
+                    stored(CSN_COL, F.lit(None).cast("long")).alias("__prev_csn"),
+                    stored("_deleted", F.lit(False)).alias("__prev_dead"),
+                    *([F.col(self._part).alias("__prev_part")] if detect else []),
+                )
+                w = (
+                    self._with_bucket(delta)
+                    .join(prev, pk, "left")
+                    .where(win)
+                    .withColumn("_rev", _rev_bump(F.col("__prev_rev"), stamp))
+                )
+                if detect:
+                    # the check materializes the delta-prev join once;
+                    # cache it so the write reuses it instead of
+                    # re-scanning the touched partitions
+                    w = w.cache()
+                    cached.append(w)
+                    self._raise_on_moved_keys(w)
+                w = w.drop(
+                    "__prev", "__prev_rev", "__prev_csn", "__prev_dead",
+                    "__prev_part",
+                )
+                if tally:
+                    won[0] = w.count()
+                kept = cur.join(w.select(pk), pk, "left_anti")
+                return kept.unionByName(w, allowMissingColumns=True)
+
+            self._rewrite(touched, build)
+            return n, won[0]
+        finally:
+            for d in cached:
+                d.unpersist()
+
+    def _raise_on_moved_keys(self, winners: DataFrame) -> None:
+        """merge_cdc's ``"detect"`` mode: raise when a winner's partition
+        value differs from its stored row's.  Directory-name equality:
+        '' and NULL share the __HIVE_DEFAULT_PARTITION__ dir, so both
+        sides are nullif-folded before comparing (a ''<->NULL "move" is
+        not one).  ``__prev`` carries existence, so a stored row in the
+        null directory is still seen (a NULL ``__prev_part`` means "stored
+        in the null dir", not "no stored row")."""
+        def folded(c):
+            return F.nullif(F.col(c).cast("string"), F.lit(""))
+
+        moved = (
+            winners.where(
+                F.col("__prev") & ~folded(self._part).eqNullSafe(folded("__prev_part"))
+            )
+            .select(self.primary_key, self._part, "__prev_part")
+            .limit(3)
+            .collect()
+        )
+        if moved:
+            raise ValueError(
+                "merge_cdc key-stability violation: partition value"
+                f" changed for key(s) {[r[0] for r in moved]}"
+                f" ({moved[0]['__prev_part']!r} ->"
+                f" {moved[0][self._part]!r}) — the stored row would"
+                " be stranded in its old partition; re-run with"
+                " moved_keys='repair' to rewrite old directories"
+            )
+
+    def _update(
+        self, touched: list | None, mark, sets: dict, lwt, src=None
+    ) -> None:
+        """The one in-place UPDATE (bulk_remove, incremental_modify) on the
+        rewrite cycle: ``mark`` adds the boolean ``__hit`` column to the
+        stored rows; the hit rows get ``sets`` and ``_lwt``, then a
+        ``_rev`` bumped over their new payload."""
+
+        def build(cur: DataFrame) -> DataFrame:
+            user_cols = [c for c in cur.columns if c != BUCKET_COL]
+            out, hit = mark(cur), F.col("__hit")
+            for c, e in {**sets, "_lwt": _lwt_lit(lwt)}.items():
+                out = out.withColumn(c, F.when(hit, e).otherwise(F.col(c)))
+            if "_rev" in user_cols:
+                bumped = _rev_bump(F.col("_rev"), _payload_hash(user_cols))
+                out = out.withColumn(
+                    "_rev", F.when(hit, bumped).otherwise(F.col("_rev"))
+                )
+            return out.drop("__hit")
+
+        self._rewrite(touched, build, src)
 
     def bulk_insert(self, rows: DataFrame, lwt: float | None = None) -> dict[str, int]:
         """Insert; rows whose PK already exists are rejected per-row (the
         reference's 409 conflict category) while the rest succeed.  New
         rows are stamped `_rev = '1-<hash>'` (utils-revision.js:1-41).
-        Conflict detection joins only the touched buckets — a duplicate pk
-        always hashes to the same bucket as the incoming row."""
-        pk = self.primary_key
-        # cache: touched-bucket probe, the tally agg, and the write are
-        # separate actions — an uncached delta would re-run the caller's
-        # upstream computation once per action
-        rows = self._stamp(rows.drop("_rev"), lwt)
-        rows = rows.withColumn(
-            "_rev", F.concat(F.lit("1-"), _payload_hash(rows.columns))
+        The MERGE keeps the delta rows with no stored row; a conflicting
+        pk always lands in the same partition as the incoming row."""
+        n, won = self._merge(
+            _live(rows), F.col("__prev").isNull(), lwt, tally=True
         )
-        # persisting a streaming Dataset raises AnalysisException — only
-        # batch deltas are cached (streaming input reaches the -1 sentinel)
-        if not rows.isStreaming:
-            rows = rows.cache()
-        try:
-            if not self.exists():
-                self._swap_in(rows)
-                return {
-                    "success": rows.count() if rows.isStreaming is False else -1,
-                    "conflict": 0,
-                }
-            if self._bucketed():  # resolves the stored layout first
-                touched = self._touched(rows)
-                cur = self._raw().where(self._touched_pred(touched))
-            else:
-                touched = None
-                cur = self.df()
-            rows_b = self._with_bucket(rows)
-            # one counting job for both tallies (pattern: pipeline.run_once)
-            tagged = rows_b.join(
-                cur.select(pk).withColumn("__dup", F.lit(True)), pk, "left"
-            )
-            stats = tagged.agg(
-                F.count(F.lit(1)).alias("total"),
-                F.count(F.col("__dup")).alias("conflict"),
-            ).first()
-            accepted = tagged.where(F.col("__dup").isNull()).drop("__dup")
-            new_state = cur.unionByName(accepted, allowMissingColumns=True)
-            if touched is None:
-                self._swap_in(new_state)
-            else:
-                self._replace_partitions(new_state, touched)
-            return {
-                "success": int(stats["total"]) - int(stats["conflict"]),
-                "conflict": int(stats["conflict"]),
-            }
-        finally:
-            if not rows.isStreaming:
-                rows.unpersist()
+        return {"success": won, "conflict": n - won}
 
     def bulk_upsert(self, rows: DataFrame, lwt: float | None = None) -> None:
         """MERGE: matched -> replace with new state, not matched -> insert
         (reference bulkUpsert, rx-collection.js:294-342).  `_rev` height is
         bumped over the matched row's revision ('<h+1>-<hash>'), '1-<hash>'
-        for fresh inserts (utils-revision.js:1-41).  Only the buckets the
-        incoming keys hash into are read or rewritten."""
-        pk = self.primary_key
-        # cache the delta: deriving the touched-bucket list is a separate
-        # ACTION before the write, and an uncached delta would re-run the
-        # caller's (possibly expensive — e.g. the pipeline's embedding
-        # UDF) upstream computation once per action
-        rows = self._stamp(rows.drop("_rev"), lwt)
-        # persisting a streaming Dataset raises AnalysisException — cache
-        # only batch deltas
-        if not rows.isStreaming:
-            rows = rows.cache()
-        try:
-            if not self.exists():
-                self._swap_in(
-                    rows.withColumn(
-                        "_rev", F.concat(F.lit("1-"), _payload_hash(rows.columns))
-                    )
-                )
-                return
-            if self._bucketed():  # resolves the stored layout first
-                touched = self._touched(rows)
-                cur = self._raw().where(self._touched_pred(touched))
-            else:
-                touched = None
-                cur = self.df()
-            rows_b = self._with_bucket(rows)
-            if "_rev" in cur.columns:
-                prev = cur.select(pk, F.col("_rev").alias("__prev_rev"))
-                merged = rows_b.join(prev, pk, "left")
-            else:
-                merged = rows_b.withColumn("__prev_rev", F.lit(None).cast("string"))
-            merged = merged.withColumn(
-                "_rev", _rev_bump(F.col("__prev_rev"), _payload_hash(rows.columns))
-            ).drop("__prev_rev")
-            kept = cur.join(merged.select(pk), pk, "left_anti")
-            new_state = kept.unionByName(merged, allowMissingColumns=True)
-            if touched is None:
-                self._swap_in(new_state)
-            else:
-                self._replace_partitions(new_state, touched)
-        finally:
-            if not rows.isStreaming:
-                rows.unpersist()
+        for fresh inserts (utils-revision.js:1-41).  Only the partitions
+        the incoming keys land in are read or rewritten."""
+        self._merge(_live(rows), F.lit(True), lwt)
 
     def incremental_modify(
         self,
@@ -522,45 +643,20 @@ class ParquetTable:
             mango_to_column,
         )
 
-        lwt = time.time() * 1000.0 if lwt is None else lwt
-        bucketed = self._bucketed()
-        cur = self._raw() if bucketed else self.df()
-        user_cols = [c for c in cur.columns if c != BUCKET_COL]
         hit = mango_to_column(selector) & ~F.col("_deleted")
-        out = cur.withColumn("__hit", hit)
-        for c, e in set_exprs.items():
-            out = out.withColumn(c, F.when(F.col("__hit"), e).otherwise(F.col(c)))
-        out = out.withColumn(
-            "_lwt", F.when(F.col("__hit"), F.lit(float(lwt))).otherwise(F.col("_lwt"))
-        )
-        if "_rev" in user_cols:
-            out = out.withColumn(
-                "_rev",
-                F.when(
-                    F.col("__hit"),
-                    _rev_bump(F.col("_rev"), _payload_hash(user_cols)),
-                ).otherwise(F.col("_rev")),
-            )
-        if not bucketed:
-            self._swap_in(out.drop("__hit"))
-            return
-        touched = [
-            r[0]
-            for r in out.where(F.col("__hit")).select(self._part).distinct().collect()
-        ]
-        if not touched:
-            return
-        self._replace_partitions(
-            out.where(self._touched_pred(touched)).drop("__hit"), touched
+        touched = src = None
+        if self._bucketed():
+            src = self._raw()
+            hits = src.where(hit).select(self._part).distinct()
+            touched = [r[0] for r in hits.collect()]
+            if not touched:
+                return
+        self._update(
+            touched, lambda cur: cur.withColumn("__hit", hit), set_exprs, lwt, src
         )
 
     def merge_cdc(
-        self,
-        rows: DataFrame,
-        csn_col: str = "_csn",
-        tombstone_col: str = "_tombstone",
-        lwt: float | None = None,
-        moved_keys: str = "detect",
+        self, rows: DataFrame, lwt: float | None = None, moved_keys: str = "detect"
     ) -> None:
         """CDC MERGE with per-key change-sequence-number (CSN) conflict
         resolution — upserts and deletes in ONE verb that COMMUTES under
@@ -575,8 +671,8 @@ class ParquetTable:
         the max in the MERGE (Delta CDF's _commit_version, a Kafka log
         offset); this verb implements that discipline:
 
-        * every delta row carries ``csn_col`` (producer-assigned,
-          monotonic per key) and ``tombstone_col`` (true = delete);
+        * every delta row carries ``_csn`` (producer-assigned, monotonic
+          per key) and ``_tombstone`` (true = delete);
         * within one batch only the max-(csn, tombstone) row per key
           survives (a tombstone outranks an insert at the same csn);
         * against stored state an arriving row wins if its csn exceeds
@@ -618,141 +714,35 @@ class ParquetTable:
           without the ghost.  This is what Delta MERGE does (matched
           files found by stats); pay it when the partition value is NOT
           a pure function of the key.
-        * ``"assume"`` — r10 behavior: trust the contract, zero checks.
         """
         from pyspark.sql.window import Window
 
-        pk = self.primary_key
-        lwt = time.time() * 1000.0 if lwt is None else lwt
-        w = Window.partitionBy(pk).orderBy(
-            F.col(csn_col).desc(), F.col(tombstone_col).cast("int").desc()
+        if moved_keys not in ("detect", "repair"):
+            raise ValueError(f"moved_keys: unknown mode {moved_keys!r}")
+        latest = Window.partitionBy(self.primary_key).orderBy(
+            F.col(CSN_COL).desc(), F.col(TOMBSTONE_COL).cast("int").desc()
         )
         delta = (
-            rows.withColumn("__rn", F.row_number().over(w))
+            rows.withColumn("__rn", F.row_number().over(latest))
             .where(F.col("__rn") == 1)
-            .drop("__rn", "_rev")
-            .withColumn("_deleted", F.col(tombstone_col))
-            .drop(tombstone_col)
-            .withColumn("_lwt", F.lit(float(lwt)))
+            .drop("__rn")
+            .withColumn("_deleted", F.col(TOMBSTONE_COL))
+            .drop(TOMBSTONE_COL)
         )
-        if not delta.isStreaming:
-            delta = delta.cache()
-        cached_winners = None
-        try:
-            if not self.exists():
-                self._swap_in(
-                    delta.withColumn(
-                        "_rev",
-                        F.concat(F.lit("1-"), _payload_hash(delta.columns)),
-                    )
-                )
-                return
-            if moved_keys not in ("assume", "detect", "repair"):
-                raise ValueError(f"moved_keys: unknown mode {moved_keys!r}")
-            if self._bucketed():
-                touched = self._touched(delta)
-                if self.partition_col and moved_keys == "repair":
-                    old_parts = [
-                        r[0]
-                        for r in self._raw()
-                        .join(delta.select(pk), pk, "left_semi")
-                        .select(self._part)
-                        .distinct()
-                        .collect()
-                    ]
-                    touched = list({*touched, *old_parts})
-                cur = self._raw().where(self._touched_pred(touched))
-            else:
-                touched = None
-                cur = self.df()
-            check_moved = bool(self.partition_col) and moved_keys == "detect"
-            prev_csn = (
-                F.col(csn_col)
-                if csn_col in cur.columns
-                else F.lit(None).cast("long")
+        csn, prev_csn = F.col(CSN_COL), F.col("__prev_csn")
+        win = (
+            prev_csn.isNull()
+            | (csn > prev_csn)
+            # equal-csn tombstone vs a stored LIVE row: the same tie rule
+            # the within-batch window applies — without it the outcome
+            # would depend on whether the pair shared a micro-batch
+            | (
+                (csn == prev_csn)
+                & F.col("_deleted")
+                & ~F.coalesce(F.col("__prev_dead"), F.lit(False))
             )
-            prev_dead = (
-                F.col("_deleted")
-                if "_deleted" in cur.columns
-                else F.lit(False)
-            )
-            prev_sel = [
-                pk,
-                F.col("_rev").alias("__prev_rev"),
-                prev_csn.alias("__prev_csn"),
-                prev_dead.alias("__prev_dead"),
-            ]
-            if check_moved:
-                prev_sel.append(F.col(self._part).alias("__prev_part"))
-                # explicit existence flag: __prev_part IS NULL must mean
-                # "stored row lives in the null-sentinel directory", not
-                # "no stored row" — overloading its nullability made
-                # moves OUT of the NULL/'' partition invisible to detect
-                # (r12 review finding)
-                prev_sel.append(F.lit(True).alias("__prev_exists"))
-            prev = cur.select(*prev_sel)
-            winners = (
-                self._with_bucket(delta)
-                .join(prev, pk, "left")
-                .where(
-                    F.col("__prev_csn").isNull()
-                    | (F.col(csn_col) > F.col("__prev_csn"))
-                    # equal-csn tombstone vs a stored LIVE row: the same
-                    # tie rule the within-batch window applies — without
-                    # it the outcome would depend on whether the pair
-                    # shared a micro-batch
-                    | (
-                        (F.col(csn_col) == F.col("__prev_csn"))
-                        & F.col("_deleted")
-                        & ~F.coalesce(F.col("__prev_dead"), F.lit(False))
-                    )
-                )
-                .withColumn(
-                    "_rev",
-                    _rev_bump(F.col("__prev_rev"), _payload_hash(delta.columns)),
-                )
-                .drop("__prev_rev", "__prev_csn", "__prev_dead")
-            )
-            if check_moved:
-                # the check materializes the delta-prev join once; cache
-                # it so the write below reuses it instead of re-scanning
-                # the touched partitions for a second join (r12 review)
-                cached_winners = winners = winners.cache()
-                # directory-name equality: '' and NULL share the
-                # __HIVE_DEFAULT_PARTITION__ dir, so nullif-fold both
-                # sides before comparing (a ''<->NULL "move" is not one)
-                new_p = F.nullif(F.col(self._part).cast("string"), F.lit(""))
-                old_p = F.nullif(F.col("__prev_part").cast("string"), F.lit(""))
-                moved = (
-                    winners.where(
-                        F.coalesce(F.col("__prev_exists"), F.lit(False))
-                        & ~new_p.eqNullSafe(old_p)
-                    )
-                    .select(pk, self._part, "__prev_part")
-                    .limit(3)
-                    .collect()
-                )
-                if moved:
-                    raise ValueError(
-                        "merge_cdc key-stability violation: partition value"
-                        f" changed for key(s) {[r[0] for r in moved]}"
-                        f" ({moved[0]['__prev_part']!r} ->"
-                        f" {moved[0][self._part]!r}) — the stored row would"
-                        " be stranded in its old partition; re-run with"
-                        " moved_keys='repair' to rewrite old directories"
-                    )
-                winners = winners.drop("__prev_part", "__prev_exists")
-            kept = cur.join(winners.select(pk), pk, "left_anti")
-            new_state = kept.unionByName(winners, allowMissingColumns=True)
-            if touched is None:
-                self._swap_in(new_state)
-            else:
-                self._replace_partitions(new_state, touched)
-        finally:
-            if cached_winners is not None:
-                cached_winners.unpersist()
-            if not delta.isStreaming:
-                delta.unpersist()
+        )
+        self._merge(delta, win, lwt, moved_keys)
 
     def _key_df(self, ids) -> DataFrame:
         """Normalize a Python list or single-column DataFrame of keys to a
@@ -770,49 +760,22 @@ class ParquetTable:
         """Soft delete: set `_deleted = true`, keep the row for the change
         feed (reference rx-collection.js:243-289), bump `_rev`.  ``ids``
         is a Python list or a single-column DataFrame of keys (the scale
-        path — no driver round-trip).  Only the buckets the keys hash into
-        are read or rewritten."""
-        lwt = time.time() * 1000.0 if lwt is None else lwt
-        pk = self.primary_key
-        key_df = self._key_df(ids)
-        if self._bucketed():
-            touched = self._touched(key_df)
-            cur = self._raw().where(self._touched_pred(touched))
-        else:
-            touched = None
-            cur = self.df()
-        user_cols = [c for c in cur.columns if c != BUCKET_COL]
-        cur = cur.join(
-            key_df.withColumn("__hit", F.lit(True)), pk, "left"
-        ).withColumn("__hit", F.coalesce(F.col("__hit"), F.lit(False)))
-        hit = F.col("__hit")
-        out = cur.withColumn(
-            "_deleted", F.when(hit, F.lit(True)).otherwise(F.col("_deleted"))
-        ).withColumn(
-            "_lwt", F.when(hit, F.lit(float(lwt))).otherwise(F.col("_lwt"))
+        path — no driver round-trip).  Only the partitions the keys land
+        in are read or rewritten."""
+        keys = self._key_df(ids).withColumn("__hit", F.lit(True))
+        self._update(
+            self._touched(keys) if self._bucketed() else None,
+            lambda cur: cur.join(keys, self.primary_key, "left"),
+            {"_deleted": F.lit(True)},
+            lwt,
         )
-        if "_rev" in user_cols:
-            out = out.withColumn(
-                "_rev",
-                F.when(
-                    hit, _rev_bump(F.col("_rev"), _payload_hash(user_cols))
-                ).otherwise(F.col("_rev")),
-            )
-        out = out.drop("__hit")
-        if touched is None:
-            self._swap_in(out)
-        else:
-            self._replace_partitions(out, touched)
 
     def bulk_delete_rows(self, ids) -> None:
         """HARD delete (no tombstone) — for maintained result/view tables
         (streaming.reactive), NOT the reference's soft-delete surface.
         Touched-partition rewrite only."""
-        pk = self.primary_key
-        key_df = self._key_df(ids)
-        if not self._bucketed():
-            self._swap_in(self.df().join(key_df, pk, "left_anti"))
-            return
-        touched = self._touched(key_df)
-        cur = self._raw().where(self._touched_pred(touched))
-        self._replace_partitions(cur.join(key_df, pk, "left_anti"), touched)
+        keys = self._key_df(ids)
+        self._rewrite(
+            self._touched(keys) if self._bucketed() else None,
+            lambda cur: cur.join(keys, self.primary_key, "left_anti"),
+        )

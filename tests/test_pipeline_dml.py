@@ -162,10 +162,11 @@ def _partition_fingerprint(table_path: str) -> dict[str, dict[str, tuple]]:
 
 
 def test_dml_rewrites_only_touched_partitions(spark, tmp_path):
-    """The managed table is partitioned by pmod(hash(pk), N); an upsert or
-    remove must rewrite ONLY the partitions its keys hash into — every
+    """The managed table is partitioned by pmod(hash(pk), N); every write
+    verb must rewrite ONLY the partition its key hashes into — every
     other partition's parquet files stay byte-identical (same inode
-    content AND mtime: the files were never rewritten)."""
+    content AND mtime: the files were never rewritten).  One case per
+    verb, run in turn on one table."""
     path = str(tmp_path / "t")
     t = ParquetTable(spark, path, "id", n_buckets=8)
     t.bulk_insert(
@@ -174,33 +175,106 @@ def test_dml_rewrites_only_touched_partitions(spark, tmp_path):
         ),
         lwt=1.0,
     )
-    before = _partition_fingerprint(path)
-    assert len(before) > 1  # keys actually spread over several buckets
+    assert len(_partition_fingerprint(path)) > 1  # keys spread over buckets
 
-    t.bulk_upsert(
-        spark.createDataFrame([(3, "V3")], "id long, v string"), lwt=2.0
+    def rows(*r):
+        return spark.createDataFrame(list(r), "id long, v string")
+
+    def v(i):
+        return {r["v"] for r in t.docs().where(F.col("id") == i).collect()}
+
+    cases = [
+        ("bulk_upsert", lambda: t.bulk_upsert(rows((3, "V3")), lwt=2.0),
+         lambda _: v(3) == {"V3"} and t.docs().count() == 64),
+        ("bulk_remove", lambda: t.bulk_remove([10], lwt=3.0),
+         lambda _: t.docs().count() == 63 and t.df().count() == 64),
+        # only partitions holding hit rows are rewritten
+        ("incremental_modify",
+         lambda: t.incremental_modify(
+             {"id": {"$in": [5]}}, {"v": F.lit("V5")}, lwt=4.0),
+         lambda _: v(5) == {"V5"}),
+        ("bulk_insert",
+         lambda: t.bulk_insert(rows((100, "new")), lwt=5.0),
+         lambda res: res == {"success": 1, "conflict": 0}
+         and v(100) == {"new"} and t.df().count() == 65),
+        ("merge_cdc",
+         lambda: t.merge_cdc(
+             spark.createDataFrame(
+                 [(7, "V7", False, 1)],
+                 "id long, v string, _tombstone boolean, _csn long",
+             ),
+             lwt=6.0,
+         ),
+         lambda _: v(7) == {"V7"} and t.df().count() == 65),
+        ("bulk_delete_rows", lambda: t.bulk_delete_rows([20]),
+         lambda _: v(20) == set() and t.df().count() == 64),
+    ]
+    for verb, write, check in cases:
+        before = _partition_fingerprint(path)
+        res = write()
+        after = _partition_fingerprint(path)
+        changed = {p for p in before.keys() | after.keys()
+                   if before.get(p) != after.get(p)}
+        assert len(changed) == 1, verb  # exactly the key's bucket
+        untouched = set(before) - changed
+        assert untouched and all(before[p] == after[p] for p in untouched), verb
+        assert check(res), verb
+
+
+@pytest.mark.parametrize(
+    "layout",
+    [{"n_buckets": 8}, {"n_buckets": None}, {"partition_col": "cell"}],
+    ids=["bucketed", "flat", "partition_col"],
+)
+def test_delta_repeating_a_key_raises_before_writing(spark, tmp_path, layout):
+    """bulk_insert and bulk_upsert refuse a delta that repeats a primary
+    key — both rows would be stored under it — naming the key, before
+    anything is written: on a new table (nothing created) and on an
+    existing one (stored rows unchanged).  The repeated key's two rows
+    carry different ``cell`` values, so under a partition_col layout
+    they land in two partitions."""
+    schema = "id long, v string, cell string"
+    t = ParquetTable(spark, str(tmp_path / "t"), "id", **layout)
+    dup = spark.createDataFrame([(1, "a", "p"), (1, "b", "q")], schema)
+    for verb in (t.bulk_insert, t.bulk_upsert):
+        with pytest.raises(ValueError, match=r"repeats primary key id=\[1\]"):
+            verb(dup, lwt=1.0)
+    assert not t.exists()
+
+    t.bulk_insert(
+        spark.createDataFrame([(1, "x", "p"), (2, "y", "q")], schema), lwt=1.0
     )
-    after = _partition_fingerprint(path)
-    changed = {p for p in before if before[p] != after.get(p)}
-    assert len(changed) == 1  # exactly the bucket id=3 hashes into
-    untouched = set(before) - changed
-    assert untouched and all(before[p] == after[p] for p in untouched)
-    got = {r["id"]: r["v"] for r in t.docs().collect()}
-    assert got[3] == "V3" and len(got) == 64
+    stored = sorted(tuple(r) for r in t.df().collect())
+    for verb in (t.bulk_insert, t.bulk_upsert):
+        with pytest.raises(ValueError, match=r"repeats primary key id=\[1\]"):
+            verb(dup, lwt=2.0)
+    assert sorted(tuple(r) for r in t.df().collect()) == stored
 
-    # remove: again one touched bucket, the rest byte-identical
-    t.bulk_remove([10], lwt=3.0)
-    after2 = _partition_fingerprint(path)
-    changed2 = {p for p in after if after[p] != after2.get(p)}
-    assert len(changed2) == 1
-    assert t.docs().count() == 63 and t.df().count() == 64
 
-    # incremental_modify: only partitions holding hit rows are rewritten
-    t.incremental_modify({"id": {"$in": [5]}}, {"v": F.lit("V5")}, lwt=4.0)
-    after3 = _partition_fingerprint(path)
-    changed3 = {p for p in after2 if after2[p] != after3.get(p)}
-    assert len(changed3) == 1
-    assert {r["v"] for r in t.docs().where(F.col("id") == 5).collect()} == {"V5"}
+@pytest.mark.parametrize("verb", ["bulk_insert", "bulk_upsert", "merge_cdc"])
+def test_streaming_delta_raises_analysis_exception(spark, tmp_path, verb):
+    """A write verb takes batch deltas only: a ``readStream`` delta
+    raises AnalysisException, on a new and on an existing table, and
+    leaves the stored rows as they were."""
+    from pyspark.errors import AnalysisException
+
+    schema = "id long, v string, _tombstone boolean, _csn long"
+    batch = spark.createDataFrame([(1, "a", False, 1)], schema)
+    src = str(tmp_path / "src")
+    batch.write.parquet(src)
+    stream = spark.readStream.schema(schema).parquet(src)
+
+    new = ParquetTable(spark, str(tmp_path / "new"), "id")
+    with pytest.raises(AnalysisException):
+        getattr(new, verb)(stream, lwt=1.0)
+    assert not new.exists()
+
+    old = ParquetTable(spark, str(tmp_path / "old"), "id")
+    getattr(old, verb)(batch, lwt=1.0)
+    stored = sorted(tuple(r) for r in old.df().collect())
+    with pytest.raises(AnalysisException):
+        getattr(old, verb)(stream, lwt=2.0)
+    assert sorted(tuple(r) for r in old.df().collect()) == stored
 
 
 def test_bulk_remove_empty_and_duplicate_ids(spark, tmp_path):

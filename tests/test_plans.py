@@ -426,13 +426,21 @@ def test_percent_rank_is_distributed(spark):
 
 def test_q6_all_predicates_pushed(spark):
     """Q6 is the canonical pushdown query: the date range, discount band,
-    and quantity cap must ALL reach the parquet scan, and the ReadSchema
-    must carry only the four referenced columns."""
-    plan = _plan(registry.queries()["agg_q6_forecast_revenue"](spark, SF))
-    pushed = plan.split("PushedFilters: [", 1)[1].split("]", 1)[0]
-    for col in ("l_shipdate", "l_discount", "l_quantity"):
-        assert col in pushed, pushed
-    read = plan.split("ReadSchema: ", 1)[1].splitlines()[0]
+    and quantity cap must ALL reach the parquet scan — each bound itself,
+    read from the full PushedFilters text — and the ReadSchema must
+    carry only the four referenced columns."""
+    df = registry.queries()["agg_q6_forecast_revenue"](spark, SF)
+    [(table, pushed)] = file_scans(df)
+    assert table == "lineitem.parquet"
+    for bound in (
+        "GreaterThanOrEqual(l_shipdate,1996-01-01 00:00:00.0)",
+        "LessThan(l_shipdate,1997-01-01 00:00:00.0)",
+        "GreaterThanOrEqual(l_discount,0.05)",
+        "LessThanOrEqual(l_discount,0.07)",
+        "LessThan(l_quantity,24.0)",
+    ):
+        assert bound in pushed, pushed
+    read = _plan(df).split("ReadSchema: ", 1)[1].splitlines()[0]
     assert "l_extendedprice" in read and "l_orderkey" not in read, read
 
 
