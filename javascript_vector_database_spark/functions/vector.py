@@ -105,8 +105,9 @@ def cosine_similarity(a: Column | str, b: Column | str) -> Column:
     return dot(a, b) / (l2_norm(a) * l2_norm(b))
 
 
-def index_nr_to_string(nr: Column | str) -> Column:
-    """Compat encoding of the reference's fixed-width index key:
+def index_nr_to_string_sql(nr: str) -> str:
+    """Compat encoding of the reference's fixed-width index key, as SQL
+    text over the expression ``nr``:
     ``((nr*10) + '').slice(0, 10).padEnd(10, '0')`` — src/database.ts:223-225.
 
     Reproduced for fidelity tests only; the scale path indexes the raw
@@ -118,6 +119,12 @@ def index_nr_to_string(nr: Column | str) -> Column:
     shortest-roundtrip digits agree; we strip a trailing ``.0`` the way JS
     prints integral doubles (``5`` not ``5.0``) before slicing.
     """
-    nr = _dbl(_as_col(nr)) * F.lit(10.0)
-    s = F.regexp_replace(nr.cast("string"), r"\.0$", "")
-    return F.rpad(F.substring(s, 1, 10), 10, "0")
+    return (
+        f"rpad(substring(regexp_replace(CAST(CAST({nr} AS DOUBLE) * 10.0D "
+        "AS STRING), '\\\\.0$', ''), 1, 10), 10, '0')"
+    )
+
+
+def index_nr_to_string(col: str) -> Column:
+    """``index_nr_to_string_sql`` over the column named ``col``."""
+    return F.expr(index_nr_to_string_sql("`" + col.replace("`", "``") + "`"))

@@ -287,8 +287,12 @@ class ParquetTable:
     def _bucketed(self) -> bool:
         """True when the stored layout is partitioned (PK-hash bucket or
         a caller data column — it always is for tables this class created
-        with n_buckets or partition_col set)."""
+        with n_buckets or partition_col set).  Answered from
+        ``_table_meta.json`` when the table has one; only a legacy
+        directory without it pays a footer read (a job of its own)."""
         self._resolve_layout()
+        if os.path.exists(os.path.join(self.path, META_FILE)):
+            return bool(self.partition_col or self.n_buckets)
         if self.partition_col:
             return self.partition_col in self._raw().columns
         return bool(self.n_buckets) and BUCKET_COL in self._raw().columns
@@ -479,7 +483,7 @@ class ParquetTable:
         win: F.Column,
         lwt,
         moved_keys: str | None = None,
-        tally: bool = False,
+        insert: bool = False,
     ) -> tuple[int, int | None]:
         """The one MERGE (bulk_insert, bulk_upsert, merge_cdc).  The delta
         is stamped ``_lwt``, loses any ``_rev``, and is cached: its touched
@@ -494,8 +498,10 @@ class ParquetTable:
         a new table need no branch of their own — and the winners are
         anti-joined out of the stored rows and unioned back in.  Returns
         (delta rows, winners), counting the winners in a job of their own
-        only with ``tally``.  ``moved_keys`` is merge_cdc's key-stability
-        mode."""
+        only with ``insert``.  ``insert`` is bulk_insert's mode: its rule
+        keeps only keys with no stored row, so no winner replaces one and
+        the anti-join is skipped.  ``moved_keys`` is merge_cdc's
+        key-stability mode."""
         pk = self.primary_key
         delta = delta.drop("_rev").withColumn("_lwt", _lwt_lit(lwt))
         stamp = _payload_hash(delta.columns)
@@ -543,9 +549,11 @@ class ParquetTable:
                     "__prev", "__prev_rev", "__prev_csn", "__prev_dead",
                     "__prev_part",
                 )
-                if tally:
+                if insert:
                     won[0] = w.count()
-                kept = cur.join(w.select(pk), pk, "left_anti")
+                    kept = cur
+                else:
+                    kept = cur.join(w.select(pk), pk, "left_anti")
                 return kept.unionByName(w, allowMissingColumns=True)
 
             self._rewrite(touched, build)
@@ -612,7 +620,7 @@ class ParquetTable:
         The MERGE keeps the delta rows with no stored row; a conflicting
         pk always lands in the same partition as the incoming row."""
         n, won = self._merge(
-            _live(rows), F.col("__prev").isNull(), lwt, tally=True
+            _live(rows), F.col("__prev").isNull(), lwt, insert=True
         )
         return {"success": won, "conflict": n - won}
 

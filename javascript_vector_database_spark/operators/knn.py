@@ -54,17 +54,26 @@ Spark-first design notes (scale: 100 TB, 1000 executors):
   row-group skipping still applies per conjunct.  The recompute probes
   scan one frame with the OR of the five bands, the same single-pass
   plan.
-* Pivot-distance index columns are precomputed at write time
-  (``build_pivot_index``), exactly like the reference computes idx0..idx4
-  at pipeline time (src/database.ts:195-198).  At 100 TB these are plain
-  sortable DOUBLE columns -> parquet min/max skipping ≈ the reference's
-  IndexedDB key ranges.
+* Pivot distances are precomputed at write time, exactly like the
+  reference computes idx0..idx4 at pipeline time
+  (src/database.ts:195-198): ``write_pivot_index_tables`` renders the
+  five keys as one statement over the same ``_distance_sql`` fold the
+  stored probes use, exchanges the exploded rows on ``pivot`` (each
+  pivot is its own partition; no range sampler), sorts them by
+  (pivot, key) within the partitions and cuts each pivot into
+  ``n_files`` files by record count.  So the folds run once per build,
+  and every file covers one contiguous key range of one pivot: plain
+  sortable DOUBLE keys whose parquet min/max stats stand in for the
+  reference's IndexedDB key ranges.  The recompute probes build the
+  same keys as columns (``build_pivot_index``).
 """
 
 from __future__ import annotations
 
 import os
+from concurrent.futures import ThreadPoolExecutor
 
+from pyspark import inheritable_thread_target
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -74,6 +83,7 @@ from javascript_vector_database_spark.functions.vector import (
     double_sql,
     euclidean_distance,
     index_nr_to_string,
+    index_nr_to_string_sql,
     lit_double_array,
 )
 from javascript_vector_database_spark.pivots import (
@@ -265,7 +275,7 @@ def build_pivot_index(
         d = euclidean_distance(F.col(vec_col), _qvec_lit(p))
         out = out.withColumn(f"idx{i}", d)
         if compat_strings:
-            out = out.withColumn(f"idx{i}_str", index_nr_to_string(F.col(f"idx{i}")))
+            out = out.withColumn(f"idx{i}_str", index_nr_to_string(f"idx{i}"))
     return out
 
 
@@ -322,20 +332,35 @@ def _pivot_index_rows(
 ) -> DataFrame:
     """The composite index entries of ``df``: one ``(pivot, key, id)``
     row per (vector, pivot), ``key`` the pivot distance, or its 10-char
-    string (``compat_strings``)."""
-    key = "idx{}_str" if compat_strings else "idx{}"
-    keys = F.array(*[F.col(key.format(n)) for n in range(len(pivots))])
-    return (
-        build_pivot_index(df, pivots, vec_col, compat_strings)
-        .select(F.posexplode(keys).alias("pivot", "key"), id_col)
+    string (``compat_strings``).  One rendered statement: each key is
+    the ``_distance_sql`` fold the stored probes score with, and
+    ``posexplode`` numbers the pivots."""
+    keys = [_distance_sql(vec_col, p, None) for p in pivots]
+    if compat_strings:
+        keys = [index_nr_to_string_sql(k) for k in keys]
+    return df.sparkSession.sql(
+        f"SELECT posexplode(array({', '.join(keys)})) AS (pivot, key), "
+        f"{_ident(id_col)} FROM {{df}}",
+        df=df,
     )
 
 
-def _sorted_by_pivot_key(df: DataFrame, n_parts: int) -> DataFrame:
-    """``df`` range-partitioned into ``n_parts`` and sorted within them
-    by (pivot, key): the stored layout of the composite index."""
-    return df.repartitionByRange(n_parts, "pivot", "key").sortWithinPartitions(
+def _write_pivot_layout(
+    rows: DataFrame, path: str, n_pivots: int, n_files: int, n_rows: int
+) -> None:
+    """Write the ``n_rows`` composite index ``rows`` to ``path`` in its
+    stored layout: exchanged on ``pivot`` into ``n_pivots`` partitions,
+    one pivot each (the pivot number is the partition id), sorted by
+    key within them and cut into files of ``ceil(n_rows / (n_pivots *
+    n_files))`` records, so each pivot lands in ``n_files`` files of
+    contiguous key ranges.  Unlike a range exchange, this one has no
+    sampling job, which would evaluate the keys once more; and a
+    by-number exchange is never coalesced."""
+    per_file = max(1, -(-n_rows // (n_pivots * n_files)))
+    rows.repartitionById(n_pivots, "pivot").sortWithinPartitions(
         "pivot", "key"
+    ).write.option("maxRecordsPerFile", per_file).mode("overwrite").parquet(
+        path
     )
 
 
@@ -355,15 +380,19 @@ def write_pivot_index_tables(
     sorted (idxN, id) structure range-scanned at query time
     (src/database.ts:103-109, src/search.ts:27-36).  Here the five are
     one composite index, ``index/`` = (pivot, key, id): every vector's
-    five pivot distances exploded to five rows, range-partitioned into
-    ``n_files`` files per pivot and sorted within them by (pivot, key).
-    The reference's five key ranges are five (pivot, key) ranges of this
+    five pivot distances exploded to five rows (``_pivot_index_rows``),
+    exchanged on ``pivot`` so each pivot is one partition, sorted by
+    key within it and cut into ``n_files`` files by record count
+    (``_write_pivot_layout``; the count is ``df.count()``, which runs no
+    fold).  The folds run once, in the exchange's map stage.  The
+    reference's five key ranges are five (pivot, key) ranges of this
     one sorted table, so a probe reads it with one scan, and its band
     predicate still prunes at both granularities — row groups via
-    min/max footer stats, files via the range layout.  The base
-    (id, vector) table is written beside it, straight from ``df``, for
-    the doc-read re-rank.  At 100 TB this is a per-collection build job,
-    amortized over every later query like any secondary index.
+    min/max footer stats, files via their key ranges.  The base
+    (id, vector) table is written straight from ``df`` by a background
+    thread while the index is built; an error in either write is raised
+    here.  At 100 TB this is a per-collection build job, amortized over
+    every later query like any secondary index.
 
     ``compat_strings=True`` stores the key the reference PHYSICALLY
     stores — the 10-char lexicographic string of ``indexNrToString``
@@ -371,13 +400,20 @@ def write_pivot_index_tables(
     binary min/max stats for strings, so string band predicates prune
     row groups exactly like the double mode; probe with
     ``ann_index_range_compat_stored``."""
-    _sorted_by_pivot_key(
-        _pivot_index_rows(df, pivots, id_col, vec_col, compat_strings),
-        n_files * len(pivots),
-    ).write.mode("overwrite").parquet(os.path.join(base_dir, "index"))
-    df.select(id_col, vec_col).write.mode("overwrite").parquet(
-        os.path.join(base_dir, "base")
+    # the thread runs its jobs under the caller's job group and tags
+    write_base = inheritable_thread_target(df.sparkSession)(
+        lambda: df.select(id_col, vec_col).write.mode("overwrite").parquet(
+            os.path.join(base_dir, "base")
+        )
     )
+    with ThreadPoolExecutor(max_workers=1) as pool:
+        base = pool.submit(write_base)
+        _write_pivot_layout(
+            _pivot_index_rows(df, pivots, id_col, vec_col, compat_strings),
+            os.path.join(base_dir, "index"), len(pivots), n_files,
+            df.count() * len(pivots),
+        )
+        base.result()
 
 
 def append_pivot_index_delta(
@@ -415,9 +451,11 @@ def compact_pivot_index_tables(
     n_files: int = 8,
 ) -> None:
     """Re-sort the composite index after a run of delta appends — the
-    LSM compaction that restores footer prunability: range-partition +
-    sort ``index/`` by (pivot, key) into ``n_files`` files per pivot,
-    write to a sibling dir, swap in.  The base table is compacted to
+    LSM compaction that restores footer prunability: ``index/`` is
+    rewritten in the layout ``write_pivot_index_tables`` gives it
+    (``_write_pivot_layout``: one partition per pivot, sorted by key,
+    ``n_files`` files per pivot cut by record count) to a sibling dir,
+    then swapped in.  The base table is compacted to
     ``n_files`` files without a sort (point lookups don't need one).
     Cost: one shuffle of the index rows — schedule it off the query
     path, like any OPTIMIZE.
@@ -438,10 +476,9 @@ def compact_pivot_index_tables(
             shutil.rmtree(tmp)  # crashed prior run's staging
         df = spark.read.parquet(path)
         if name == "index":
-            df = _sorted_by_pivot_key(df, n_files * n_pivots)
+            _write_pivot_layout(df, tmp, n_pivots, n_files, df.count())
         else:
-            df = df.coalesce(n_files)
-        df.write.mode("overwrite").parquet(tmp)
+            df.coalesce(n_files).write.mode("overwrite").parquet(tmp)
         shutil.rmtree(path)
         os.replace(tmp, path)
 

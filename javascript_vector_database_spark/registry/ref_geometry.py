@@ -433,7 +433,7 @@ def compat_index_string_384(spark: SparkSession, sf_dir: str) -> DataFrame:
     qv = _fixture_qvec(spark)
     src = knn.build_pivot_index(_fixture(spark), used_pivots(len(qv))[:1])
     return src.select(
-        "vec_id", index_nr_to_string(F.col("idx0")).alias("idx0_str")
+        "vec_id", index_nr_to_string("idx0").alias("idx0_str")
     )
 
 

@@ -628,7 +628,7 @@ def compat_index_string(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     src = knn.build_pivot_index(emb, pivots[:1])
     return src.select(
-        "vec_id", index_nr_to_string(F.col("idx0")).alias("idx0_str")
+        "vec_id", index_nr_to_string("idx0").alias("idx0_str")
     )
 
 

@@ -1,8 +1,10 @@
 from __future__ import annotations
 
+import os
 import re
 
 import pytest
+from pyspark.sql import DataFrameWriter
 from pyspark.sql import functions as F
 
 from javascript_vector_database_spark import registry
@@ -11,6 +13,7 @@ from javascript_vector_database_spark.operators import pq as pqm
 from javascript_vector_database_spark.pivots import make_pivots
 from javascript_vector_database_spark.tables import load_table
 from tests.oracle_harness import compare
+from tests.spark_jobs import executed_plans, jobs_run
 
 
 def test_knn_batch_oracle(spark, sf_oracle):
@@ -306,10 +309,11 @@ def test_exact_knn_wrong_dimension_gives_null_distances(spark, sf_smoke):
 
 
 def test_probe_build_round_trip_budget(spark, stored_index, monkeypatch):
-    """Building a probe is one parsed statement, not a py4j round trip
-    per Column, literal and operator (236 / 621 / 1,184 gateway
-    commands on the 384-dim search benchmark before), and the temporary
-    views that bind the table handles are gone once the answer is in.
+    """Building a probe, or the stored index's rows, is one parsed
+    statement, not a py4j round trip per Column, literal and operator
+    (236 / 621 / 1,184 gateway commands on the 384-dim search benchmark
+    before), and the temporary views that bind the table handles are
+    gone once the answer is in.
     The stored-code probes build their coarse score through the Column
     API, so they get a wider budget: under half of the 1,003 / 636
     commands they cost with hand-written tails on the 64-dim corpus."""
@@ -327,6 +331,7 @@ def test_probe_build_round_trip_budget(spark, stored_index, monkeypatch):
     lo, hi = quant.sq8_params(emb)
     sq8_codes = quant.quantize_table(emb, lo, hi)
     bq_words = quant.bq_table(emb, len(qv))
+    index_rows = emb.count() * len(pivots)
     builds = {
         "exact_knn": (40, lambda: knn.exact_knn(emb, qv)),
         "ann_index_range_stored": (40, lambda: knn.ann_index_range_stored(
@@ -342,6 +347,12 @@ def test_probe_build_round_trip_budget(spark, stored_index, monkeypatch):
             quant.sq8_search_precomputed(sq8_codes, emb, qv, lo, hi))),
         "bq_search_precomputed": (300, lambda: (
             quant.bq_search_precomputed(bq_words, emb, qv))),
+        # the stored index's rows: 912 commands here when every pivot's
+        # key was a chained Column fold
+        "_pivot_index_rows": (20, lambda: knn._pivot_index_rows(
+            emb, pivots, "vec_id", "embedding")),
+        "_pivot_index_rows(compat)": (20, lambda: knn._pivot_index_rows(
+            emb, pivots, "vec_id", "embedding", compat_strings=True)),
     }
     real = ClientServerConnection.send_command
     sent = []
@@ -361,12 +372,84 @@ def test_probe_build_round_trip_budget(spark, stored_index, monkeypatch):
         df = build()
         monkeypatch.setattr(ClientServerConnection, "send_command", real)
         assert 0 < len(sent) <= limit, (name, len(sent))
-        assert len(df.collect()) == 10
+        rows = index_rows if name.startswith("_pivot") else 10
+        assert len(df.collect()) == rows
         left = [
             t.name for t in spark.catalog.listTables()
             if t.name.startswith("_pyspark_")
         ]
         assert left == [], (name, left)
+
+
+def test_pivot_index_write_exchanges_on_pivot(spark, stored_index, tmp_path):
+    """The index write exchanges its rows on ``pivot``, the pivot number
+    being the partition id, with no range exchange: a range exchange
+    samples its keys in a job of its own, so every pivot fold ran twice.
+    The base write runs beside it, under the caller's job group."""
+    emb, _qv, pivots, _base = stored_index
+    base = str(tmp_path / "layout")
+    _, jobs = jobs_run(
+        spark, lambda: knn.write_pivot_index_tables(emb, pivots, base))
+    plans = executed_plans(spark, [j for j, _ in jobs])
+    index = [p for p in plans if os.path.join(base, "index") in p]
+    assert len(index) == 1, plans
+    exchange = re.search(
+        r"shufflepartitionidpassthrough\(direct_shuffle_partition_id"
+        r"\(pivot#\d+\), (\d+)\)", index[0])
+    assert exchange and int(exchange[1]) == len(pivots), index[0]
+    assert "rangepartitioning" not in index[0].lower(), index[0]
+    assert any(os.path.join(base, "base") in p for p in plans), plans
+
+
+@pytest.mark.parametrize("failing", ["base", "index"])
+def test_pivot_index_write_error_reaches_caller(
+    spark, stored_index, tmp_path, monkeypatch, failing
+):
+    """The base table is written from a background thread while the
+    index is built; a failure of either write is raised to the caller."""
+    emb, _qv, pivots, _base = stored_index
+    real = DataFrameWriter.parquet
+
+    def parquet(self, path, *args, **kwargs):
+        if os.path.basename(path) == failing:
+            raise OSError(f"{failing} write failed")
+        return real(self, path, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", parquet)
+    with pytest.raises(OSError, match=f"{failing} write failed"):
+        knn.write_pivot_index_tables(emb, pivots, str(tmp_path / "err"))
+
+
+def test_pivot_index_files_cut_by_record_count(spark, stored_index, tmp_path):
+    """Each file holds one pivot's rows, at most ``ceil(n / n_files)`` of
+    them, sorted by key, and a pivot's files cover disjoint key ranges;
+    compaction writes the same layout."""
+    import pyarrow.parquet as pq
+
+    emb, _qv, pivots, _base = stored_index
+    n, n_files = emb.count(), 4
+    per_file = -(-n // n_files)
+    base = str(tmp_path / "cut")
+    index = os.path.join(base, "index")
+    knn.write_pivot_index_tables(emb, pivots, base, n_files=n_files)
+    for step in ("write", "compact"):
+        ranges = {}
+        for f in sorted(os.listdir(index)):
+            if not f.endswith(".parquet"):
+                continue
+            t = pq.read_table(os.path.join(index, f)).to_pydict()
+            assert len(set(t["pivot"])) == 1, (step, f)
+            keys = t["key"]
+            assert len(keys) <= per_file and keys == sorted(keys), (step, f)
+            ranges.setdefault(t["pivot"][0], []).append(
+                (keys[0], keys[-1], len(keys)))
+        assert sorted(ranges) == list(range(len(pivots))), step
+        for p, rs in ranges.items():
+            rs.sort()
+            assert len(rs) == -(-n // per_file), (step, p, len(rs))
+            assert sum(r[2] for r in rs) == n, (step, p)
+            assert all(a[1] <= b[0] for a, b in zip(rs, rs[1:])), (step, p)
+        knn.compact_pivot_index_tables(spark, base, len(pivots), n_files)
 
 
 @pytest.mark.parametrize(

@@ -12,6 +12,7 @@ from javascript_vector_database_spark.pivots import make_pivots
 from javascript_vector_database_spark.sources.json_dump import export_json, import_json
 from javascript_vector_database_spark.streaming.pipeline import Pipeline, anti_join_new
 from javascript_vector_database_spark.streaming.state import RxState
+from tests.spark_jobs import jobs_run
 
 
 @pytest.fixture()
@@ -334,6 +335,49 @@ def test_flat_legacy_table_stays_flat(spark, tmp_path):
     got = {r["id"]: r["v"] for r in t.docs().collect()}
     assert got == {1: "a", 2: "B", 3: "c"}
     assert "__pkb" not in t.df().columns
+
+
+def _footer_reads(jobs) -> int:
+    """The mergeSchema footer reads among ``jobs_run``'s jobs."""
+    return sum(1 for _, stages in jobs if stages[0].startswith("parquet at "))
+
+
+@pytest.fixture()
+def bucketed(spark, tmp_path):
+    """A stored 16-bucket table of 32 rows (``_table_meta.json`` on disk)."""
+    path = str(tmp_path / "b16")
+    ParquetTable(spark, path, "id").bulk_insert(
+        spark.createDataFrame(
+            [(i, f"v{i}") for i in range(32)], "id long, v string"
+        ),
+        lwt=1.0,
+    )
+    return path
+
+
+def test_get_by_ids_reads_no_footer_before_lookup(spark, bucketed):
+    """The layout of a table with a meta file is answered from that file:
+    the only footer read is the table read the lookup scans (a second,
+    for ``_bucketed``, ran before every lookup)."""
+    t = ParquetTable(spark, bucketed, "id")
+    got, jobs = jobs_run(spark, lambda: t.get_by_ids([3, 7, 99]))
+    assert _footer_reads(jobs) == 1, jobs
+    assert sorted(r["id"] for r in got.collect()) == [3, 7]
+
+
+def test_bulk_insert_runs_nine_jobs(spark, bucketed):
+    """An insert into an existing 16-bucket table runs 9 jobs (12 with a
+    footer read for the layout and an anti-join of the winners against
+    the stored rows): the layout comes from the meta file, and the
+    insert rule keeps only keys with no stored row, so no winner can
+    replace one."""
+    t = ParquetTable(spark, bucketed, "id")
+    delta = spark.createDataFrame([(3, "dup"), (40, "new")], "id long, v string")
+    res, jobs = jobs_run(spark, lambda: t.bulk_insert(delta, lwt=2.0))
+    assert res == {"success": 1, "conflict": 1}
+    assert len(jobs) == 9, jobs
+    got = {r["id"]: r["v"] for r in t.docs().collect()}
+    assert len(got) == 33 and got[3] == "v3" and got[40] == "new"
 
 
 def test_rx_state_fold(spark, tmp_path):

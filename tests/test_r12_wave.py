@@ -261,8 +261,9 @@ def test_pivot_index_rowgroups_prunable_on_band(spark, tmp_path):
         box = {"pivot": (i, i), "key": (lo, hi)}
         fracs.append(layout.prunable_fraction(stats, box))
         # the key band alone, over the row groups that hold pivot i:
-        # the range layout gave this pivot its own files, and the other
-        # pivots' row groups must not carry the floor
+        # the pivot exchange and the record-count cut give this pivot
+        # its own files, and the other pivots' row groups must not carry
+        # the floor
         own = [s for s in stats if s["pivot"][0] <= i <= s["pivot"][1]]
         assert len(own) >= 8, (i, len(own))
         fracs.append(layout.prunable_fraction(own, {"key": (lo, hi)}))
